@@ -39,7 +39,6 @@ __all__ = [
     "merge_histograms",
     "histogram_quantiles",
     "hist_bin_sql",
-    "quantile_threshold_sql",
 ]
 
 DEFAULT_WIDTH_CENTS = 500  # $5 bins
@@ -88,11 +87,6 @@ def merge_histograms(hist: DataFrame, group_cols: list[str]) -> DataFrame:
     ``sum(n)`` by (remaining groups, bin). Associative — day histograms
     merge to months, shard histograms to the corpus, in any order."""
     return hist.groupBy(*group_cols, "bin").agg(F.sum("n").alias("n"))
-
-
-def quantile_threshold_sql(total_expr: str, q_pct: int) -> str:
-    """``ceil(total * q/100)`` in pure integer arithmetic (portable)."""
-    return f"(({total_expr} * {q_pct} + 99) // 100)"
 
 
 def histogram_quantiles(

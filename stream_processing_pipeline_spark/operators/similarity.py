@@ -818,41 +818,6 @@ def with_pq_codes(
     )
 
 
-def pq_codes_sql(
-    codebooks: list[list[tuple[int, list[int]]]], vec_expr: str = "embedding"
-) -> list[str]:
-    """DuckDB twins of :func:`with_pq_codes`'s per-subspace argmin (plus the
-    total distortion as the last entry) — identical integer arithmetic and
-    (dist, idx) tie-break via sorted-struct-first."""
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0][1])
-    q = (
-        f"list_transform(CAST({vec_expr} AS DOUBLE[]), "
-        "x -> CAST(round(x * 1000000.0) AS BIGINT))"
-    )
-    code_exprs = []
-    dist_exprs = []
-    for j, cb in enumerate(codebooks):
-        lo = j * d_sub + 1
-        structs = []
-        for cid, cw in cb:
-            lit = "[" + ", ".join(str(int(x)) for x in cw) + "]::BIGINT[]"
-            d2 = (
-                f"list_sum(list_transform(range(1, {d_sub + 1}), "
-                f"i -> (__q[{lo} - 1 + i] - ({lit})[i]) * (__q[{lo} - 1 + i] - ({lit})[i])))"
-            )
-            structs.append(f"struct_pack(d := {d2}, i := {int(cid)})")
-        arr = "[" + ", ".join(structs) + "]"
-        code_exprs.append(
-            f"(SELECT CAST(list_sort({arr})[1].i AS INTEGER) FROM (SELECT {q} AS __q))"
-        )
-        dist_exprs.append(
-            f"(SELECT CAST(list_sort({arr})[1].d AS BIGINT) FROM (SELECT {q} AS __q))"
-        )
-    total = "(" + " + ".join(dist_exprs) + ")"
-    return code_exprs + [total]
-
-
 def topk_pq_adc(
     corpus: DataFrame,
     queries: DataFrame,

@@ -3077,8 +3077,8 @@ def pagerank_trade_network(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered. The hub structure shows immediately: supplier nodes
     (~500 edges each) dominate the head over ~30-edge customers.
 
-    Past the broadcast threshold (r13 probe,
-    ``tools/r13_pagerank_partition_probe.py``, SCALING.md): once |nodes|
+    Past the broadcast threshold (SCALING.md, "PageRank past the
+    broadcast threshold — round 13"): once |nodes|
     outgrows the auto-broadcast limit the per-iteration join re-shuffles
     the edge list every round; pre-hash-partitioning the persisted edge
     table by ``u`` (``ed.repartition(P, "u")`` before the persist, or a

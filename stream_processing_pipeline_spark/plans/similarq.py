@@ -5,6 +5,11 @@ path. Both oracle-verified: scores are bit-identical across engines (vector
 kernels fold in DuckDB's order) and the LSH construction is deterministic
 (hyperplanes seeded from the portable hash, inlined as literals on both
 sides), so even the *approximate* result is reproducible and checkable.
+
+The IVFPQ rerank builders (``sim_topk_ivfpq_rerank``,
+``sim_recall_ivfpq_rerank_at_k``) persist frames their lazy results still
+read; callers must release them with ``spark.catalog.clearCache()`` after
+the terminal action (the caching contract in :mod:`.dedupq`).
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""In-memory / rate sources for tests and local development.
+"""In-memory sources for tests and local development.
 
 ``chunked_stream`` writes a batch DataFrame out as N parquet chunks and
 re-reads the directory as a streaming source with one-file micro-batches —
@@ -15,15 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .files import read_stream
 
-__all__ = ["rate_source", "chunked_stream"]
-
-
-def rate_source(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )
+__all__ = ["chunked_stream"]
 
 
 def chunked_stream(

@@ -29,10 +29,10 @@ __all__ = ["StreamQuerySpec", "Topology", "run_available_now", "ROCKSDB_PROVIDER
 # (high-cardinality keys x long watermarks) the default HDFS-backed in-memory
 # provider OOMs executors; RocksDB bounds memory and survives far larger
 # per-partition state. Changelog checkpointing keeps recovery incremental.
-# Measured (r11+r12, SCALING.md "Streaming state at high key cardinality",
-# tools/r11_state_scale_probe.py): the HDFS provider's heap bytes grow
-# linearly with state rows (~270 B/row at 300k; at 3M rows it holds
-# 1.54 GB on-heap vs RocksDB's 72 MB — a measured 21x divergence), and
+# Measured (r11+r12, SCALING.md "Streaming state at high key cardinality"):
+# the HDFS provider's heap bytes grow linearly with state rows (~270 B/row
+# at 300k; at 3M rows it holds 1.54 GB on-heap vs RocksDB's 72 MB — a
+# measured 21x divergence), and
 # at 3M rows the trades are no longer flat: hdfs is ~25% faster on
 # steady-state wall WHILE state fits the heap, RocksDB bounds memory at
 # a throughput cost, and changelog mode's recovery pays changelog replay

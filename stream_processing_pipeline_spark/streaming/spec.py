@@ -5,7 +5,8 @@ operators -> managed queries". A pipeline is a plain dict (checked in as
 JSON): named sources, a list of queries (each an op chain over one source),
 sinks by name, one watermark. :func:`compile_topology` turns it into the
 same :class:`~.runner.Topology` the code-first builder
-(:class:`~.topology.EventsTopologyBuilder`) assembles, so operational
+(:class:`~.topology.EventsTopologyBuilder`) assembles — both hand their
+named queries to :func:`~.topology.assemble_topology`, so operational
 tooling (checkpoint layout, state-store selection, fan-out mode, alerting)
 is shared; :func:`compile_query` compiles a single query in BATCH mode over
 static frames — the stream/batch equivalence story holds for spec-built
@@ -28,7 +29,8 @@ is value-identical to its code-built twin by construction, pinned by
 The reference six-query topology ships as a spec at
 ``stream_processing_pipeline_spark/specs/reference_events.json``
 (mirroring ``/root/reference/src/spark_streaming.py:340-360`` behavior);
-the round-trip test pins spec-built == code-built sink contents.
+the tests pin each spec-built query's optimized plan, batch and streaming,
+to its code-built twin.
 """
 
 from __future__ import annotations
@@ -36,6 +38,8 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -44,8 +48,9 @@ from ..operators.filters import discrepancy_filter, not_null
 from ..operators.joins import dim_join
 from ..operators.project import parse_json_column, prune
 from .alerts import Alerter
-from .runner import StreamQuerySpec, Topology
-from .sinks import FanOutSink, ForeachBatchSink, with_alert
+from .runner import Topology
+from .sinks import ForeachBatchSink
+from .topology import NamedQuery, assemble_topology
 
 __all__ = [
     "load_spec",
@@ -331,59 +336,26 @@ def compile_topology(
     tests); queries with ``"alert": true`` get their sink wrapped with a
     count-predicate alert. ``fanout_stateless`` (spec key of the same
     name, argument overrides) merges all stateless queries into ONE
-    streaming query via :class:`FanOutSink` — same source-read economics
-    as the code builder's fan-out mode."""
+    streaming query via :func:`~.topology.assemble_topology` — the same
+    assembly the code builder uses."""
     _validate(spec)
-    watermark = spec.get("watermark")
     if fanout_stateless is None:
         fanout_stateless = bool(spec.get("fanout_stateless", False))
-
-    def _sink_for(q: dict) -> ForeachBatchSink:
-        sink = sink_factory(q.get("sink", q["name"]))
-        if q.get("alert") and alerter is not None:
-            sink = with_alert(sink, alerter, q["name"])
-        return sink
-
-    stateless = [q for q in spec["queries"] if not _is_stateful(q)]
-    stateful = [q for q in spec["queries"] if _is_stateful(q)]
-
-    if fanout_stateless and stateless:
-        by_source: dict[str, list[dict]] = {}
-        for q in stateless:
-            by_source.setdefault(q["source"], []).append(q)
-        for src_name, qs in by_source.items():
-            routes = []
-            for q in qs:
-                ops = q.get("ops", [])
-                ctx = {"sources": sources, "watermark": None}
-                routes.append(
-                    (
-                        q["name"],
-                        # bind loop vars; per-batch frames are bounded, so
-                        # the stateless op chain runs as plain batch ops
-                        lambda bdf, _ops=ops, _ctx=ctx: _apply_ops(
-                            bdf, _ops, _ctx
-                        ),
-                        _sink_for(q),
-                    )
-                )
-            topology.add(
-                StreamQuerySpec(
-                    f"stateless_fanout_{src_name}"
-                    if len(by_source) > 1
-                    else "stateless_fanout",
-                    sources[src_name],
-                    FanOutSink(routes=routes),
-                )
-            )
-    else:
-        for q in stateless:
-            ctx = {"sources": sources, "watermark": None}
-            df = _apply_ops(sources[q["source"]], q.get("ops", []), ctx)
-            topology.add(StreamQuerySpec(q["name"], df, _sink_for(q)))
-
-    for q in stateful:
+    queries = []
+    for q in spec["queries"]:
+        stateful = _is_stateful(q)
+        watermark = spec.get("watermark") if stateful else None
         ctx = {"sources": sources, "watermark": watermark}
-        df = _apply_ops(sources[q["source"]], q.get("ops", []), ctx)
-        topology.add(StreamQuerySpec(q["name"], df, _sink_for(q)))
-    return topology
+        queries.append(
+            NamedQuery(
+                q["name"],
+                q["source"],
+                partial(_apply_ops, ops=q.get("ops", []), ctx=ctx),
+                stateful=stateful,
+                alert=bool(q.get("alert")),
+                sink=q.get("sink"),
+            )
+        )
+    return assemble_topology(
+        topology, queries, sources, sink_factory, alerter, fanout_stateless
+    )

@@ -17,17 +17,75 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame
 
-from ..plans import transforms
 from .alerts import Alerter
 from .runner import StreamQuerySpec, Topology
 from .sinks import FanOutSink, ForeachBatchSink, with_alert
 
-__all__ = ["EventsTopologyBuilder"]
+__all__ = ["EventsTopologyBuilder", "NamedQuery", "assemble_topology"]
 
 WATERMARK = "60 minutes"  # reference parity (spark_streaming.py:245,274,315)
+
+
+@dataclass(frozen=True)
+class NamedQuery:
+    """One query before assembly: ``build`` maps the frame bound to
+    ``source`` to the query's output frame. ``stateful`` queries (watermarked
+    state) always get their own streaming query; ``alert`` wraps the sink
+    with a count-predicate alert whose subject is ``name``."""
+
+    name: str
+    source: str
+    build: Callable[[DataFrame], DataFrame]
+    stateful: bool = False
+    alert: bool = False
+    sink: str | None = None  # sink name; defaults to ``name``
+
+
+def assemble_topology(
+    topology: Topology,
+    queries: list[NamedQuery],
+    sources: dict[str, DataFrame],
+    sink_factory: Callable[[str], ForeachBatchSink],
+    alerter: Alerter | None = None,
+    fanout_stateless: bool = False,
+) -> Topology:
+    """Add ``queries`` to ``topology``: the stateless ones first, then the
+    stateful ones, each group in list order.
+
+    ``fanout_stateless=True`` merges the stateless queries over one source
+    into ONE streaming query via :class:`FanOutSink` — one source read and
+    one checkpoint instead of one per query. Each route applies its
+    ``build`` to the micro-batch, which is bounded, so the stateless chain
+    runs as plain batch ops. Stateful queries keep their own queries either
+    way: their state belongs to a per-query checkpoint."""
+
+    def sink_for(q: NamedQuery) -> ForeachBatchSink:
+        sink = sink_factory(q.sink or q.name)
+        if q.alert and alerter is not None:
+            sink = with_alert(sink, alerter, q.name)
+        return sink
+
+    stateless = [q for q in queries if not q.stateful]
+    stateful = [q for q in queries if q.stateful]
+    if fanout_stateless:
+        by_source: dict[str, list[NamedQuery]] = {}
+        for q in stateless:
+            by_source.setdefault(q.source, []).append(q)
+        for src, qs in by_source.items():
+            fan = FanOutSink(routes=[(q.name, q.build, sink_for(q)) for q in qs])
+            name = "stateless_fanout"
+            if len(by_source) > 1:
+                name += f"_{src}"
+            topology.add(StreamQuerySpec(name, sources[src], fan))
+        stateless = []
+    for q in stateless + stateful:
+        df = q.build(sources[q.source])
+        topology.add(StreamQuerySpec(q.name, df, sink_for(q)))
+    return topology
 
 
 @dataclass
@@ -42,7 +100,6 @@ class EventsTopologyBuilder:
     customer_dim: DataFrame
     sink_factory: Callable[[str], ForeachBatchSink]
     alerter: Alerter | None = None
-    watermark: str = WATERMARK
     # Attach in-plan observed ingest metrics (rows, null keys, exact value
     # cents) to the shared source lineage; every query then reports them per
     # batch via StreamingQueryProgress (collect with observe.MetricsRecorder).
@@ -55,66 +112,50 @@ class EventsTopologyBuilder:
         return self.sinks[name]
 
     def build(self, topology: Topology, fanout_stateless: bool = False) -> Topology:
-        """Assemble the topology. ``fanout_stateless=True`` merges the three
-        stateless queries (raw persistence + the two anomaly detectors) into
-        ONE streaming query via :class:`FanOutSink` — one source read and
-        one checkpoint instead of three (4 queries total instead of 6). The
-        three watermarked aggregations keep their own queries either way:
-        their state belongs to a per-query checkpoint. Sink contents are
-        identical in both modes (pinned by ``test_fanout_topology_equivalence``)."""
+        """Assemble the topology: 6 queries, or 4 with ``fanout_stateless``
+        (raw persistence and the two anomaly detectors share one query; see
+        :func:`assemble_topology`). Sink contents are identical in both modes
+        (pinned by ``test_fanout_topology_equivalence``)."""
+        # Imported here: importing ``plans`` loads the whole query registry,
+        # which ``streaming`` (and the spec compiler) do not otherwise need.
+        from ..plans import transforms
+
         ev = self.events_stream
         if self.observe_metrics:
             from .observe import with_observed_metrics
 
             ev = with_observed_metrics(ev, name="ingest")
-        wm = self.watermark
-
-        q2_sink = self._sink("abnormal_minutes")
-        if self.alerter:
-            q2_sink = with_alert(q2_sink, self.alerter, "abnormal_minutes")
-        q3_sink = self._sink("value_discrepancy")
-        if self.alerter:
-            q3_sink = with_alert(q3_sink, self.alerter, "value_discrepancy")
-
-        if fanout_stateless:
-            fan = FanOutSink(
-                routes=[
-                    ("typed_events", transforms.typed_events, self._sink("typed_events")),
-                    ("abnormal_minutes", transforms.abnormal_minutes, q2_sink),
-                    ("value_discrepancy", transforms.value_discrepancy, q3_sink),
-                ]
-            )
-            topology.add(StreamQuerySpec("stateless_fanout", ev, fan))
-        else:
-            q1 = transforms.typed_events(ev)
-            topology.add(
-                StreamQuerySpec("typed_events", q1, self._sink("typed_events"))
-            )
-            topology.add(
-                StreamQuerySpec(
-                    "abnormal_minutes", transforms.abnormal_minutes(ev), q2_sink
-                )
-            )
-            topology.add(
-                StreamQuerySpec(
-                    "value_discrepancy", transforms.value_discrepancy(ev), q3_sink
-                )
-            )
-
-        q4 = transforms.avg_value_per_hour(ev, watermark=wm)
-        topology.add(
-            StreamQuerySpec("avg_value_per_hour", q4, self._sink("avg_value_per_hour"))
+        queries = [
+            NamedQuery("typed_events", "events", transforms.typed_events),
+            NamedQuery(
+                "abnormal_minutes", "events", transforms.abnormal_minutes, alert=True
+            ),
+            NamedQuery(
+                "value_discrepancy", "events", transforms.value_discrepancy, alert=True
+            ),
+            NamedQuery(
+                "avg_value_per_hour",
+                "events",
+                partial(transforms.avg_value_per_hour, watermark=WATERMARK),
+                stateful=True,
+            ),
+            NamedQuery(
+                "event_counts_per_hour",
+                "events",
+                partial(transforms.event_counts_per_hour, watermark=WATERMARK),
+                stateful=True,
+            ),
+            NamedQuery(
+                "counts_by_segment",
+                "events",
+                partial(
+                    transforms.counts_by_segment,
+                    customer=self.customer_dim,
+                    watermark=WATERMARK,
+                ),
+                stateful=True,
+            ),
+        ]
+        return assemble_topology(
+            topology, queries, {"events": ev}, self._sink, self.alerter, fanout_stateless
         )
-
-        q5 = transforms.event_counts_per_hour(ev, watermark=wm)
-        topology.add(
-            StreamQuerySpec(
-                "event_counts_per_hour", q5, self._sink("event_counts_per_hour")
-            )
-        )
-
-        q6 = transforms.counts_by_segment(ev, self.customer_dim, watermark=wm)
-        topology.add(
-            StreamQuerySpec("counts_by_segment", q6, self._sink("counts_by_segment"))
-        )
-        return topology

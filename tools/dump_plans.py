@@ -1,16 +1,29 @@
-"""Regenerate PLANS.md: formatted physical plans for headline queries.
+"""Dump formatted physical plans of registered queries.
 
-Usage: python tools/dump_plans.py  (writes PLANS.md at the repo root)
+Two modes:
+
+- no arguments: regenerate PLANS.md at the repo root — the plan tree and
+  scan details of each headline query below;
+- ``--queries``: write the full ``explain('formatted')`` of each named query
+  to ``<out>/<query>_<suffix>.txt``, for before/after plan diffs of a change
+  (run once with ``--suffix before`` on the parent commit's checkout, once
+  with ``--suffix after`` on the change).
+
+Usage:
+    python tools/dump_plans.py
+    python tools/dump_plans.py --queries name1,name2 [--out plans/rN] [--suffix after]
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from stream_processing_pipeline_spark.plans import REGISTRY  # noqa: E402
 from stream_processing_pipeline_spark.session import build_session  # noqa: E402
@@ -131,9 +144,36 @@ HEADLINERS = {
 }
 
 
-def main() -> None:
-    spark = build_session(app_name="dump_plans", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("FATAL")
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def dump_queries(spark, names: list[str], outdir: str, suffix: str, sf_dir: str = SF) -> list[str]:
+    """Per-query mode: one ``<outdir>/<query>_<suffix>.txt`` per name in this
+    tree's registry (others are skipped with a note); returns the paths."""
+    os.makedirs(outdir, exist_ok=True)
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    paths = []
+    for name in names:
+        if name not in REGISTRY:
+            print(f"SKIP {name}: not in this tree's registry", file=sys.stderr)
+            continue
+        path = os.path.join(outdir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(
+                f"-- {name} ({suffix}) -- explain('formatted') at {os.path.basename(sf_dir)},"
+                f" engine session, {partitions} shuffle partitions (AQE on; initial plan,"
+                " isFinalPlan=false)\n\n"
+            )
+            f.write(_explain(REGISTRY[name].fn(spark, sf_dir)))
+        paths.append(path)
+    return paths
+
+
+def write_plans_md(spark) -> None:
     out = [
         "# PLANS — physical plans of headline queries (auto-generated)",
         "",
@@ -145,11 +185,7 @@ def main() -> None:
         "",
     ]
     for name, why in HEADLINERS.items():
-        df = REGISTRY[name].fn(spark, SF)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        lines = buf.getvalue().splitlines()
+        lines = _explain(REGISTRY[name].fn(spark, SF)).splitlines()
         tree_end = next(
             (i for i, l in enumerate(lines) if l.strip() == "" and i > 3), len(lines)
         )
@@ -159,11 +195,28 @@ def main() -> None:
         )
         out += [f"## {name}", "", why, "", "```", tree, "", "-- scan details --",
                 scans, "```", ""]
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "PLANS.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md regenerated")
-    spark.stop()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--queries", help="comma-separated query names: per-query mode")
+    ap.add_argument("--out", default=os.path.join(ROOT, "plans"),
+                    help="per-query output folder (default: plans/)")
+    ap.add_argument("--suffix", default="after", help="file-name suffix, e.g. before/after")
+    args = ap.parse_args()
+    spark = build_session(app_name="dump_plans", shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("FATAL")
+    try:
+        if args.queries:
+            for path in dump_queries(spark, args.queries.split(","), args.out, args.suffix):
+                print(f"wrote {path}")
+        else:
+            write_plans_md(spark)
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

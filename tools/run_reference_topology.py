@@ -38,6 +38,7 @@ from stream_processing_pipeline_spark.operators.filters import (
 from stream_processing_pipeline_spark.operators.joins import dim_join
 from stream_processing_pipeline_spark.operators.project import derive_duration_minutes
 from stream_processing_pipeline_spark.session import build_session
+from stream_processing_pipeline_spark.sources.files import read_static_csv
 from stream_processing_pipeline_spark.sources.kafka import read_kafka_stream
 from stream_processing_pipeline_spark.streaming import (
     EmailAlerter,
@@ -134,9 +135,8 @@ def main(config_path: str) -> None:
     topo.add(StreamQuerySpec("trip_count_per_hour", q5, jdbc("trip_count_per_hour")))
 
     # Q6 hourly trips per borough (:301-337); zone lookup CSV path in config
-    lookup = spark.read.csv(
-        cfg["engine"].get("zone_lookup", "data/taxi_zone_lookup.csv"),
-        header=True, inferSchema=True,
+    lookup = read_static_csv(
+        spark, cfg["engine"].get("zone_lookup", "data/taxi_zone_lookup.csv")
     )
     q6 = windowed_agg(
         dim_join(
