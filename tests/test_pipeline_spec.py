@@ -7,10 +7,11 @@ Pins the three contracts the spec layer makes:
    code-built twin in ``plans/transforms.py`` (the spec cannot drift from
    the parity semantics without this failing);
 3. every spec query has the same optimized plan as its code-built twin,
-   in batch mode and in streaming mode over a file stream. Both topology
-   entry points (``compile_topology`` and ``EventsTopologyBuilder``) hand
-   their queries to the one ``assemble_topology``, so equal per-query
-   plans mean equal topologies, in per-query and fan-out modes alike.
+   in batch mode and in streaming mode over a file stream;
+4. the spec-built TOPOLOGY run over a chunked stream produces sink
+   contents identical to the code-built ``EventsTopologyBuilder`` run —
+   the round-trip the checked-in ``reference_events.json`` is graded on —
+   in both per-query and fan-out modes.
 """
 
 from __future__ import annotations
@@ -21,14 +22,22 @@ import pytest
 
 from stream_processing_pipeline_spark.plans import transforms
 from stream_processing_pipeline_spark.sources.files import read_stream
+from stream_processing_pipeline_spark.sources.memory import chunked_stream
 from stream_processing_pipeline_spark.sources.registry import TableCatalog
 from stream_processing_pipeline_spark.streaming import (
     REFERENCE_EVENTS_SPEC_PATH,
+    LogAlerter,
+    MemoryRowsSink,
+    Topology,
     compile_query,
+    compile_topology,
     expand_macros,
     load_spec,
 )
-from stream_processing_pipeline_spark.streaming.topology import WATERMARK
+from stream_processing_pipeline_spark.streaming.topology import (
+    WATERMARK,
+    EventsTopologyBuilder,
+)
 
 from .conftest import SF_SMALL
 
@@ -153,3 +162,61 @@ def test_spec_batch_equals_code_transforms(spark, tmp_path):
         assert _optimized_plan(got_s) == _optimized_plan(want_s), (
             f"{name}: streaming plan"
         )
+
+
+def _run_topology(spark, tmp_path, tag, build_fn):
+    """Run a topology over a 3-chunk replay; return {sink: sorted rows}."""
+    cat = TableCatalog(spark, SF_SMALL, register_views=False)
+    ev = cat.events.orderBy("ts")
+    stream = chunked_stream(spark, ev, str(tmp_path / f"chunks_{tag}"), 3)
+    sinks: dict[str, MemoryRowsSink] = {}
+
+    def factory(name: str) -> MemoryRowsSink:
+        sinks[name] = MemoryRowsSink()
+        return sinks[name]
+
+    alerter = LogAlerter()
+    topo = Topology(spark, checkpoint_root=str(tmp_path / f"ckpt_{tag}"))
+    n_queries = build_fn(topo, stream, cat.customer, factory, alerter)
+    queries = topo.start_all(available_now=True)
+    assert len(queries) == n_queries
+    topo.await_all(timeout=240)
+    topo.stop_all()
+    assert alerter.sent
+    return {name: sorted(map(tuple, s.rows)) for name, s in sinks.items()}
+
+
+@pytest.mark.parametrize("fanout", [False, True])
+def test_spec_topology_equals_code_topology(spark, tmp_path, fanout):
+    """The checked-in reference_events.json compiled through
+    compile_topology produces sink-for-sink identical contents to the
+    code-built EventsTopologyBuilder over the same chunked replay — in
+    1:1 mode (6 queries) and stateless-fan-out mode (4 queries)."""
+    spec = load_spec(REFERENCE_EVENTS_SPEC_PATH)
+
+    def build_spec(topo, stream, customer, factory, alerter):
+        compile_topology(
+            spec,
+            topo,
+            sources={"events": stream, "customer": customer},
+            sink_factory=factory,
+            alerter=alerter,
+            fanout_stateless=fanout,
+        )
+        return 4 if fanout else 6
+
+    def build_code(topo, stream, customer, factory, alerter):
+        EventsTopologyBuilder(
+            events_stream=stream,
+            customer_dim=customer,
+            sink_factory=factory,
+            alerter=alerter,
+        ).build(topo, fanout_stateless=fanout)
+        return 4 if fanout else 6
+
+    got = _run_topology(spark, tmp_path, f"spec{fanout}", build_spec)
+    want = _run_topology(spark, tmp_path, f"code{fanout}", build_code)
+    assert set(got) == set(want)
+    for name in want:
+        assert got[name] == want[name], f"sink {name}: spec != code"
+        assert len(got[name]) > 0, f"sink {name}: empty"
