@@ -350,17 +350,9 @@ def _bench_streaming_topology(spark, sf_dir: str) -> dict:
         def noop_sink(batch_df, epoch_id):
             batch_df.write.format("noop").mode("overwrite").save()
 
-        # State-partition sizing: ~n_events/n_chunks rows per micro-batch;
-        # target a few thousand rows per stateful task (25k-row batches ->
-        # 8 partitions). With the session's batch-sized 32, per-batch task
-        # scheduling dominates (measured 3x slower at sf0.1).
-        state_parts = max(
-            4,
-            min(spark.sparkContext.defaultParallelism, n_events // (4 * 3000) or 4),
-        )
-        topo = Topology(
-            spark, checkpoint_root=work + "/ckpt", state_partitions=state_parts
-        )
+        # State partitions: the Topology default, each query's share of the
+        # cores (streaming.runner.default_state_partitions).
+        topo = Topology(spark, checkpoint_root=work + "/ckpt")
         EventsTopologyBuilder(
             events_stream=stream,
             customer_dim=cat.customer,
@@ -374,11 +366,7 @@ def _bench_streaming_topology(spark, sf_dir: str) -> dict:
 
         # Fan-out variant: stateless routes share one source read (4 queries
         # instead of 6) — same sink contents, less ingest.
-        topo2 = Topology(
-            spark,
-            checkpoint_root=work + "/ckpt_fanout",
-            state_partitions=state_parts,
-        )
+        topo2 = Topology(spark, checkpoint_root=work + "/ckpt_fanout")
         EventsTopologyBuilder(
             events_stream=stream,
             customer_dim=cat.customer,
@@ -468,17 +456,9 @@ def _bench_streaming_sustained(
         def noop_sink(batch_df, epoch_id):
             batch_df.write.format("noop").mode("overwrite").save()
 
-        state_parts = max(
-            4,
-            min(
-                spark.sparkContext.defaultParallelism,
-                n_events // (n_chunks * 3000) or 4,
-            ),
-        )
         topo = Topology(
             spark,
             checkpoint_root=work + "/ckpt",
-            state_partitions=state_parts,
             state_store=state_store,
             changelog_checkpointing=changelog,
         )

@@ -270,7 +270,9 @@ def stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        query.awaitTermination(240)
+        if not query.awaitTermination(240):
+            query.stop()
+            raise TimeoutError("stream_user_stats still running after 240s")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     result = spark.table(name)

@@ -44,8 +44,10 @@ def build_session(
     """Build (or reuse) a SparkSession with the engine's defaults.
 
     Any ``extra_conf`` entries win over the defaults, so callers can override
-    per-job (e.g. a streaming job pinning ``spark.sql.shuffle.partitions`` to
-    its state-store partitioning).
+    per-job. A streaming ``Topology`` sizes its state partitions itself:
+    ``Topology(state_partitions=N)``, or by default
+    ``streaming.runner.default_state_partitions``, which never exceeds the
+    session's ``spark.sql.shuffle.partitions``.
     """
     cores = default_parallelism()
     builder = (

@@ -14,6 +14,7 @@ behind the stream/batch equivalence tests and operational backfills.
 from __future__ import annotations
 
 import os
+import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -22,7 +23,13 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .sinks import ForeachBatchSink
 
-__all__ = ["StreamQuerySpec", "Topology", "run_available_now", "ROCKSDB_PROVIDER"]
+__all__ = [
+    "StreamQuerySpec",
+    "Topology",
+    "default_state_partitions",
+    "run_available_now",
+    "ROCKSDB_PROVIDER",
+]
 
 # Spark's bundled RocksDB state store: spills streaming-aggregation state to
 # local disk instead of keeping it on the JVM heap. At 100 TB-scale state
@@ -43,6 +50,28 @@ __all__ = ["StreamQuerySpec", "Topology", "run_available_now", "ROCKSDB_PROVIDER
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def default_state_partitions(spark: SparkSession, n_queries: int) -> int:
+    """State partitions for a topology of ``n_queries`` that sets none.
+
+    On a local master the queries run at once on one machine's cores, and
+    every partition costs a task and a state commit on every trigger, so
+    each query gets its share of the cores: ``defaultParallelism //
+    n_queries``, at least 1, never above the session's
+    ``spark.sql.shuffle.partitions``. Elsewhere the session value stands:
+    the executor count at first start is not known (under dynamic
+    allocation there may be none yet), and the value is pinned into each
+    checkpoint for good. Measured on a 4-core host only, with up to 300k
+    state rows and 100k-row micro-batches (SCALING.md "State-partition
+    sizing"); a query whose state is far larger should set its own count.
+    """
+    session = int(spark.conf.get(_SHUFFLE_PARTITIONS))
+    sc = spark.sparkContext
+    if not sc.master.startswith("local"):
+        return session
+    return min(session, max(1, sc.defaultParallelism // max(1, n_queries)))
 
 
 @dataclass
@@ -81,19 +110,11 @@ class Topology:
     # knob so the bench can measure the provider and the checkpoint mode
     # separately (VERDICT r4 #5).
     changelog_checkpointing: bool | None = None
-    # Number of shuffle/state partitions for the topology's stateful
-    # operators (``spark.sql.shuffle.partitions`` at first start, pinned
-    # into each query's checkpoint thereafter). The session default is
-    # sized for batch scans; streaming state tasks should instead be sized
-    # so each micro-batch task carries a few thousand rows — too many
-    # partitions means per-batch task-scheduling overhead dominates
-    # (measured at sf0.1 local[32]: 32 partitions -> 6.6-9.8s for the
-    # fan-out topology, 8 partitions -> 2.8s, 3x throughput), too few
-    # caps parallelism and per-task state grows unbounded. On a large
-    # cluster the same knob moves the other way: ~2-3x total executor
-    # cores. The session value is set at start_all and restored at
-    # stop_all; micro-batches plan against the topology's value while the
-    # topology runs.
+    # Shuffle/state partitions for the stateful operators
+    # (``spark.sql.shuffle.partitions`` at first start, pinned into each
+    # query's checkpoint thereafter). None pins
+    # ``default_state_partitions(spark, len(specs))``. The session value is
+    # restored at stop_all.
     state_partitions: int | None = None
     # Fallback trigger for specs that don't set their own, e.g.
     # {"processingTime": "10 seconds"} or {"availableNow": True}.
@@ -132,38 +153,54 @@ class Topology:
         )
 
     def _apply_state_partitions(self) -> None:
-        if self.state_partitions is None:
-            return
-        self._prev_shuffle_partitions = self.spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        )
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(self.state_partitions)
-        )
+        parts = self.state_partitions
+        if parts is None:
+            parts = default_state_partitions(self.spark, len(self.specs))
+        # Only the first start records the session's value: a second
+        # start_all before stop_all must not save the topology's own.
+        if self._prev_shuffle_partitions is None:
+            self._prev_shuffle_partitions = self.spark.conf.get(_SHUFFLE_PARTITIONS)
+        self.spark.conf.set(_SHUFFLE_PARTITIONS, str(parts))
+
+    def _restore_state_partitions(self) -> None:
+        if self._prev_shuffle_partitions is not None:
+            self.spark.conf.set(_SHUFFLE_PARTITIONS, self._prev_shuffle_partitions)
+            self._prev_shuffle_partitions = None
 
     def start_all(self, available_now: bool = False) -> dict[str, StreamingQuery]:
         self._apply_state_store()
         self._apply_state_partitions()
-        for spec in self.specs:
-            writer = (
-                spec.df.writeStream.outputMode(spec.output_mode)
-                .queryName(spec.name)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(self.checkpoint_root, spec.name),
+        try:
+            for spec in self.specs:
+                writer = (
+                    spec.df.writeStream.outputMode(spec.output_mode)
+                    .queryName(spec.name)
+                    .option(
+                        "checkpointLocation",
+                        os.path.join(self.checkpoint_root, spec.name),
+                    )
+                    .foreachBatch(spec.sink)
                 )
-                .foreachBatch(spec.sink)
-            )
-            if available_now:
-                writer = writer.trigger(availableNow=True)
-            elif spec.trigger or self.default_trigger:
-                writer = writer.trigger(**(spec.trigger or self.default_trigger))
-            self._queries[spec.name] = writer.start()
+                if available_now:
+                    writer = writer.trigger(availableNow=True)
+                elif spec.trigger or self.default_trigger:
+                    writer = writer.trigger(**(spec.trigger or self.default_trigger))
+                self._queries[spec.name] = writer.start()
+        except BaseException:
+            # Queries already started keep the conf they started with (each
+            # runs on a clone of the session); stop_all still stops them.
+            self._restore_state_partitions()
+            raise
         return dict(self._queries)
 
     def await_all(self, timeout: float | None = None) -> None:
+        """Wait for every query to end, ``timeout`` seconds in total."""
+        deadline = None if timeout is None else time.monotonic() + timeout
         for q in self._queries.values():
-            q.awaitTermination(timeout)
+            # 1 ms floor: PySpark rejects a zero timeout, and a query past
+            # the deadline is still asked so its failure surfaces.
+            left = None if deadline is None else max(deadline - time.monotonic(), 0.001)
+            q.awaitTermination(left)
 
     def await_any(self, timeout: float | None = None) -> None:
         self.spark.streams.awaitAnyTermination(timeout)
@@ -172,11 +209,7 @@ class Topology:
         for q in self._queries.values():
             if q.isActive:
                 q.stop()
-        if self._prev_shuffle_partitions is not None:
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions", self._prev_shuffle_partitions
-            )
-            self._prev_shuffle_partitions = None
+        self._restore_state_partitions()
 
 
 def run_available_now(

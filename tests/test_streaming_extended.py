@@ -5,19 +5,31 @@ reference's tumbling-window aggregations."""
 from __future__ import annotations
 
 import datetime as dt
+import json
+import time
+from types import SimpleNamespace
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from stream_processing_pipeline_spark.sources.files import read_stream
-from stream_processing_pipeline_spark.streaming import MemoryRowsSink, run_available_now
+from stream_processing_pipeline_spark.sources.memory import chunked_stream
+from stream_processing_pipeline_spark.sources.registry import TableCatalog
+from stream_processing_pipeline_spark.streaming import (
+    MemoryRowsSink,
+    StreamQuerySpec,
+    Topology,
+    run_available_now,
+)
+from stream_processing_pipeline_spark.streaming.runner import default_state_partitions
+from stream_processing_pipeline_spark.streaming.topology import EventsTopologyBuilder
 
+from .conftest import SF_SMALL
 from .test_streaming import EVENT_SCHEMA
 
 
 def _write_chunks(spark, d, chunks):
-    import time
-
     for i, chunk in enumerate(chunks):
         spark.createDataFrame(chunk, EVENT_SCHEMA).coalesce(1).write.parquet(
             str(d / f"chunk={i}")
@@ -409,6 +421,18 @@ def test_observed_metrics_match_batch_truth(spark, tmp_path):
     assert len({(b.query_name, b.batch_id) for b in recorder.batches}) >= 2
 
 
+def _offset_partitions(checkpoint) -> dict[int, str]:
+    """``spark.sql.shuffle.partitions`` recorded in each offset-log entry of
+    a query checkpoint, by batch id (line 2 of an entry is its metadata)."""
+    return {
+        int(f.name): json.loads(f.read_text().splitlines()[1])["conf"][
+            "spark.sql.shuffle.partitions"
+        ]
+        for f in (checkpoint / "offsets").iterdir()
+        if f.name.isdigit()
+    }
+
+
 def test_topology_state_partitions_knob(spark, tmp_path):
     """Topology(state_partitions=N) must pin spark.sql.shuffle.partitions to
     N while the topology runs (the stateful operators' state/task count —
@@ -450,6 +474,148 @@ def test_topology_state_partitions_knob(spark, tmp_path):
     topo.stop_all()
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     assert {n for r in sink.rows for n in [r.n]} == {2, 1}
+    batches = _offset_partitions(tmp_path / "ckpt_parts" / "parts_counts")
+    assert set(batches.values()) == {"3"}
+
+
+def test_topology_default_state_partitions(spark, tmp_path):
+    """With no ``state_partitions`` each of the six queries gets its share of
+    the cores, ``max(1, defaultParallelism // 6)`` — 1 on the local[4] test
+    session — pinned in its offset log; the session's own value is back
+    after stop_all."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    cat = TableCatalog(spark, SF_SMALL, register_views=False)
+    stream = chunked_stream(
+        spark, cat.events.orderBy("ts"), str(tmp_path / "chunks"), n_chunks=1
+    )
+    topo = Topology(spark, checkpoint_root=str(tmp_path / "ckpt"))
+    EventsTopologyBuilder(
+        events_stream=stream,
+        customer_dim=cat.customer,
+        sink_factory=lambda name: MemoryRowsSink(),
+    ).build(topo)
+    queries = topo.start_all(available_now=True)
+    topo.await_all(timeout=240)
+    topo.stop_all()
+    assert len(queries) == 6
+    for name in queries:
+        assert _offset_partitions(tmp_path / "ckpt" / name)[0] == "1", name
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_default_state_partitions_rule():
+    """The share of the cores is capped by the session's own value, and a
+    non-local master keeps the session value (its executor count at first
+    start is unknown)."""
+
+    def session(master, cores, parts):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: parts),
+            sparkContext=SimpleNamespace(master=master, defaultParallelism=cores),
+        )
+
+    assert default_state_partitions(session("local[32]", 32, "32"), 6) == 5
+    assert default_state_partitions(session("local[32]", 32, "2"), 6) == 2
+    assert default_state_partitions(session("local[4]", 4, "4"), 6) == 1
+    assert default_state_partitions(session("local[4]", 4, "4"), 0) == 4
+    assert default_state_partitions(session("yarn", 2, "200"), 6) == 200
+    assert default_state_partitions(session("spark://h:7077", 64, "9"), 6) == 9
+
+
+def test_topology_restart_keeps_checkpointed_state_partitions(spark, tmp_path):
+    """A windowed count started with ``state_partitions=3`` and restarted
+    from its checkpoint under a default Topology (which would pick 4 for
+    one query on local[4]) keeps the 3 partitions its offset log pinned,
+    and emits the same windows as a run that was never interrupted."""
+    chunks = [[_row(1, 0), _row(2, 10), _row(3, 70)], [_row(4, 200)]]
+    stream = _write_chunks(spark, tmp_path / "in", chunks)
+
+    def counts():
+        return (
+            stream.withColumn("ts", F.col("ts").cast("timestamp"))
+            .withWatermark("ts", "60 minutes")
+            .groupBy(F.window("ts", "60 minutes").alias("w"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.col("w.start").alias("start"), "n")
+        )
+
+    def run(checkpoint_root, sink, **kw):
+        topo = Topology(
+            spark,
+            checkpoint_root=str(checkpoint_root),
+            default_trigger={"availableNow": True},
+            **kw,
+        )
+        topo.add(StreamQuerySpec("counts", counts(), sink))
+        topo.start_all()
+        topo.await_all(timeout=120)
+        topo.stop_all()
+
+    restarted = MemoryRowsSink()
+    run(tmp_path / "ckpt", restarted, state_partitions=3)
+    first = _offset_partitions(tmp_path / "ckpt" / "counts")
+    spark.createDataFrame([_row(5, 330)], EVENT_SCHEMA).coalesce(1).write.parquet(
+        str(tmp_path / "in" / "chunk=2")
+    )
+    run(tmp_path / "ckpt", restarted)
+    whole = MemoryRowsSink()
+    run(tmp_path / "ckpt_whole", whole)
+
+    batches = _offset_partitions(tmp_path / "ckpt" / "counts")
+    assert max(batches) > max(first)  # the restart ran batches of its own
+    assert set(batches.values()) == {"3"}
+    emitted = sorted((r.start, r.n) for r in restarted.rows)
+    assert emitted == sorted((r.start, r.n) for r in whole.rows)
+    assert len(emitted) == 3
+
+
+def test_topology_start_all_restores_session_partitions(spark, tmp_path):
+    """The session's shuffle-partition count survives a start_all that
+    fails partway and a second start_all before stop_all."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert prev != "2"
+    topo = Topology(spark, checkpoint_root=str(tmp_path / "ckpt"), state_partitions=2)
+    topo.start_all()
+    topo.start_all()
+    topo.stop_all()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+    stream = _write_chunks(spark, tmp_path / "in", [[_row(1, 0)]])
+    topo = Topology(
+        spark,
+        checkpoint_root=str(tmp_path / "ckpt"),
+        state_partitions=2,
+        default_trigger={"availableNow": True},
+    )
+    topo.add(StreamQuerySpec("ok", stream, MemoryRowsSink()))
+    topo.add(StreamQuerySpec("batch", spark.range(1), MemoryRowsSink()))
+    with pytest.raises(Exception, match="writeStream"):
+        topo.start_all()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    topo.await_all(timeout=120)
+    topo.stop_all()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_topology_await_all_shares_one_deadline(spark, tmp_path):
+    """``await_all(timeout)`` waits ``timeout`` seconds in total, not once
+    per query: three queries that never end release it after ~2 s, not 6."""
+    stream = _write_chunks(spark, tmp_path / "in", [[_row(1, 0)]])
+    topo = Topology(
+        spark,
+        checkpoint_root=str(tmp_path / "ckpt"),
+        default_trigger={"processingTime": "1 second"},
+    )
+    for i in range(3):
+        topo.add(StreamQuerySpec(f"endless_{i}", stream, MemoryRowsSink()))
+    topo.start_all()
+    try:
+        t0 = time.monotonic()
+        topo.await_all(timeout=2)
+        waited = time.monotonic() - t0
+    finally:
+        topo.stop_all()
+    assert 2 <= waited < 5
 
 
 def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
