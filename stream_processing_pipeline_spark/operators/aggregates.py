@@ -25,21 +25,11 @@ from pyspark.sql import functions as F
 from ..functions.windows import flatten_window, tumbling_window
 
 __all__ = [
-    "conditional",
     "windowed_agg",
     "window_funnel",
     "sequence_match",
     "sequence_count",
 ]
-
-
-def conditional(agg_fn, when_cond: Column, value: Column | str) -> Column:
-    """``agg(CASE WHEN cond THEN value END)`` — the conditional-agg idiom.
-
-    Note ``count(CASE ...)`` counts non-NULLs, distinct from ``count(*)``
-    (reference A2 semantics)."""
-    v = F.col(value) if isinstance(value, str) else value
-    return agg_fn(F.when(when_cond, v))
 
 
 def windowed_agg(

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 __all__ = ["connected_components"]
 
@@ -129,5 +130,7 @@ def _driver_union_find(edges: DataFrame, src: str, dst: str) -> DataFrame:
             parent[hi] = lo
     nodes = {n for uv in pairs for n in uv}
     rows = [(n, find(n)) for n in sorted(nodes)]
-    spark = edges.sparkSession
-    return spark.createDataFrame(rows, ["node", "component"])
+    # Explicit schema: an empty edge list has no rows to infer one from.
+    node_type = edges.schema[src].dataType
+    schema = StructType([StructField("node", node_type), StructField("component", node_type)])
+    return edges.sparkSession.createDataFrame(rows, schema)

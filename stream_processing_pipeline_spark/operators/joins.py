@@ -9,11 +9,9 @@ fact table never moves; only the kilobyte-scale dimension is replicated to
 executors. AQE would often choose this automatically in batch, but streaming
 plans don't re-optimize per micro-batch, so the explicit hint stays.
 
-:func:`fact_join` covers large-to-large joins: pre-repartition both sides on
-the join key so repeated joins against the same key reuse one exchange
-(Catalyst recognizes the co-partitioning), with optional key salting for
-skew (AQE's skew-join handles batch skew; salting is for streaming or
-pathological keys).
+:func:`salted_join` handles hot keys in large-to-large joins (AQE's
+skew-join handles batch skew; salting is for streaming or pathological
+keys).
 """
 
 from __future__ import annotations
@@ -23,7 +21,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "dim_join",
-    "fact_join",
     "salted_join",
     "range_join",
     "asof_join",
@@ -51,20 +48,6 @@ def dim_join(
     this registry-wide)."""
     d = dim.select(*dim_cols) if dim_cols else dim
     return fact.join(F.broadcast(d), on, how)
-
-
-def fact_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    how: str = "inner",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Shuffle join of two large tables, co-partitioned on the join key."""
-    if partitions:
-        left = left.repartition(partitions, *on)
-        right = right.repartition(partitions, *on)
-    return left.join(right, on, how)
 
 
 def salted_join(

@@ -18,7 +18,6 @@ from pyspark.sql.types import DataType, StructType
 __all__ = [
     "parse_json_column",
     "prune",
-    "derive",
     "derive_duration_minutes",
     "minutes_since_midnight",
 ]
@@ -44,12 +43,6 @@ def prune(df: DataFrame, *cols: str) -> DataFrame:
     an explicit narrow projection still pays off in streaming state size and
     plan readability."""
     return df.select(*cols)
-
-
-def derive(df: DataFrame, **named_exprs: Column) -> DataFrame:
-    """Add derived columns in one Project node (vs chained withColumn,
-    which builds one node per call before optimization)."""
-    return df.withColumns(dict(named_exprs))
 
 
 def _epoch_seconds(c: Column) -> Column:

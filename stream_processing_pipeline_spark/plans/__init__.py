@@ -2,21 +2,30 @@
 
 Every query is a named pair (Spark callable, DuckDB oracle SQL) registered in
 :mod:`.registry`; the driver contract (``__spark_entry__.py``) exposes them
-verbatim. Modules:
+verbatim, in gate order (least recently gated first, see :mod:`.registry`).
+Modules:
 
-- :mod:`.parity`     — the six reference queries (SURVEY.md §2.10) mapped onto
-  the synthetic ``events`` star schema
-- :mod:`.batch`      — batch analytics widening the operator surface: TPC-H-
-  style aggregation/join/top-k, analytic window functions, set ops
-- :mod:`.analyticsx` — round-4 extensions: robust stats, time-series
-  diagnostics, strict funnels, mixture weighting, calibration audits
-- :mod:`.dedupq`     — deduplication suite over ``documents``
-- :mod:`.textq`      — text-analysis suite over ``documents``
-- :mod:`.similarq`   — embedding similarity search over ``embeddings``
-- :mod:`.multimodalq`— multimodal binary-column plumbing queries
+- :mod:`.registry`    — ``Query``, ``@register`` and the gate-order reader
+- :mod:`.common`      — shared Spark/DuckDB-SQL helpers for query definitions
+- :mod:`.transforms`  — the six reference transformations as DataFrame functions
+- :mod:`.parity`      — the six reference queries (SURVEY.md §2.10) on the
+  synthetic ``events`` star schema, plus their spec-compiled twins
+- :mod:`.batch`       — batch analytics: TPC-H-style aggregation/join/top-k,
+  analytic window functions, set ops, interval joins
+- :mod:`.streamq`     — streaming operators beyond tumbling windows
+- :mod:`.dedupq`      — deduplication suite over ``documents``
+- :mod:`.textq`       — text-analysis suite over ``documents``
+- :mod:`.similarq`    — embedding similarity search over ``embeddings``
+- :mod:`.multimodalq` — multimodal binary-column plumbing queries
+- :mod:`.tpchx`       — the remaining partsupp-free TPC-H shapes
+- :mod:`.histq`       — mergeable-histogram distribution analytics
+- :mod:`.scalex`      — join-shuffle reduction and skew mitigation
+- :mod:`.analyticsx`  — robust stats, time-series diagnostics, funnels,
+  mixture weighting, sketch-accuracy and embedding-fidelity audits
 """
 
 from .registry import REGISTRY, Query, all_oracles, all_queries, register
+from .registry import gate_evidence, gate_order
 
 from . import parity  # noqa: E402,F401  (imports populate the registry)
 from . import batch  # noqa: E402,F401
@@ -32,160 +41,8 @@ from . import analyticsx  # noqa: E402,F401
 
 __all__ = ["REGISTRY", "Query", "register", "all_queries", "all_oracles"]
 
-# --------------------------------------------------------------- gate order
-# The external correctness gate evaluates queries in registration order and
-# each round records exactly the first 50 registrations, so the gate
-# effectively checks a prefix. Registration order is therefore part of the
-# verification contract: queries whose driver-side evidence is newest-needed
-# come first. Round-12 ordering (VERDICT.md r11 "Next round" #1, executing
-# the r11-declared head to the slot):
-#   1. the 26 r6-vintage deferrals from the zero-slack r11 rotation
-#      (emb_jl_distance_fidelity .. text_lang_id, r06 slot order),
-#      verbatim in their declared order — the oldest external evidence
-#      left in the registry. 26 slots.
-#   2. approx_distinct_users + hll_sketch_rollup — newly oracle-fied in
-#      round 11 (explicit h60-derived HLL registers, VERDICT r10 #2);
-#      these are their FIRST hash-verifiable external rows. 2 slots.
-#   3. the 4 queries NEW in round 11, declared order
-#      (text_winnow_fingerprints, dedup_winnow_pairs,
-#      winnow_recall_audit, hash_xxh64_twin_audit). 4 slots.
-#   4. 18 of the 50 queries whose newest external row is r7-vintage,
-#      oldest evidence first (CORRECTNESS_r07.json slot order within the
-#      equal-vintage set): mm_png_corrupt_quarantine through
-#      dedup_keep_best_quality. 26 + 2 + 4 + 18 = EXACTLY 50, zero
-#      slack. The 32 r7-vintage queries that do not fit
-#      (text_bpe_token_stats .. tpch_q22_dormant_accounts, r07 slot
-#      order) are deferred to slots 51+ and form the FIRST entries of
-#      the r13 gate head; every one keeps its r7 driver row and stays
-#      mirror-verified at 3 SFs per commit. After the r12 gate, every
-#      registered query's newest external row is r7+ with r7 itself
-#      down to those 32 documented deferrals (plus any query first
-#      registered in r12).
-# Count the prefix with
-#   python -c "from stream_processing_pipeline_spark.plans import
-#              REGISTRY; print(list(REGISTRY)[:50])"
-# rather than trusting arithmetic in this comment.
-_GATE_PRIORITY = [
-    # -- slots 1-26: the r6-vintage deferrals (r11 zero-slack overflow),
-    #    declared r12-head-first in r11; oldest evidence in the registry
-    "emb_jl_distance_fidelity",
-    "kcore_part_affinity",
-    "stream_rate_limited_users",
-    "text_unigram_surprisal",
-    "sql_groupby_all_daily_mix",
-    "sim_ivf_cell_balance",
-    "lsh_cap_recall_audit",
-    "mm_ppm_decode_stats",
-    "dedup_minhash_lsh_capped",
-    "llm_corpus_stage_report",
-    "part_affinity_triangles",
-    "metric_bootstrap_ci",
-    "value_rank_family",
-    "sliding_window_counts",
-    "session_windows",
-    "stream_user_stats",
-    "dedup_exact",
-    "dedup_minhash_bands",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_components",
-    "text_token_stats",
-    "text_lang_id",
-    # -- slots 27-28: first hash-verifiable external rows for the HLL
-    #    pair rebuilt on explicit h60 registers in round 11
-    "approx_distinct_users",
-    "hll_sketch_rollup",
-    # -- slots 29-32: the 4 queries NEW in round 11, declared order
-    "text_winnow_fingerprints",        # MOSS winnowing fingerprint profile
-    "dedup_winnow_pairs",              # winnowed-index substring screen
-    "winnow_recall_audit",             # screen-vs-truth catch-rate audit
-    "hash_xxh64_twin_audit",           # xxhash64 DuckDB twin under the gate
-    # -- slots 33-50: the r7-vintage evidence backlog, oldest first
-    #    (CORRECTNESS_r07.json slot order; 18 of 50 — the remaining 32
-    #    are the slots-51+ deferrals documented above)
-    "mm_png_corrupt_quarantine",
-    "retrieval_rrf_fusion",
-    "customer_inflight_order_overlaps",
-    "mm_png_decode_stats",
-    "ts_sax_similar_users",
-    "mm_wav_pcm_stats",
-    "mm_tar_member_index",
-    "supplier_part_transit_overlaps",
-    "window_funnel_depth",
-    "text_quality",
-    "text_fingerprints",
-    "quality_by_source",
-    "user_value_trailing_hour",
-    "user_value_minmax_scaled",
-    "event_props_extract",
-    "dedup_embedding_cosine_lsh",
-    "dedup_incremental",
-    "dedup_keep_best_quality",
-    # -- slots 51+: work that must NOT displace the rotation above.
-    #    The 32 r7-vintage deferrals (oldest evidence in the registry
-    #    after the r12 gate; they open the r13 head, r07 slot order).
-    #    DECLARED r13 HEAD: the 32 r7 deferrals below, then any queries
-    #    NEW in round 12 in their declared order, then the oldest
-    #    r8-vintage rows (CORRECTNESS_r08.json slot order) to fill 50.
-    "text_bpe_token_stats",
-    "top_tokens",
-    "token_stats_by_lang",
-    "corpus_train_test_split",
-    "mixture_downsample",
-    "corpus_clean_train_sample",
-    "stratified_sample_exact",
-    "text_repetition_stats",
-    "contamination_bench_overlap",
-    "sim_topk_bruteforce",
-    "sim_lsh_buckets",
-    "sim_topk_lsh",
-    "sim_topk_lsh_multiprobe",
-    "sim_label_centroid_norms",
-    "sim_ivf_static_assignments",
-    "sim_topk_ivf_static",
-    "emb_int8_quantize",
-    "sim_topk_int8",
-    "retrieval_quality_topk",
-    "sim_pq_codes",
-    "sim_topk_pq",
-    "mm_metadata",
-    "mm_frame_offsets",
-    "mm_decode",
-    "mm_resize",
-    "tpch_q10_returned_items",
-    "tpch_q12_late_shipments",
-    "tpch_q13_customer_distribution",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q19_discounted_revenue",
-    "tpch_q21_suppliers_kept_waiting",
-    "tpch_q22_dormant_accounts",
-    # -- NEW in round 12 (mirror-green at 3 SFs; external rows queued in
-    #    the declared r13 head after the 32 r7 deferrals above)
-    "spec_q2_abnormal_minutes",        # spec compiler: stateless chain
-    "spec_q6_counts_by_segment",       # spec compiler: join+agg chain
-    "spec_q4_avg_value_per_hour",      # spec compiler: money-macro aggs
-    "mm_tgz_multimember_index",        # pigz-style multi-member shards
-    "spec_q1_typed_events",            # spec compiler: parse_json op
-    "spec_q3_value_discrepancy",       # spec compiler: discrepancy_filter
-    "spec_q5_event_counts_per_hour",   # spec compiler: count_if macros
-    "mm_tbz2_multistream_index",       # pbzip2-style .tar.bz2 shards
-    "mm_txz_multistream_index",        # padded multi-stream .tar.xz
-]
-# Queries not named above (r3/r4/r5-green) keep registration order after
-# the list — every one has a prior driver row, and every one is still
-# re-verified per-commit by the local mirror (tools/driver_sim.py /
-# tests/test_oracle_correctness.py).
-
-
-def _apply_gate_priority() -> None:
-    ordered = {n: REGISTRY[n] for n in _GATE_PRIORITY if n in REGISTRY}
-    for name, q in REGISTRY.items():
-        ordered.setdefault(name, q)
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_apply_gate_priority()
+# Gate order (see .registry): least recently gated first.
+_reordered = {n: REGISTRY[n] for n in gate_order(REGISTRY, gate_evidence())}
+REGISTRY.clear()
+REGISTRY.update(_reordered)
+del _reordered

@@ -987,10 +987,7 @@ def emb_matryoshka_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------- r5-prep batch (deferred)
-# Registered past the 50-slot r4 gate prefix; mirror-verified at all three
-# SFs this round and pinned in tests/test_registry_gate.py::
-# deferred_past_prefix for rotation to the r5 prefix head.
+# ----------------------------------------------------------- r5-prep batch
 
 
 @register(

@@ -4074,28 +4074,17 @@ _IVL_BUCKET_DAYS = 14  # FLOOR for the derived interval-join bucket width
 
 
 def _derived_bucket_days(iv: DataFrame, d0: str = "d0", d1: str = "d1") -> int:
-    """Data-adaptive bucket width for the asymmetric interval join (r13,
-    guide §2 "derive partitioning from the input, don't hard-code it"):
-    half the AVERAGE interval length, floored at ``_IVL_BUCKET_DAYS``.
+    """Interval-join bucket width: half the average interval length (floored
+    average, integer days), at least ``_IVL_BUCKET_DAYS``.
 
-    Why: the cover side explodes each interval into ``len/W + 1`` bucket
-    rows, while a candidate is false (discarded by the exact predicate)
-    with probability ~``W/(len + W)`` — so W ≈ len/2 keeps the explode
-    factor at ~2-3 rows per cover AND the false fraction under ~40%,
-    wherever the corpus's interval scale sits. The r12 constant (14 d,
-    sized for month-scale intervals) exploded this fixture's ~833-day
-    average intervals into ~60 bucket rows each: measured 8.3 s →
-    1.3-1.9 s at sf0.1 for the supplier/part query across the derived
-    width (sweep in OPTIMIZATION_r13.md; output row-identical at every
-    width probed, 1613 rows). One extra bounded aggregation job derives
-    the scalar (exact integer avg — deterministic); the celebrity-key
-    behavior is unchanged (the orientation filter works per candidate
-    row, and per-key false volume stays proportional to true overlap
-    volume at W ~ len/2)."""
-    avg_len = iv.agg(
-        F.floor(F.avg(F.datediff(d1, d0))).cast("long").alias("al")
-    ).first()[0]
-    return max(_IVL_BUCKET_DAYS, int(avg_len or 0) // 2)
+    W ~ len/2 keeps both the cover-side explode (~len/W + 1 rows per
+    interval) and the false-candidate share (~W/(len + W)) small wherever
+    the data's interval scale sits. The average is computed from exact long
+    sum and count, so the width never depends on float summation order."""
+    total, n = iv.agg(
+        F.sum(F.datediff(d1, d0).cast("long")), F.count(F.lit(1))
+    ).first()
+    return max(_IVL_BUCKET_DAYS, (total or 0) // max(n, 1) // 2)
 
 
 @register(

@@ -8,16 +8,34 @@ and hash-compares values, so Spark aliases and SQL ``AS`` names must agree.
 Queries without an oracle (``oracle=None``) are genuinely non-SQL-expressible
 (custom stateful streaming, approximate/iterative algorithms) and get a
 weaker rows-only check — kept to a minimum by design.
+
+The external correctness gate checks only the first 50 registered queries,
+so the registry is kept in gate order: least recently gated first, read from
+the ``CORRECTNESS_r{N}.json`` rows the gate has recorded
+(:func:`gate_evidence`, :func:`gate_order`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import os
+import re
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["Query", "REGISTRY", "register", "all_queries", "all_oracles"]
+__all__ = [
+    "Query",
+    "REGISTRY",
+    "register",
+    "all_queries",
+    "all_oracles",
+    "EVIDENCE_ROOT",
+    "gate_evidence",
+    "gate_order",
+]
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -55,3 +73,38 @@ def all_queries() -> dict[str, QueryFn]:
 
 def all_oracles() -> dict[str, str]:
     return {name: q.oracle for name, q in REGISTRY.items() if q.oracle is not None}
+
+
+#: Where the gate's ``CORRECTNESS_r{N}.json`` files live: the directory
+#: holding the package.
+EVIDENCE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_EVIDENCE_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json$")
+
+
+def gate_evidence(root: str = EVIDENCE_ROOT) -> dict[str, tuple[int, int]]:
+    """``{query: (round, slot)}`` for the newest ``CORRECTNESS_r{round}.json``
+    in *root* that holds a row for the query; *slot* is the row's position in
+    that file. Queries the gate never recorded are absent."""
+    evidence: dict[str, tuple[int, int]] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = _EVIDENCE_FILE.search(path)
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        try:
+            with open(path) as fh:
+                rows = json.load(fh)
+        except ValueError as exc:
+            raise ValueError(f"unreadable gate evidence {path}: {exc}") from exc
+        for slot, name in enumerate(rows):
+            if rnd > evidence.get(name, (0, 0))[0]:
+                evidence[name] = (rnd, slot)
+    return evidence
+
+
+def gate_order(names: Iterable[str], evidence: dict[str, tuple[int, int]]) -> list[str]:
+    """*names* least recently gated first: never-gated queries (round 0),
+    then by the round and slot of each query's newest row. Ties keep the
+    order of *names* (registration order)."""
+    return sorted(names, key=lambda n: evidence.get(n, (0, 0)))

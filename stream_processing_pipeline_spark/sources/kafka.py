@@ -1,4 +1,4 @@
-"""Kafka source/sink wrappers and a resumable CSV->Kafka replay tool.
+"""Kafka source wrapper and a resumable CSV->Kafka replay tool.
 
 Parity surface (no Kafka broker ships in the test environment, so everything
 here is exercised through unit tests of the builders plus the documented
@@ -8,9 +8,6 @@ contract):
   (``/root/reference/src/spark_streaming.py:38-56``): ``readStream.format
   ("kafka")`` with ``subscribe`` + ``startingOffsets``; schema attach happens
   downstream via :class:`~stream_processing_pipeline_spark.schema.SchemaContract.parse_json`.
-- :func:`write_kafka` — JSON-serializing batch/stream writer (the Spark-native
-  replacement for the reference's kafka-python producer,
-  ``/root/reference/src/kafka_stream.py:57-101``).
 - :class:`CsvReplayer` — a small operational tool reproducing the reference
   producer's observable behavior: CSV rows -> JSON messages with a resumable
   file cursor (``/root/reference/src/kafka_stream.py:30-55,78-101``). With
@@ -32,9 +29,8 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-__all__ = ["read_kafka_stream", "write_kafka", "CsvReplayer"]
+__all__ = ["read_kafka_stream", "CsvReplayer"]
 
 
 def read_kafka_stream(
@@ -57,24 +53,6 @@ def read_kafka_stream(
     if min_partitions is not None:
         reader = reader.option("minPartitions", str(min_partitions))
     return reader.load()
-
-
-def write_kafka(df: DataFrame, brokers: str, topic: str, key_col: str | None = None):
-    """Serialize all columns to a JSON ``value`` and write to Kafka.
-
-    Returns a DataFrameWriter/DataStreamWriter ready for ``.save()`` /
-    ``.start()`` so callers control checkpointing and trigger.
-    """
-    cols = [F.to_json(F.struct(*df.columns)).alias("value")]
-    if key_col:
-        cols.insert(0, F.col(key_col).cast("string").alias("key"))
-    payload = df.select(*cols)
-    writer = payload.writeStream if payload.isStreaming else payload.write
-    return (
-        writer.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-    )
 
 
 @dataclass

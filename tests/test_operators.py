@@ -20,6 +20,7 @@ from stream_processing_pipeline_spark.functions.money import avg_money, cents
 from stream_processing_pipeline_spark.functions.rounding import pround, pround_sql
 from stream_processing_pipeline_spark.functions.windows import flatten_window
 from stream_processing_pipeline_spark.operators.filters import discrepancy_filter
+from stream_processing_pipeline_spark.operators.graph import connected_components
 from stream_processing_pipeline_spark.schema import ColumnRule, SchemaContract
 
 TRIP_CONTRACT = SchemaContract(
@@ -3000,3 +3001,20 @@ def test_parse_xz_reject_paths():
     assert parse_xz(bomb + b"\x00" * 4, max_total_uncompressed=100_000) == [
         b"\x00" * 100_000
     ]
+
+
+def test_connected_components_empty_edges(spark):
+    """No candidate pairs means no components: zero rows with the
+    ``(node, component)`` schema typed like the edge columns, not a schema
+    inference error on the empty driver-side result."""
+    edges = spark.createDataFrame([], "doc_a long, doc_b long")
+    out = connected_components(edges)
+    assert out.columns == ["node", "component"]
+    assert [f.dataType.simpleString() for f in out.schema] == ["bigint", "bigint"]
+    assert out.count() == 0
+
+
+def test_connected_components_min_id_labels(spark):
+    edges = spark.createDataFrame([(3, 1), (1, 2), (7, 5)], "doc_a long, doc_b long")
+    got = sorted(map(tuple, connected_components(edges).collect()))
+    assert got == [(1, 1), (2, 1), (3, 1), (5, 5), (7, 5)]

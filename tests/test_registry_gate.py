@@ -1,126 +1,66 @@
 """Registry/gate-contract invariants.
 
 The external correctness gate evaluates queries in registration order and
-(observed in round 1) checks a ~50-query prefix, so registration order is
-part of the verification contract. These tests keep that contract honest.
+records a 50-query prefix, so registration order is part of the
+verification contract: the registry is kept least recently gated first,
+derived from the ``CORRECTNESS_r{N}.json`` rows (plans/registry.py).
 """
 
 from __future__ import annotations
 
+import json
+
+import pytest
+
 from stream_processing_pipeline_spark.plans import REGISTRY, all_oracles, all_queries
-from stream_processing_pipeline_spark.plans import _GATE_PRIORITY
+from stream_processing_pipeline_spark.plans.registry import gate_evidence, gate_order
 
 
-def test_gate_priority_names_all_exist():
-    """A typo in _GATE_PRIORITY would silently drop a query from the gate
-    prefix — every listed name must be a registered query."""
-    missing = [n for n in _GATE_PRIORITY if n not in REGISTRY]
-    assert not missing, f"_GATE_PRIORITY names not in REGISTRY: {missing}"
+def test_registry_follows_gate_evidence():
+    """The registry is sorted by the evidence key: never-gated queries
+    first, then by the round and slot of each query's newest gate row."""
+    evidence = gate_evidence()
+    keys = [evidence.get(n, (0, 0)) for n in REGISTRY]
+    assert keys == sorted(keys)
 
 
-def test_gate_priority_is_registry_prefix():
-    """The priority list must actually lead the registry, in order."""
-    names = list(REGISTRY)
-    assert names[: len(_GATE_PRIORITY)] == list(_GATE_PRIORITY)
+def _write_rounds(root, rounds):
+    for rnd, names in rounds.items():
+        rows = {n: {"hash_match": True} for n in names}
+        (root / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(rows))
 
 
-#: Queries registered past the current gate prefix without a prior driver
-#: row (each entry must name its verified in-prefix sibling). Round 12's
-#: prefix is the r11-declared head executed to the slot: the 26 r6-vintage
-#: deferrals, the HLL pair's first hash-verifiable rows, the 4 queries NEW
-#: in round 11, then 18 of the 50 r7-vintage backlog queries in
-#: CORRECTNESS_r07 slot order — exactly 50, zero slack. The 32 r7-vintage
-#: queries that did not fit (text_bpe_token_stats ..
-#: tpch_q22_dormant_accounts) all keep their r7 driver rows, so the
-#: data-driven check below covers them; queries NEW in round 12 must
-#: either take a head slot (they can't — the rotation is zero-slack) or
-#: be listed here with their in-prefix sibling named.
-deferred_past_prefix: set[str] = {
-    # Q2 compiled from the JSON pipeline spec (NEW r12): the oracle is
-    # sibling q2_abnormal_minutes' VERBATIM (r10 external row, re-gated
-    # with every parity rotation), and the compiled plan is the same
-    # derive/filter/select tree — pinned value-identical to the code twin
-    # by tests/test_pipeline_spec.py::test_spec_batch_equals_code_transforms;
-    # mirror-green at 3 SFs; queued in the declared r13 head.
-    "spec_q2_abnormal_minutes",
-    # Q6 compiled from the spec (NEW r12): oracle verbatim from sibling
-    # q6_counts_by_segment (r10 external row; broadcast-join plan pinned
-    # by test_plans.py::test_q6_dim_join_broadcasts), compiled ==
-    # code-built pinned by the same batch-equivalence test; mirror-green
-    # at 3 SFs; queued in the declared r13 head.
-    "spec_q6_counts_by_segment",
-    # Q4 compiled from the spec (NEW r12): oracle verbatim from sibling
-    # q4_avg_value_per_hour (r10 external row); the @avg_money macro
-    # expansion is pinned value-identical to functions.money by
-    # test_pipeline_spec's batch-equivalence sweep; mirror-green at
-    # 3 SFs; queued in the declared r13 head.
-    "spec_q4_avg_value_per_hour",
-    # pigz-style multi-member .tar.gz indexing (NEW r12): the gzip-member
-    # walk and tar walk are sibling mm_webdataset_tgz_index's (r11
-    # external row); the single-member twin shares the identical
-    # generator arithmetic, the oracle differing only by the +46
-    # two-wrapper constant; the multi-member join convention is
-    # foreign-bytes-pinned against system /usr/bin/gzip members in
-    # tests/test_operators.py; mirror-green at 3 SFs; queued in the
-    # declared r13 head.
-    "mm_tgz_multimember_index",
-    # Q1 compiled from the spec (NEW r12, completes the reference six as
-    # compiled specs): oracle verbatim from sibling q1_typed_events (r10
-    # external row, parity-rotated), compiled == code-built pinned by
-    # test_pipeline_spec's batch-equivalence sweep; mirror-green at 3 SFs;
-    # queued in the declared r13 head.
-    "spec_q1_typed_events",
-    # Q3 compiled from the spec (NEW r12): oracle verbatim from sibling
-    # q3_value_discrepancy (r10 external row); the discrepancy_filter op's
-    # NULL-propagating predicate is pinned value-identical to the code
-    # twin by the same equivalence sweep; mirror-green at 3 SFs; queued in
-    # the declared r13 head.
-    "spec_q3_value_discrepancy",
-    # Q5 compiled from the spec (NEW r12): oracle verbatim from sibling
-    # q5_event_counts_per_hour (r10 external row); the @count_if /
-    # @count_star macro expansion is pinned by the equivalence sweep;
-    # mirror-green at 3 SFs; queued in the declared r13 head.
-    "spec_q5_event_counts_per_hour",
-    # pbzip2-style .tar.bz2 shard indexing (NEW r12): the tar walk and
-    # WebDataset stats are sibling mm_tgz_multimember_index's (same
-    # shared helpers; that sibling is itself r12-new but its OWN siblings
-    # carry r11 rows and the whole family is mirror-green); the bzip2
-    # stream walk is foreign-bytes-pinned against the system bzip2
-    # binary in tests/test_operators.py; the oracle is closed-form
-    # uncompressed geometry only (bzip2 has no stored mode). Mirror-green
-    # at 3 SFs; queued in the declared r13 head.
-    "mm_tbz2_multistream_index",
-    # padded multi-stream .tar.xz indexing (NEW r12): same sibling
-    # argument as the bz2 twin (shared _index_multistream_tar_arrow /
-    # tar / WebDataset helpers); the xz stream+padding walk is
-    # foreign-bytes-pinned against the system xz binary, including the
-    # stdlib-truncation trap assertion, in tests/test_operators.py.
-    # Mirror-green at 3 SFs; queued in the declared r13 head.
-    "mm_txz_multistream_index",
-}
+def test_gate_order_rule_over_fake_evidence(tmp_path):
+    registered = ["a", "b", "c", "d", "e", "f"]
+    # An empty directory leaves registration order unchanged.
+    assert gate_evidence(str(tmp_path)) == {}
+    assert gate_order(registered, gate_evidence(str(tmp_path))) == registered
+
+    # Unpadded names: r9 sorts after r10 unless the round is parsed as an int.
+    _write_rounds(tmp_path, {9: ["e", "a", "d"], 10: ["c", "a", "b"]})
+    evidence = gate_evidence(str(tmp_path))
+    assert evidence == {"e": (9, 0), "d": (9, 2), "c": (10, 0), "a": (10, 1), "b": (10, 2)}
+    order = gate_order(registered, evidence)
+    # Never-gated first (f); the older round before the newer (e, d before
+    # c, a, b); slot order within a round (e before d; c, a, b).
+    assert order == ["f", "e", "d", "c", "a", "b"]
+
+
+def test_gate_evidence_names_unreadable_file(tmp_path):
+    (tmp_path / "CORRECTNESS_r03.json").write_text("{not json")
+    with pytest.raises(ValueError, match="CORRECTNESS_r03.json"):
+        gate_evidence(str(tmp_path))
 
 
 def test_queries_past_gate_prefix_have_prior_driver_rows():
     """The gate records a ~50-query prefix, so any query registered past
     slot 50 misses this round's external verification. That is only
     acceptable for queries that already have a driver-side row from a past
-    round (any CORRECTNESS_r*.json) — never-verified or changed-this-round
-    queries must sit inside the prefix. Data-driven so the invariant
-    survives future rotations."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    gated: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        gated |= set(json.load(open(path)))
+    round (any CORRECTNESS_r*.json) — never-verified queries must sit
+    inside the prefix."""
+    gated = gate_evidence()
     overflow = [n for n in list(REGISTRY)[50:] if n not in gated]
-    undocumented = [n for n in overflow if n not in deferred_past_prefix]
-    assert not undocumented, (
-        f"past slot 50 without any prior driver row: {undocumented}"
-    )
-    assert set(overflow) <= deferred_past_prefix | gated
+    assert not overflow, f"past slot 50 without any prior driver row: {overflow}"
 
 
 def test_oracle_coverage_is_total_minus_documented_exceptions():

@@ -1,41 +1,30 @@
-"""Regenerate REGISTRY.md: every registered query, its tags, oracle status,
-verification surface, and external-evidence VINTAGE (the newest
-CORRECTNESS_r*.json round carrying a driver row for the query — the
-per-query evidence-rotation ledger the gate-head ordering runs on).
+"""Regenerate REGISTRY.md: every registered query in gate order, its tags,
+oracle status, and external-evidence vintage (the newest
+CORRECTNESS_r*.json round holding a gate row for the query, the same
+ledger the registry order is derived from).
 Usage: python tools/dump_registry.py"""
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from stream_processing_pipeline_spark.plans import REGISTRY  # noqa: E402
+from collections import Counter
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
-
-def newest_external_rows() -> dict[str, int]:
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1))
-        for name in json.load(open(path)):
-            latest[name] = max(latest.get(name, 0), rnd)
-    return latest
+from stream_processing_pipeline_spark.plans import REGISTRY  # noqa: E402
+from stream_processing_pipeline_spark.plans.registry import gate_evidence  # noqa: E402
 
 
 def main() -> None:
-    latest = newest_external_rows()
+    latest = {name: rnd for name, (rnd, _slot) in gate_evidence().items()}
     lines = [
         "# REGISTRY — all registered queries (auto-generated)",
         "",
         "One row per `__spark_entry__.queries()` entry, in registration order",
-        "(the external gate's evaluation order). Oracle column: `value-hash`",
+        "(the external gate's evaluation order: least recently gated first,",
+        "derived from the `CORRECTNESS_r{N}.json` files). Oracle column: `value-hash`",
         "= full DuckDB value-hash comparison at sf0.01; `rows-only` = result",
         "shape checked, semantics pinned by the named invariant tests.",
         "The `rows-only` class is EMPTY as of round 11: the HLL pair's",
@@ -44,9 +33,7 @@ def main() -> None:
         "now carries a full value-hash oracle and is gate-eligible.",
         "Vintage column: the newest round whose external",
         "driver gate recorded this query (`CORRECTNESS_r{N}.json`); `—` =",
-        "registered after the last recorded gate, mirror-verified at 3 SFs",
-        "and queued in the declared next-round head",
-        "(tests/test_registry_gate.py names each one's in-prefix sibling).",
+        "never recorded by the gate, so first in line for the next one.",
         "Regenerate with `python tools/dump_registry.py`.",
         "",
         "| # | query | tags | oracle | newest external row |",
@@ -59,8 +46,6 @@ def main() -> None:
         lines.append(f"| {i} | `{name}` | {tags} | {oracle} | {vint} |")
     n = len(REGISTRY)
     n_oracled = sum(1 for q in REGISTRY.values() if q.oracle)
-    from collections import Counter
-
     counts = Counter(
         f"r{latest[name]}" if name in latest else "unrecorded"
         for name in REGISTRY
