@@ -2,13 +2,16 @@
 
 Usage: ``python bench.py`` — honors ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) and ``$SPARK_GRAFT_CPUS`` (default all cores).
-Each query executes to completion (count + collect of the result, which for
-these queries is aggregate-sized) and is timed wall-clock after a shared
-warm-up of the SparkSession.
+Each query is written to the noop sink and timed wall-clock. Before the
+timed pass the same queries run once, untimed, over the sibling ``sf0.001``
+directory, so the one-time JVM costs of each kernel family (codegen, class
+loading) are not billed to whichever query uses it first; ``warmup_sec`` is
+that untimed region's wall time.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
@@ -20,187 +23,19 @@ from stream_processing_pipeline_spark.plans import REGISTRY  # noqa: E402
 from stream_processing_pipeline_spark.session import build_session, default_parallelism  # noqa: E402
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    try:
-        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
-    except ValueError:
-        sf = -1.0  # unrecognized dir naming; still benchmark it
-    cpus = default_parallelism()
-    spark = build_session(app_name="bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+def run_queries(spark, items, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
+    """Write each ``(name, query)`` over ``sf_dir`` to the noop sink.
 
-    # Warm up the JVM + parquet footers outside the timed region, and spin
-    # up the Arrow/pandas Python workers once — otherwise the alphabetically
-    # first pandas query pays every worker's cold start (observed ~5s of
-    # python+pandas import time attributed to one query).
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    def _warm(it):
-        for pdf in it:
-            yield pdf
-
-    spark.range(0, 64, 1, 32).mapInPandas(_warm, "id long").count()
-
-    # Warm the shared expression kernels on toy data: the shingle/xxhash
-    # minhash pipeline and the higher-order-function distance folds each
-    # bill several seconds of one-time codegen/class-loading to whichever
-    # family member happens to run first (measured: dedup_components 6.8s
-    # cold vs 2.5s warm; the work is identical). Same rationale as the
-    # pandas-worker warm-up above — keep one-time JVM costs out of
-    # per-query attribution, never touching the benchmarked data.
-    from stream_processing_pipeline_spark.operators.dedup import lsh_candidate_pairs
-    from stream_processing_pipeline_spark.operators.similarity import (
-        assign_clusters_static,
-    )
-
-    tiny_docs = spark.createDataFrame(
-        [(i, f"warm the hash kernels {i} " * 4) for i in range(8)],
-        "doc_id long, text string",
-    )
-    lsh_candidate_pairs(tiny_docs).count()
-    # r11 polynomial shingle/window kernels + posting-array pair expansion
-    # + winnowing min-of-window: one toy pass compiles the transform/
-    # aggregate codegen the substring/Jaccard/winnow family reuses.
-    from stream_processing_pipeline_spark.operators import text as _T
-    from stream_processing_pipeline_spark.operators.dedup import (
-        shingle_key_of_token_hashes,
-        token_hashes,
-    )
-    from pyspark.sql import functions as _Fw
-
-    _ths = tiny_docs.select(
-        "doc_id", token_hashes(_T.tokens(_T.normalize_text("text"))).alias("ths")
-    )
-    _gs = _ths.select(
-        "doc_id", shingle_key_of_token_hashes(_Fw.col("ths"), 5).alias("gs")
-    )
-    _gs.select(
-        "doc_id",
-        _Fw.expr(
-            "flatten(transform(gs, (x, i) -> transform(slice(gs, i + 2, "
-            "size(gs) - i - 1), y -> struct(x AS a, y AS b))))"
-        ).alias("p"),
-        _Fw.transform(
-            _Fw.sequence(_Fw.lit(1), _Fw.greatest(_Fw.size("gs") - 7, _Fw.lit(1))),
-            lambda i: _Fw.array_min(_Fw.slice(_Fw.col("gs"), i, 8)),
-        ).alias("w"),
-    ).count()
-    tiny_emb = spark.createDataFrame(
-        [(i, [float(i + 1)] * 4) for i in range(4)],
-        "vec_id long, embedding array<float>",
-    )
-    assign_clusters_static(tiny_emb, [(0, [0] * 4), (1, [10**6] * 4)]).count()
-    from stream_processing_pipeline_spark.functions.vectors import cosine_similarity
-
-    tiny_emb.select(
-        cosine_similarity("embedding", "embedding").alias("c")
-    ).count()
-
-    # Bloom/xxhash kernel: build + probe a toy bitmap once — the literal
-    # 1024-long bitmap array + 64-entry mask lookup compile several seconds
-    # of one-time codegen that otherwise bill to whichever bloom query runs
-    # first (measured: bloom_semijoin_nation_suppliers 19.0s in-bench vs
-    # 2.2s warm isolated, VERDICT r6 "What's wrong" #1).
-    from stream_processing_pipeline_spark.operators.bloom import (
-        bloom_bitmap,
-        bloom_prefilter,
-    )
-
-    tiny_keys = spark.range(0, 8).selectExpr("CAST(id AS STRING) AS k")
-    _bloom_words = bloom_bitmap(tiny_keys, "k")
-    bloom_prefilter(tiny_keys, _bloom_words, "k").count()
-
-    # PNG generator kernel: the in-plan encoder's filter/Adler folds and
-    # crc32 chunk framing compile ~9s of one-time plan+codegen (measured
-    # sf0.1 cold 10.1s vs warm 1.05s); one 4-row build-and-decode pass
-    # keeps that out of mm_png_decode_stats's in-bench attribution.
-    from stream_processing_pipeline_spark.operators.multimodal import (
-        decode_png_stats_arrow,
-    )
-    from stream_processing_pipeline_spark.plans.multimodalq import (
-        _png_attach_payload,
-    )
-
-    decode_png_stats_arrow(
-        _png_attach_payload(spark.range(4).selectExpr("id AS doc_id"))
-    ).count()
-
-    # ZIP kernel (r9): one 4-row decode pass warms the parse_zip Arrow
-    # stage (same rationale as the PNG warm-up; the archive itself is a
-    # 4-entry toy from the stdlib writer, never benchmarked data).
-    import io as _io
-    import zipfile as _zipfile
-
-    from stream_processing_pipeline_spark.operators.multimodal import (
-        decode_zip_stats_arrow,
-    )
-
-    _zbuf = _io.BytesIO()
-    with _zipfile.ZipFile(_zbuf, "w", _zipfile.ZIP_DEFLATED) as _z:
-        _z.writestr(
-            _zipfile.ZipInfo("w.bin", date_time=(1999, 1, 1, 0, 0, 0)),
-            b"warm the zip kernels " * 4,
-        )
-    tiny_zip = spark.createDataFrame(
-        [(i, bytearray(_zbuf.getvalue())) for i in range(4)],
-        "doc_id long, payload binary",
-    )
-    decode_zip_stats_arrow(tiny_zip).count()
-
-    # BPE-trainer kernel: one toy merge round (pair-count -> argmax ->
-    # broadcast-winner replace) compiles the zip_with/crossJoin/replace
-    # codegen the 6-round trainer reuses (measured: 11.7s cold vs 2.6s
-    # warm for bpe_train_merges at sf0.1).
-    from stream_processing_pipeline_spark.plans.textq import (
-        _bpe_apply_merge,
-        _bpe_pair_counts_of,
-    )
-    from pyspark.sql import functions as _F
-
-    tiny_words = tiny_docs.select(
-        _F.regexp_replace("text", "(.)", " $1 ").alias("seq"),
-        _F.lit(1).alias("cnt"),
-    )
-    tiny_best = (
-        _bpe_pair_counts_of(tiny_words)
-        .orderBy(_F.col("n").desc(), "l", "r")
-        .limit(1)
-    )
-    _bpe_apply_merge(tiny_words, tiny_best).count()
-
-    # Touch each fixture file once (limit 1): footer/schema reads and codec
-    # init are per-session one-time costs that otherwise bill to the
-    # alphabetically-first query per table. The timed region still scans
-    # all data — this reads one row group's worth of metadata, not results.
-    import glob
-
-    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        spark.read.parquet(p).limit(1).collect()
-
-    # Subset mode (r12): SPARK_GRAFT_BENCH_ONLY=name1,name2 times just
-    # those queries under the IDENTICAL session/warm-up/noop-sink regime
-    # and skips the streaming benches — the per-query A/B tool for plan
-    # rewrites and regression adjudication (median-of-N wrappers call this
-    # repeatedly). The driver's full run never sets it, so the committed
-    # artifact is unaffected.
-    only = {
-        n for n in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if n
-    }
-    items = sorted(REGISTRY.items())
-    if only:
-        unknown = only - {n for n, _ in items}
-        if unknown:
-            raise SystemExit(f"SPARK_GRAFT_BENCH_ONLY unknown: {sorted(unknown)}")
-        items = [(n, q) for n, q in items if n in only]
-
+    Returns ``(timings, failures)``: wall seconds per query, -1.0 for a
+    query that raised, whose error text goes to ``failures``.
+    """
     timings: dict[str, float] = {}
     failures: dict[str, str] = {}
     for name, q in items:
         # stderr progress (stdout stays ONE parseable JSON line): after an
         # executor-death failure the last-started name is otherwise
-        # unattributable because timings only print at the end (r8).
-        print(f"bench: {name}", file=sys.stderr, flush=True)
+        # unattributable because timings only print at the end.
+        print(f"bench: {name} ({sf_dir})", file=sys.stderr, flush=True)
         t0 = time.perf_counter()
         try:
             # noop sink: fully materializes every output column (count()
@@ -217,6 +52,48 @@ def main() -> None:
             # per query keeps one query's cache from occupying memory and
             # skewing every later timing.
             spark.catalog.clearCache()
+    return timings, failures
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    try:
+        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
+    except ValueError:
+        sf = -1.0  # unrecognized dir naming; still benchmark it
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    if not os.path.isdir(warm_dir):
+        raise SystemExit(f"bench: warm-up data directory missing: {warm_dir}")
+
+    # Subset mode: SPARK_GRAFT_BENCH_ONLY=name1,name2 times just those
+    # queries under the same session/warm-up/noop-sink regime and skips the
+    # streaming benches — the per-query A/B tool (tools/ab_subset.py).
+    only = {
+        n for n in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if n
+    }
+    items = sorted(REGISTRY.items())
+    if only:
+        unknown = only - {n for n, _ in items}
+        if unknown:
+            raise SystemExit(f"SPARK_GRAFT_BENCH_ONLY unknown: {sorted(unknown)}")
+        items = [(n, q) for n, q in items if n in only]
+
+    cpus = default_parallelism()
+    spark = build_session(app_name="bench", master=f"local[{cpus}]")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    # Untimed warm-up: the same queries at sf0.001, then one limit-1 read
+    # per fixture (footer/codec init), then a 32-task mapInPandas that
+    # starts a Python worker per core, which the tiny pre-pass does not.
+    t0 = time.perf_counter()
+    _, warm_failures = run_queries(spark, items, warm_dir)
+    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        spark.read.parquet(p).limit(1).collect()
+    spark.range(0, 64, 1, 32).mapInPandas(lambda it: it, "id long").count()
+    warmup_sec = round(time.perf_counter() - t0, 3)
+
+    timings, failures = run_queries(spark, items, sf_dir)
+    failures = {**{f"warmup:{n}": e for n, e in warm_failures.items()}, **failures}
     total = round(sum(t for t in timings.values() if t >= 0), 3)
 
     if only:
@@ -230,6 +107,7 @@ def main() -> None:
                 "cpus": cpus,
                 "n_queries": len(timings),
                 "failures": failures,
+                "warmup_sec": warmup_sec,
             }
         )
         print(line)
@@ -286,6 +164,7 @@ def main() -> None:
         "cpus": cpus,
         "n_queries": len(timings),
         "failures": failures,
+        "warmup_sec": warmup_sec,
         "streaming_disk_probe_mb_s": disk_probe,
         **streaming,
         **sustained,

@@ -3,8 +3,10 @@
 The reference starts six queries and serially ``awaitTermination``s each
 (``/root/reference/src/spark_streaming.py:340-360``); the engine manages
 them as a named collection with per-query checkpoints (reference W5/W6
-semantics) and ``spark.streams.awaitAnyTermination`` so one failure
-surfaces immediately instead of being masked behind an earlier await.
+semantics). ``Topology.await_any`` waits on
+``spark.streams.awaitAnyTermination``, so one failure surfaces immediately
+instead of being masked behind an earlier await; ``Topology.await_all``
+waits for each query in turn under one shared deadline.
 
 ``run_available_now`` is the one-shot runner: process everything currently
 available and stop (Spark's ``trigger(availableNow=True)``) — the mechanism
@@ -34,19 +36,13 @@ __all__ = [
 # Spark's bundled RocksDB state store: spills streaming-aggregation state to
 # local disk instead of keeping it on the JVM heap. At 100 TB-scale state
 # (high-cardinality keys x long watermarks) the default HDFS-backed in-memory
-# provider OOMs executors; RocksDB bounds memory and survives far larger
-# per-partition state. Changelog checkpointing keeps recovery incremental.
-# Measured (r11+r12, SCALING.md "Streaming state at high key cardinality"):
-# the HDFS provider's heap bytes grow linearly with state rows (~270 B/row
-# at 300k; at 3M rows it holds 1.54 GB on-heap vs RocksDB's 72 MB — a
-# measured 21x divergence), and
-# at 3M rows the trades are no longer flat: hdfs is ~25% faster on
-# steady-state wall WHILE state fits the heap, RocksDB bounds memory at
-# a throughput cost, and changelog mode's recovery pays changelog replay
-# on top of the last snapshot (4.18 s vs 1.18 s plain at 3M rows) in
-# exchange for cheaper per-batch checkpoints — pick changelog for
-# checkpoint-bound pipelines with rare restarts, plain snapshots for
-# restart-latency-sensitive ones.
+# provider OOMs executors, because its heap grows linearly with state rows;
+# RocksDB bounds memory at a throughput cost. The HDFS provider stays faster
+# while state fits the heap. Changelog checkpointing makes each checkpoint
+# cheaper but makes recovery replay the changelog on top of the last
+# snapshot: pick it for checkpoint-bound pipelines with rare restarts, plain
+# snapshots for restart-latency-sensitive ones. Measurements: SCALING.md
+# "Streaming state at high key cardinality".
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -76,13 +72,11 @@ def default_state_partitions(spark: SparkSession, n_queries: int) -> int:
 
 @dataclass
 class StreamQuerySpec:
-    """One named streaming query: transformed DF + sink + mode."""
+    """One named streaming query: transformed DF + sink, in append mode."""
 
     name: str
     df: DataFrame
     sink: ForeachBatchSink | Callable[[DataFrame, int], None]
-    output_mode: str = "append"
-    trigger: dict | None = None  # e.g. {"processingTime": "10 seconds"}
 
 
 @dataclass
@@ -105,10 +99,9 @@ class Topology:
     # in the background — the knob that amortizes checkpoint upload cost
     # when state is large (the 100 TB question; recovery replays changelog
     # onto the last snapshot). None leaves Spark's default (off). Only
-    # meaningful with state_store="rocksdb". Through r4 this was
-    # hard-wired ON whenever rocksdb was selected; it is now an explicit
-    # knob so the bench can measure the provider and the checkpoint mode
-    # separately (VERDICT r4 #5).
+    # meaningful with state_store="rocksdb". It is separate from the
+    # provider so the two can be chosen and measured apart (SCALING.md
+    # "Streaming state at high key cardinality").
     changelog_checkpointing: bool | None = None
     # Shuffle/state partitions for the stateful operators
     # (``spark.sql.shuffle.partitions`` at first start, pinned into each
@@ -116,8 +109,8 @@ class Topology:
     # ``default_state_partitions(spark, len(specs))``. The session value is
     # restored at stop_all.
     state_partitions: int | None = None
-    # Fallback trigger for specs that don't set their own, e.g.
-    # {"processingTime": "10 seconds"} or {"availableNow": True}.
+    # Trigger for every query when start_all is not asked for availableNow,
+    # e.g. {"processingTime": "10 seconds"}; None is Spark's default.
     default_trigger: dict | None = None
     _queries: dict[str, StreamingQuery] = field(default_factory=dict)
     _prev_shuffle_partitions: str | None = field(default=None, repr=False)
@@ -173,7 +166,7 @@ class Topology:
         try:
             for spec in self.specs:
                 writer = (
-                    spec.df.writeStream.outputMode(spec.output_mode)
+                    spec.df.writeStream.outputMode("append")
                     .queryName(spec.name)
                     .option(
                         "checkpointLocation",
@@ -183,8 +176,8 @@ class Topology:
                 )
                 if available_now:
                     writer = writer.trigger(availableNow=True)
-                elif spec.trigger or self.default_trigger:
-                    writer = writer.trigger(**(spec.trigger or self.default_trigger))
+                elif self.default_trigger:
+                    writer = writer.trigger(**self.default_trigger)
                 self._queries[spec.name] = writer.start()
         except BaseException:
             # Queries already started keep the conf they started with (each

@@ -72,16 +72,12 @@ class JdbcSink(ForeachBatchSink):
 
 @dataclass
 class ParquetSink(ForeachBatchSink):
-    """Append micro-batches to a parquet directory, partitioned if asked."""
+    """Append micro-batches to a parquet directory."""
 
     path: str
-    partition_by: tuple[str, ...] = ()
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        writer = batch_df.write.mode("append")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.path)
+        batch_df.write.mode("append").parquet(self.path)
 
 
 class MemoryRowsSink(ForeachBatchSink):
@@ -132,10 +128,9 @@ def with_alert(
     sink: ForeachBatchSink,
     alerter: Alerter,
     subject: str,
-    body_fn: Callable[[int], str] | None = None,
-    min_count: int = 1,
 ) -> ForeachBatchSink:
-    """Wrap a sink with a count-predicate alert (reference Q2/Q3 shape).
+    """Wrap a sink with an alert that fires when the micro-batch has rows
+    (reference Q2/Q3 shape).
 
     The micro-batch is cached so the count action and the sink write share
     one computation of the filtered lineage (the reference recomputes it,
@@ -146,9 +141,8 @@ def with_alert(
         batch_df.persist()
         try:
             n = batch_df.count()
-            if n >= min_count:
-                body = body_fn(n) if body_fn else f"{n} matching rows in epoch {epoch_id}"
-                alerter.send(subject, body)
+            if n:
+                alerter.send(subject, f"{n} matching rows in epoch {epoch_id}")
             sink(batch_df, epoch_id)
         finally:
             batch_df.unpersist()

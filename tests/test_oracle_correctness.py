@@ -67,6 +67,8 @@ def test_raw_sql_views_rebind_across_scale_factors(spark):
         "sql_recursive_click_streak",
         "sql_api_revenue_summary",
         "sql_lateral_top_orders",
+        "grouping_sets_revenue",
+        "sql_groupby_all_daily_mix",
     ):
         problems = check_query(spark, name, SF_MED)
         assert not problems, f"{name}: " + "; ".join(problems)

@@ -2,14 +2,18 @@
 
 Each tool guards its ``main()``, so importing one runs nothing; a tool that
 still imports a removed helper or script fails here instead of at its next
-manual run. The merged plan dumper's per-query mode also runs end to end.
+manual run. The merged plan dumper's per-query mode also runs end to end,
+and the A/B bench runs each side in that side's own checkout.
 """
 
 from __future__ import annotations
 
 import glob
 import importlib
+import json
 import os
+import subprocess
+import sys
 
 from .conftest import SF_SMALL
 
@@ -37,3 +41,23 @@ def test_tools_import_and_dump_plans_per_query(spark, tmp_path, monkeypatch):
         "-- tpch_q1_pricing_summary (after) -- explain('formatted') at sf0.001"
     )
     assert "Physical Plan" in text and "Scan parquet" in text
+
+
+def test_ab_subset_runs_each_side_in_its_own_checkout(tmp_path, monkeypatch):
+    # Spark's Python workers import the package from the working directory,
+    # so a side run from the caller's directory would run the caller's code.
+    monkeypatch.syspath_prepend(TOOLS_DIR)
+    ab_subset = importlib.import_module("ab_subset")
+    b_dir = str(tmp_path / "baseline")
+    runs = []
+
+    def fake_run(cmd, **kwargs):
+        runs.append((os.path.dirname(cmd[-1]), kwargs.get("cwd")))
+        line = json.dumps({"queries": {"q": 1.0}, "failures": {}})
+        return subprocess.CompletedProcess(cmd, 0, stdout=line + "\n", stderr="")
+
+    monkeypatch.setattr(ab_subset.subprocess, "run", fake_run)
+    monkeypatch.setattr(sys, "argv", ["ab_subset.py", "q", "2", b_dir])
+    ab_subset.main()
+    assert [bench_dir for bench_dir, _ in runs] == [ab_subset.REPO, b_dir] * 2
+    assert all(cwd == bench_dir for bench_dir, cwd in runs)

@@ -1,19 +1,26 @@
-"""Alternating A/B subset bench: median-of-N per side (round-13 tooling).
+"""Alternating A/B subset bench: median-of-N per side.
 
 Runs ``bench.py`` in subset mode (``SPARK_GRAFT_BENCH_ONLY``) alternating
-between two checkouts — side A (this repo) and side B (a worktree of the
-baseline commit) — so ambient drift hits both sides equally, and reports
-the per-query median of each side plus the ratio. This is the adjudication
-regime OPTIMIZATION_r12.md used, packaged so every r13 A/B quotes the same
-methodology.
+between two checkouts — side A (this repo) and side B (a second checkout
+of the baseline commit) — so ambient drift hits both sides equally, and
+reports the per-query median of each side plus the ratio. Each side runs
+in its own checkout's directory: Spark's Python workers import the package
+from the working directory, not from the bench's ``sys.path``.
 
 Usage::
 
     python tools/ab_subset.py q1[,q2...] N_RUNS [B_DIR]
 
 With no ``B_DIR`` it just runs side A N_RUNS times (median-of-N probe).
-Each run is a fresh JVM with the bench's standard warm-ups; SF dir and CPU
-count come from the usual ``SPARK_GRAFT_SF_DIR`` / ``SPARK_GRAFT_CPUS``.
+Each run is a fresh JVM under the bench's own warm-up: the named queries
+run once, untimed, at sf0.001 before the timed pass. SF dir and CPU count
+come from the usual ``SPARK_GRAFT_SF_DIR`` / ``SPARK_GRAFT_CPUS``.
+
+Subset timings from a bench that still warmed up with hand-built kernel
+passes (before the sf0.001 pre-pass) are not comparable with later ones:
+a query's own pre-pass can leave its generated classes in Spark's codegen
+cache, so its timed run may be faster. Compare both sides under the same
+bench warm-up.
 """
 
 from __future__ import annotations
@@ -35,6 +42,7 @@ def run_once(bench_dir: str, queries: str) -> dict[str, float]:
     out = subprocess.run(
         [sys.executable, os.path.join(bench_dir, "bench.py")],
         env=env,
+        cwd=bench_dir,
         capture_output=True,
         text=True,
         timeout=1200,
