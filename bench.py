@@ -229,33 +229,25 @@ def _bench_streaming_topology(spark, sf_dir: str) -> dict:
         def noop_sink(batch_df, epoch_id):
             batch_df.write.format("noop").mode("overwrite").save()
 
-        # State partitions: the Topology default, each query's share of the
-        # cores (streaming.runner.default_state_partitions).
-        topo = Topology(spark, checkpoint_root=work + "/ckpt")
-        EventsTopologyBuilder(
-            events_stream=stream,
-            customer_dim=cat.customer,
-            sink_factory=lambda name: noop_sink,
-        ).build(topo)
-        t0 = time.perf_counter()
-        topo.start_all(available_now=True)
-        topo.await_all(timeout=300)
-        topo.stop_all()
-        wall = time.perf_counter() - t0
+        def run(ckpt: str, fanout_stateless: bool) -> float:
+            # State partitions: the Topology default, each query's share of
+            # the cores (streaming.runner.default_state_partitions).
+            topo = Topology(spark, checkpoint_root=f"{work}/{ckpt}")
+            EventsTopologyBuilder(
+                events_stream=stream,
+                customer_dim=cat.customer,
+                sink_factory=lambda name: noop_sink,
+            ).build(topo, fanout_stateless=fanout_stateless)
+            t0 = time.perf_counter()
+            topo.start_all(available_now=True)
+            topo.await_all(timeout=300)
+            topo.stop_all()
+            return time.perf_counter() - t0
 
+        wall = run("ckpt", fanout_stateless=False)
         # Fan-out variant: stateless routes share one source read (4 queries
         # instead of 6) — same sink contents, less ingest.
-        topo2 = Topology(spark, checkpoint_root=work + "/ckpt_fanout")
-        EventsTopologyBuilder(
-            events_stream=stream,
-            customer_dim=cat.customer,
-            sink_factory=lambda name: noop_sink,
-        ).build(topo2, fanout_stateless=True)
-        t1 = time.perf_counter()
-        topo2.start_all(available_now=True)
-        topo2.await_all(timeout=300)
-        topo2.stop_all()
-        wall_fanout = time.perf_counter() - t1
+        wall_fanout = run("ckpt_fanout", fanout_stateless=True)
 
         shutil.rmtree(work, ignore_errors=True)
         return {

@@ -20,6 +20,16 @@ though tests run on ``local[32]``):
   written with nanosecond timestamps (Spark's TimestampType is microseconds);
   the table catalog (:mod:`.sources.registry`) converts ns-longs to proper
   timestamps with the same truncation semantics DuckDB applies.
+- Streaming checkpoints on a local master commit through Spark's
+  ``FileSystemBasedCheckpointFileManager``. Spark's default FileContext
+  manager renames each temp file over its final name via
+  ``getFileLinkStatus``, which the local filesystem answers by spawning a
+  ``readlink`` process when no native Hadoop library is loaded (pyspark
+  ships none): 8 spawns per offset, commit, source-log entry and state
+  delta. A cluster master keeps the default, because on HDFS its
+  rename-with-overwrite is atomic, where the FileSystem manager keeps the
+  old file when it cannot overwrite (SCALING.md "Checkpoint I/O on a local
+  master").
 """
 
 from __future__ import annotations
@@ -29,6 +39,11 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["build_session", "default_parallelism"]
+
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def default_parallelism() -> int:
@@ -87,7 +102,14 @@ def build_session(
     if master:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cores}]")
+        master = f"local[{cores}]"
+        builder = builder.master(master)
+    # The same local test as streaming.runner.default_state_partitions.
+    if (master or os.environ["SPARK_MASTER"]).startswith("local"):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            _CHECKPOINT_FILE_MANAGER,
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -91,14 +91,14 @@ class Topology:
     checkpoint_root: str
     specs: list[StreamQuerySpec] = field(default_factory=list)
     # "rocksdb", "hdfs" (the default provider), or a provider class name.
-    # Applied to the session at start_all — the provider is read when a
-    # query starts and is pinned into its checkpoint thereafter.
+    # Set on the session from start_all to stop_all — the provider is read
+    # when a query starts and is pinned into its checkpoint thereafter.
     state_store: str | None = None
     # RocksDB changelog checkpointing: instead of uploading a full state
     # snapshot per checkpoint, upload the per-batch CHANGELOG and snapshot
     # in the background — the knob that amortizes checkpoint upload cost
     # when state is large (the 100 TB question; recovery replays changelog
-    # onto the last snapshot). None leaves Spark's default (off). Only
+    # onto the last snapshot). None leaves the session's value. Only
     # meaningful with state_store="rocksdb". It is separate from the
     # provider so the two can be chosen and measured apart (SCALING.md
     # "Streaming state at high key cardinality").
@@ -106,34 +106,43 @@ class Topology:
     # Shuffle/state partitions for the stateful operators
     # (``spark.sql.shuffle.partitions`` at first start, pinned into each
     # query's checkpoint thereafter). None pins
-    # ``default_state_partitions(spark, len(specs))``. The session value is
-    # restored at stop_all.
+    # ``default_state_partitions(spark, len(specs))``. Like the two state
+    # store confs, the session's value is back after stop_all.
     state_partitions: int | None = None
     # Trigger for every query when start_all is not asked for availableNow,
     # e.g. {"processingTime": "10 seconds"}; None is Spark's default.
     default_trigger: dict | None = None
     _queries: dict[str, StreamingQuery] = field(default_factory=dict)
-    _prev_shuffle_partitions: str | None = field(default=None, repr=False)
+    # The session's own value (None: unset) of each conf the topology pins,
+    # recorded at the first pin, put back by stop_all or a failed start_all.
+    _saved_conf: dict[str, str | None] = field(default_factory=dict, repr=False)
 
     def add(self, spec: StreamQuerySpec) -> "Topology":
         self.specs.append(spec)
         return self
 
+    def _pin_conf(self, key: str, value: str) -> None:
+        # Only the first pin records the session's value: a second
+        # start_all before stop_all must not save the topology's own.
+        if key not in self._saved_conf:
+            self._saved_conf[key] = self.spark.conf.get(key, None)
+        self.spark.conf.set(key, value)
+
+    def _restore_conf(self) -> None:
+        for key, value in self._saved_conf.items():
+            if value is None:
+                self.spark.conf.unset(key)
+            else:
+                self.spark.conf.set(key, value)
+        self._saved_conf.clear()
+
     def _apply_state_store(self) -> None:
-        changelog_key = (
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing"
-            ".enabled"
-        )
         if self.changelog_checkpointing is not None:
-            self.spark.conf.set(
-                changelog_key,
+            self._pin_conf(
+                "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing"
+                ".enabled",
                 "true" if self.changelog_checkpointing else "false",
             )
-        else:
-            # The conf is session-global and sticky: without this unset, a
-            # None topology would silently inherit whatever a prior topology
-            # set on the same session instead of Spark's default (ADVICE r5).
-            self.spark.conf.unset(changelog_key)
         if self.state_store is None:
             return
         provider = {
@@ -141,29 +150,15 @@ class Topology:
             "hdfs": "org.apache.spark.sql.execution.streaming."
             "state.HDFSBackedStateStoreProvider",
         }.get(self.state_store.lower(), self.state_store)
-        self.spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", provider
-        )
-
-    def _apply_state_partitions(self) -> None:
-        parts = self.state_partitions
-        if parts is None:
-            parts = default_state_partitions(self.spark, len(self.specs))
-        # Only the first start records the session's value: a second
-        # start_all before stop_all must not save the topology's own.
-        if self._prev_shuffle_partitions is None:
-            self._prev_shuffle_partitions = self.spark.conf.get(_SHUFFLE_PARTITIONS)
-        self.spark.conf.set(_SHUFFLE_PARTITIONS, str(parts))
-
-    def _restore_state_partitions(self) -> None:
-        if self._prev_shuffle_partitions is not None:
-            self.spark.conf.set(_SHUFFLE_PARTITIONS, self._prev_shuffle_partitions)
-            self._prev_shuffle_partitions = None
+        self._pin_conf("spark.sql.streaming.stateStore.providerClass", provider)
 
     def start_all(self, available_now: bool = False) -> dict[str, StreamingQuery]:
-        self._apply_state_store()
-        self._apply_state_partitions()
         try:
+            self._apply_state_store()
+            parts = self.state_partitions
+            if parts is None:
+                parts = default_state_partitions(self.spark, len(self.specs))
+            self._pin_conf(_SHUFFLE_PARTITIONS, str(parts))
             for spec in self.specs:
                 writer = (
                     spec.df.writeStream.outputMode("append")
@@ -182,7 +177,7 @@ class Topology:
         except BaseException:
             # Queries already started keep the conf they started with (each
             # runs on a clone of the session); stop_all still stops them.
-            self._restore_state_partitions()
+            self._restore_conf()
             raise
         return dict(self._queries)
 
@@ -202,7 +197,7 @@ class Topology:
         for q in self._queries.values():
             if q.isActive:
                 q.stop()
-        self._restore_state_partitions()
+        self._restore_conf()
 
 
 def run_available_now(

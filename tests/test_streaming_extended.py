@@ -618,6 +618,161 @@ def test_topology_await_all_shares_one_deadline(spark, tmp_path):
     assert 2 <= waited < 5
 
 
+def test_topology_restores_state_store_conf(spark, tmp_path):
+    """A rocksdb topology's provider and changelog confs last only from
+    start_all to stop_all: afterwards the session's provider is what it was,
+    so a later default topology runs on the default store, and a changelog
+    value the caller set survives a topology that sets none."""
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
+    changelog_key = (
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    )
+    prev = spark.conf.get(provider_key, None)
+    topo = Topology(
+        spark,
+        checkpoint_root=str(tmp_path / "ckpt"),
+        state_store="rocksdb",
+        changelog_checkpointing=True,
+    )
+    topo.start_all()
+    assert spark.conf.get(changelog_key) == "true"
+    topo.stop_all()
+    assert spark.conf.get(provider_key, None) == prev
+    assert spark.conf.get(changelog_key, None) is None
+
+    spark.conf.set(changelog_key, "true")
+    try:
+        topo = Topology(spark, checkpoint_root=str(tmp_path / "ckpt2"))
+        topo.start_all()
+        assert spark.conf.get(changelog_key) == "true"
+        topo.stop_all()
+        assert spark.conf.get(changelog_key) == "true"
+    finally:
+        spark.conf.unset(changelog_key)
+
+
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+FILESYSTEM_MANAGER = _CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
+FILECONTEXT_MANAGER = _CHECKPOINTING + "FileContextBasedCheckpointFileManager"
+
+
+def _file_manager(query) -> str:
+    """Class name of the checkpoint file manager a started query's offset
+    log writes through."""
+    jlog = query._jsq.streamingQuery().offsetLog()
+    return jlog.fileManager().getClass().getName()
+
+
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """On a local master the session commits checkpoint files through
+    Spark's FileSystem-based manager, which spawns no ``readlink`` process
+    per rename (session.py); a Spark that ignored the conf would fall back
+    to the FileContext manager."""
+    query = (
+        spark.readStream.format("rate").load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        assert _file_manager(query) == FILESYSTEM_MANAGER
+    finally:
+        query.stop()
+
+
+def test_build_session_checkpoint_manager_by_master(monkeypatch):
+    """Only a local master (the argument, else ``SPARK_MASTER``, else the
+    ``local[cores]`` default) gets the FileSystem manager; a cluster master
+    keeps Spark's default, and ``extra_conf`` still wins."""
+    from stream_processing_pipeline_spark import session as session_mod
+
+    class Builder:
+        def __init__(self):
+            self.conf, self.master_ = {}, None
+
+        def appName(self, name):
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def master(self, master):
+            self.master_ = master
+            return self
+
+        def getOrCreate(self):
+            return self
+
+    def build(**kw):
+        monkeypatch.setattr(session_mod, "SparkSession", SimpleNamespace(builder=Builder()))
+        return session_mod.build_session(**kw)
+
+    monkeypatch.delenv("SPARK_MASTER", raising=False)
+    b = build()
+    assert b.master_.startswith("local[")
+    assert b.conf[CHECKPOINT_MANAGER_KEY] == FILESYSTEM_MANAGER
+    assert build(master="local[2]").conf[CHECKPOINT_MANAGER_KEY] == FILESYSTEM_MANAGER
+    assert CHECKPOINT_MANAGER_KEY not in build(master="yarn").conf
+    assert build(master="yarn", extra_conf={CHECKPOINT_MANAGER_KEY: "x"}).conf[
+        CHECKPOINT_MANAGER_KEY
+    ] == "x"
+    monkeypatch.setenv("SPARK_MASTER", "spark://h:7077")
+    b = build()
+    assert b.master_ is None and CHECKPOINT_MANAGER_KEY not in b.conf
+    monkeypatch.setenv("SPARK_MASTER", "local[3]")
+    assert build().conf[CHECKPOINT_MANAGER_KEY] == FILESYSTEM_MANAGER
+
+
+def test_checkpoint_from_filecontext_manager_restarts(spark, tmp_path):
+    """A checkpoint written through Spark's default FileContext manager
+    restarts under the session's FileSystem manager and emits the same
+    windows as a run that was never interrupted."""
+    stream = _write_chunks(
+        spark, tmp_path / "in", [[_row(1, 0), _row(2, 10), _row(3, 70)], [_row(4, 200)]]
+    )
+    counts = (
+        stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", "60 minutes")
+        .groupBy(F.window("ts", "60 minutes").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("w.start").alias("start"), "n")
+    )
+
+    def run(checkpoint_root, sink) -> str:
+        topo = Topology(
+            spark,
+            checkpoint_root=str(checkpoint_root),
+            default_trigger={"availableNow": True},
+        )
+        topo.add(StreamQuerySpec("counts", counts, sink))
+        manager = _file_manager(topo.start_all()["counts"])
+        topo.await_all(timeout=120)
+        topo.stop_all()
+        return manager
+
+    restarted = MemoryRowsSink()
+    local_default = spark.conf.get(CHECKPOINT_MANAGER_KEY)
+    spark.conf.set(CHECKPOINT_MANAGER_KEY, FILECONTEXT_MANAGER)
+    try:
+        first = run(tmp_path / "ckpt", restarted)
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, local_default)
+    assert first == FILECONTEXT_MANAGER
+    assert len(list((tmp_path / "ckpt" / "counts" / "commits").glob("[0-9]*"))) >= 2
+    spark.createDataFrame([_row(5, 330)], EVENT_SCHEMA).coalesce(1).write.parquet(
+        str(tmp_path / "in" / "chunk=2")
+    )
+    assert run(tmp_path / "ckpt", restarted) == local_default == FILESYSTEM_MANAGER
+    whole = MemoryRowsSink()
+    run(tmp_path / "ckpt_whole", whole)
+
+    emitted = sorted((r.start, r.n) for r in restarted.rows)
+    assert emitted == sorted((r.start, r.n) for r in whole.rows)
+    assert len(emitted) == 3
+
+
 def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
     """Left-outer stream-stream join: purchases with no click in the prior
     30 minutes still emit — with NULL click columns — but only once the
