@@ -14,13 +14,21 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from stream_processing_pipeline_spark.plans import REGISTRY  # noqa: E402
 from stream_processing_pipeline_spark.session import build_session, default_parallelism  # noqa: E402
+from stream_processing_pipeline_spark.sources.memory import chunked_stream  # noqa: E402
+from stream_processing_pipeline_spark.sources.registry import TableCatalog  # noqa: E402
+from stream_processing_pipeline_spark.streaming import Topology, progress_digest  # noqa: E402
+from stream_processing_pipeline_spark.streaming.topology import EventsTopologyBuilder  # noqa: E402
 
 
 def run_queries(spark, items, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
@@ -96,67 +104,8 @@ def main() -> None:
     failures = {**{f"warmup:{n}": e for n, e in warm_failures.items()}, **failures}
     total = round(sum(t for t in timings.values() if t >= 0), 3)
 
-    if only:
-        line = json.dumps(
-            {
-                "metric": "subset_query_wall_seconds",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "cpus": cpus,
-                "n_queries": len(timings),
-                "failures": failures,
-                "warmup_sec": warmup_sec,
-            }
-        )
-        print(line)
-        out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
-        if out_path:
-            with open(out_path, "w") as fh:
-                fh.write(line + "\n")
-        spark.stop()
-        return
-
-    # Streaming-topology throughput: the reference's actual workload shape
-    # (six concurrent queries over an event stream). Chunk prep is outside
-    # the timed region; each sink fully materializes its micro-batches.
-    # Stabilize first: the topology runs right after the 100+-query batch
-    # sweep, whose garbage (shuffle files, JVM heap churn) otherwise bleeds
-    # GC pauses into the throughput figure (observed 60k vs 110k events/s
-    # run to run with identical code). The first topology run of a session
-    # also pays streaming-machinery class loading, so run once as warm-up
-    # and record the second run — steady-state throughput is the figure
-    # that scales, and it is reproducible within ~5% (vs 2x swings cold).
-    spark.sparkContext._jvm.System.gc()
-    time.sleep(2)
-    # Disk sentinel (VERDICT r6 #8): the sustained streaming figures swing
-    # up to 3x with ambient checkpoint-IO contention (BENCH_r06 recorded
-    # RocksDB 68k ev/s that a quiet-window re-run disproved at 177k). A
-    # fixed 64 MB fsync'd write probe timed here lets any reader normalize
-    # the streaming numbers for the machine's IO state at measurement time
-    # (measured quiet band on this machine: ~80-320 MB/s over repeated
-    # probes; a probe far below the band flags an ambient-IO window, not a
-    # code regression — normalize before calling a streaming delta real).
-    disk_probe = _disk_write_probe_mb_s()
-    _bench_streaming_topology(spark, sf_dir)
-    streaming = _bench_streaming_topology(spark, sf_dir)
-    sustained = _bench_streaming_sustained(spark, sf_dir)
-    sustained_rocks = _bench_streaming_sustained(
-        spark, sf_dir, state_store="rocksdb", changelog=False,
-        prefix="streaming_sustained_rocksdb",
-    )
-    # Third variant (VERDICT r4 #5): RocksDB + changelog checkpointing —
-    # per-batch changelog upload instead of full snapshots, the mode that
-    # amortizes checkpoint cost at 100 TB state. Same workload, so the
-    # state-row eviction traces must match the other two providers'.
-    sustained_rocks_cl = _bench_streaming_sustained(
-        spark, sf_dir, state_store="rocksdb", changelog=True,
-        prefix="streaming_sustained_rocksdb_changelog",
-    )
-
     out = {
-        "metric": "total_query_wall_seconds",
+        "metric": "subset_query_wall_seconds" if only else "total_query_wall_seconds",
         "value": total,
         "unit": "sec",
         "queries": timings,
@@ -165,23 +114,70 @@ def main() -> None:
         "n_queries": len(timings),
         "failures": failures,
         "warmup_sec": warmup_sec,
-        "streaming_disk_probe_mb_s": disk_probe,
-        **streaming,
-        **sustained,
-        **sustained_rocks,
-        **sustained_rocks_cl,
     }
+    if not only:
+        out.update(_bench_streaming(spark, sf_dir))
     line = json.dumps(out)
     print(line)
-    # VERDICT r7 #4: the external driver preserves only a 2000-char tail of
-    # this line, which loses most per-query timings and forces cross-round
-    # attribution to be reconstructed from prose. Persist the COMPLETE
-    # output when asked so BENCH_LOCAL_r<N>.json can be committed in-repo.
+    # A reader that keeps only the tail of this line loses most per-query
+    # timings; persist the COMPLETE output when asked so BENCH_LOCAL_r<N>.json
+    # can be committed in-repo.
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
     if out_path:
         with open(out_path, "w") as fh:
             fh.write(line + "\n")
     spark.stop()
+
+
+def _bench_streaming(spark, sf_dir: str) -> dict:
+    """Streaming-topology throughput, the reference's actual workload shape
+    (six concurrent queries over an event stream): the bench-line fields of
+    every run in ``STREAM_RUNS``, each with its ``<prefix>_progress`` digest.
+
+    Stabilize first: the topology runs right after the batch sweep, whose
+    garbage (shuffle files, JVM heap churn) otherwise bleeds GC pauses into
+    the throughput figure (observed 60k vs 110k events/s run to run with
+    identical code). The first topology run of a session also pays
+    streaming-machinery class loading, so one untimed base run goes first:
+    steady-state throughput is the figure that scales, and it is
+    reproducible within ~5% (vs 2x swings cold)."""
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(2)
+    # Disk sentinel: the sustained streaming figures swing up to 3x with
+    # ambient checkpoint-IO contention (one run recorded RocksDB at 68k ev/s
+    # that a quiet-window re-run put at 177k). A fixed 64 MB fsync'd write
+    # probe timed here lets any reader normalize the streaming numbers for
+    # the machine's IO state at measurement time. The quiet reading depends
+    # on the host (80-320 MB/s on one, ~1,250 on another): a probe far below
+    # the same host's earlier probes flags an ambient-IO window, not a code
+    # regression — normalize before calling a streaming delta real.
+    out = {"streaming_disk_probe_mb_s": _disk_write_probe_mb_s()}
+    try:
+        _stream_run(spark, sf_dir)
+    except Exception as e:  # never break the bench line
+        out["streaming_warmup_error"] = f"{type(e).__name__}: {e}"[:200]
+    for prefix, stem, kw in STREAM_RUNS:
+        try:
+            wall, n_events, digest = _stream_run(spark, sf_dir, **kw)
+        except Exception as e:  # never break the bench line
+            out[f"{stem}_error"] = f"{type(e).__name__}: {e}"[:200]
+            continue
+        out.update(
+            {
+                f"{prefix}_events": n_events,
+                f"{stem}_sec": round(wall, 3),
+                # Six logical queries each consume the full stream, also
+                # when the fan-out delivers them with fewer source reads.
+                f"{prefix}_events_per_sec": round(6 * n_events / wall),
+                f"{prefix}_state_rows": {
+                    name: {k: d["state"][k] for k in ("batches", "max", "last", "removed")}
+                    for name, d in digest.items()
+                    if "state" in d
+                },
+                f"{prefix}_progress": digest,
+            }
+        )
+    return out
 
 
 def _disk_write_probe_mb_s(total_mb: int = 64, chunk_mb: int = 4) -> float:
@@ -208,125 +204,79 @@ def _disk_write_probe_mb_s(total_mb: int = 64, chunk_mb: int = 4) -> float:
         return -1.0
 
 
-def _bench_streaming_topology(spark, sf_dir: str) -> dict:
-    import shutil
-    import tempfile
-
-    try:
-        from stream_processing_pipeline_spark.sources.memory import chunked_stream
-        from stream_processing_pipeline_spark.sources.registry import TableCatalog
-        from stream_processing_pipeline_spark.streaming import Topology
-        from stream_processing_pipeline_spark.streaming.topology import (
-            EventsTopologyBuilder,
-        )
-
-        work = tempfile.mkdtemp(prefix="bench_stream_")
-        cat = TableCatalog(spark, sf_dir, register_views=False)
-        ev = cat.events.orderBy("ts")
-        n_events = ev.count()
-        stream = chunked_stream(spark, ev, work + "/chunks", n_chunks=4)
-
-        def noop_sink(batch_df, epoch_id):
-            batch_df.write.format("noop").mode("overwrite").save()
-
-        def run(ckpt: str, fanout_stateless: bool) -> float:
-            # State partitions: the Topology default, each query's share of
-            # the cores (streaming.runner.default_state_partitions).
-            topo = Topology(spark, checkpoint_root=f"{work}/{ckpt}")
-            EventsTopologyBuilder(
-                events_stream=stream,
-                customer_dim=cat.customer,
-                sink_factory=lambda name: noop_sink,
-            ).build(topo, fanout_stateless=fanout_stateless)
-            t0 = time.perf_counter()
-            topo.start_all(available_now=True)
-            topo.await_all(timeout=300)
-            topo.stop_all()
-            return time.perf_counter() - t0
-
-        wall = run("ckpt", fanout_stateless=False)
-        # Fan-out variant: stateless routes share one source read (4 queries
-        # instead of 6) — same sink contents, less ingest.
-        wall_fanout = run("ckpt_fanout", fanout_stateless=True)
-
-        shutil.rmtree(work, ignore_errors=True)
-        return {
-            "streaming_topology_sec": round(wall, 3),
-            # 6 concurrent queries each consume the full stream.
-            "streaming_events_per_sec": round(6 * n_events / wall),
-            "streaming_fanout_topology_sec": round(wall_fanout, 3),
-            # same logical work delivered by 4 queries / 4 source reads
-            "streaming_fanout_events_per_sec": round(6 * n_events / wall_fanout),
-        }
-    except Exception as e:  # never break the bench line
-        return {"streaming_topology_error": f"{type(e).__name__}: {e}"[:200]}
+# The timed streaming runs: (field prefix, stem of the wall-time and error
+# fields, _stream_run arguments).
+_SUSTAINED = {"replicas": 3, "n_chunks": 12, "fanout_stateless": True}
+STREAM_RUNS = [
+    ("streaming", "streaming_topology", {}),
+    # Stateless routes share one source read (4 queries instead of 6): same
+    # sink contents, less ingest.
+    ("streaming_fanout", "streaming_fanout_topology", {"fanout_stateless": True}),
+    ("streaming_sustained", "streaming_sustained", _SUSTAINED),
+    # Spark's bundled RocksDB provider, the production choice for large
+    # state (it spills to local disk instead of the JVM heap).
+    (
+        "streaming_sustained_rocksdb",
+        "streaming_sustained_rocksdb",
+        {**_SUSTAINED, "state_store": "rocksdb", "changelog": False},
+    ),
+    # RocksDB + changelog checkpointing: per-batch changelog upload instead
+    # of full snapshots, the mode that amortizes checkpoint cost for large
+    # state. Same workload, so the state-row eviction traces must match the
+    # other two providers'.
+    (
+        "streaming_sustained_rocksdb_changelog",
+        "streaming_sustained_rocksdb_changelog",
+        {**_SUSTAINED, "state_store": "rocksdb", "changelog": True},
+    ),
+]
 
 
-def _bench_streaming_sustained(
+def _noop_sink(batch_df, epoch_id):
+    batch_df.write.format("noop").mode("overwrite").save()
+
+
+def _stream_run(
     spark,
     sf_dir: str,
-    replicas: int = 3,
-    n_chunks: int = 12,
+    replicas: int = 1,
+    n_chunks: int = 4,
+    fanout_stateless: bool = False,
     state_store: str | None = None,
     changelog: bool | None = None,
-    prefix: str = "streaming_sustained",
-) -> dict:
-    """Sustained-rate run at ``replicas``x the event volume: time-shifted
-    event replicas replayed as ``n_chunks`` one-file micro-batches (same
-    per-batch size as the base topology run, 3x the batches), through the
-    fan-out topology. Alongside throughput it records the state-store row
-    counts of each windowed aggregation per micro-batch
-    (``stateOperators.numRowsTotal`` / ``numRowsRemoved``): event-time keeps
-    advancing across the replicas, so the 60-minute watermark must keep
-    evicting closed windows and the per-batch state footprint must stay
-    FLAT — the property that lets the same topology run forever at 100 TB
-    (state ~ open windows x keys, never ~ events seen).
+) -> tuple[float, int, dict]:
+    """One availableNow drain of the reference topology into no-op sinks.
 
-    ``state_store="rocksdb"`` repeats the run on Spark's bundled RocksDB
-    provider — the 100 TB production choice (state spills to local disk
-    instead of the JVM heap) — so BENCH records both providers' throughput
-    and eviction behavior side by side (VERDICT r3 "Next round" #6)."""
-    import json as _json
-    import shutil
-    import tempfile
+    The events are replayed in event-time order as ``n_chunks`` one-file
+    micro-batches; chunk preparation is outside the timed region.
+    ``replicas`` > 1 appends time-shifted copies of the events (the sustained
+    runs: 3 replicas in 12 chunks, the base run's batch size and 3x its
+    batches). Event time then keeps advancing, so the 60-minute watermark
+    must keep evicting closed windows and the per-batch state footprint
+    stays flat — state tracks open windows x keys, never events seen.
 
+    Returns the wall seconds from start to stop, the event count and
+    ``observe.progress_digest`` of the run's queries."""
+    work = tempfile.mkdtemp(prefix="bench_stream_")
     try:
-        from pyspark.sql import functions as F
-
-        from stream_processing_pipeline_spark.sources.memory import chunked_stream
-        from stream_processing_pipeline_spark.sources.registry import TableCatalog
-        from stream_processing_pipeline_spark.streaming import Topology
-        from stream_processing_pipeline_spark.streaming.topology import (
-            EventsTopologyBuilder,
-        )
-
-        work = tempfile.mkdtemp(prefix="bench_sustained_")
         cat = TableCatalog(spark, sf_dir, register_views=False)
         ev = cat.events
         # The fixture spans ~30 days; shift each replica past the previous
-        # one so event-time is monotone over the whole run and the watermark
-        # keeps moving (stalled event-time would never evict anything).
-        reps = [
-            ev.select(
-                (F.col("event_id") + F.lit(r * 10**12)).alias("event_id"),
-                F.expr(f"ts + INTERVAL {30 * r} DAYS").alias("ts"),
-                "user_id",
-                "event_type",
-                "value",
-                "props",
+        # one so event time is monotone over the whole run.
+        for r in range(1, replicas):
+            ev = ev.unionByName(
+                cat.events.select(
+                    (F.col("event_id") + F.lit(r * 10**12)).alias("event_id"),
+                    F.expr(f"ts + INTERVAL {30 * r} DAYS").alias("ts"),
+                    "user_id",
+                    "event_type",
+                    "value",
+                    "props",
+                )
             )
-            for r in range(replicas)
-        ]
-        big = reps[0]
-        for x in reps[1:]:
-            big = big.unionByName(x)
-        big = big.orderBy("ts")
-        n_events = big.count()
-        stream = chunked_stream(spark, big, work + "/chunks", n_chunks=n_chunks)
-
-        def noop_sink(batch_df, epoch_id):
-            batch_df.write.format("noop").mode("overwrite").save()
-
+        ev = ev.orderBy("ts")
+        n_events = ev.count()
+        stream = chunked_stream(spark, ev, work + "/chunks", n_chunks=n_chunks)
         topo = Topology(
             spark,
             checkpoint_root=work + "/ckpt",
@@ -336,50 +286,18 @@ def _bench_streaming_sustained(
         EventsTopologyBuilder(
             events_stream=stream,
             customer_dim=cat.customer,
-            sink_factory=lambda name: noop_sink,
-        ).build(topo, fanout_stateless=True)
+            sink_factory=lambda name: _noop_sink,
+        ).build(topo, fanout_stateless=fanout_stateless)
         t0 = time.perf_counter()
-        queries = topo.start_all(available_now=True)
-        topo.await_all(timeout=600)
-        state: dict[str, dict] = {}
-        for name in (
-            "avg_value_per_hour",
-            "event_counts_per_hour",
-            "counts_by_segment",
-        ):
-            progresses = [
-                _json.loads(p.json) if hasattr(p, "json") else p
-                for p in queries[name].recentProgress
-            ]
-            rows = [
-                op["numRowsTotal"]
-                for p in progresses
-                for op in p.get("stateOperators", [])
-            ]
-            removed = sum(
-                op.get("numRowsRemoved") or 0
-                for p in progresses
-                for op in p.get("stateOperators", [])
-            )
-            if rows:
-                state[name] = {
-                    "batches": len(rows),
-                    "max": max(rows),
-                    "last": rows[-1],
-                    "removed": removed,
-                }
-        topo.stop_all()
+        try:
+            queries = topo.start_all(available_now=True)
+            topo.await_all(timeout=600)
+        finally:
+            topo.stop_all()  # a failed run must not leave queries running
         wall = time.perf_counter() - t0
+        return wall, n_events, progress_digest(queries)
+    finally:
         shutil.rmtree(work, ignore_errors=True)
-        return {
-            f"{prefix}_events": n_events,
-            f"{prefix}_sec": round(wall, 3),
-            # same 6-logical-queries convention as the base topology figure
-            f"{prefix}_events_per_sec": round(6 * n_events / wall),
-            f"{prefix}_state_rows": state,
-        }
-    except Exception as e:  # never break the bench line
-        return {f"{prefix}_error": f"{type(e).__name__}: {e}"[:200]}
 
 
 if __name__ == "__main__":

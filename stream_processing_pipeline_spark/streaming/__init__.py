@@ -18,10 +18,13 @@ package generalizes that into:
   topology over an events stream
 - :mod:`.stateful` — Spark 4 ``transformWithStateInPandas`` processors
   (typed state handles; runtime-gated on ``google.protobuf``)
+- :mod:`.observe` — in-plan observed metrics and ``progress_digest``, the
+  one reader of the queries' progress records (trigger phases, state
+  rows, commit time and memory, observed metrics)
 """
 
 from .alerts import Alerter, CallbackAlerter, EmailAlerter, LogAlerter
-from .observe import BatchMetrics, MetricsRecorder, with_observed_metrics
+from .observe import progress_digest, with_observed_metrics
 from .runner import ROCKSDB_PROVIDER, StreamQuerySpec, Topology, run_available_now
 from .stateful import (
     HAS_TWS_RUNTIME,
@@ -45,8 +48,7 @@ from .sinks import (
 )
 
 __all__ = [
-    "BatchMetrics",
-    "MetricsRecorder",
+    "progress_digest",
     "with_observed_metrics",
     "Alerter",
     "LogAlerter",

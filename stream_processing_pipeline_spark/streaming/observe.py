@@ -1,4 +1,4 @@
-"""Streaming observability: ``df.observe()`` metrics + a progress listener.
+"""Streaming observability: ``df.observe()`` metrics + a progress digest.
 
 The reference pipeline has no monitoring at all (alerts are its only
 signal); a production topology needs per-batch throughput/quality counters
@@ -9,8 +9,11 @@ them through ``StreamingQueryProgress``; this module wires the two ends:
 
 - :func:`with_observed_metrics` attaches a standard metric set (row count,
   null-key count, exact value cents) to any streaming DataFrame.
-- :class:`MetricsRecorder` is a ``StreamingQueryListener`` that collects the
-  observed metrics per (query, batch) for dashboards/tests.
+- :func:`progress_digest` folds each query's retained progress records
+  (``recentProgress``) into one summary: triggers and input rows, the
+  trigger phases, state-store rows, commit time and memory, and the
+  observed metrics. It is the package's one reader of
+  ``StreamingQueryProgress``.
 
 Cited reference gap: ``/root/reference/src/spark_streaming.py`` logs nothing
 per batch; the operator-count alerting it does have is covered by
@@ -19,16 +22,27 @@ per batch; the operator-count alerting it does have is covered by
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from threading import Lock
+from collections.abc import Mapping
+from statistics import median
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.money import cents
 
-__all__ = ["with_observed_metrics", "MetricsRecorder", "BatchMetrics"]
+__all__ = ["with_observed_metrics", "progress_digest", "PHASES"]
+
+# The ``durationMs`` phases of a micro-batch trigger.
+PHASES = (
+    "addBatch",
+    "queryPlanning",
+    "walCommit",
+    "commitOffsets",
+    "latestOffset",
+    "getBatch",
+    "triggerExecution",
+)
 
 
 def with_observed_metrics(
@@ -48,58 +62,62 @@ def with_observed_metrics(
     )
 
 
-@dataclass
-class BatchMetrics:
-    query_name: str
-    batch_id: int
-    metrics: dict
+def progress_digest(queries: Mapping[str, StreamingQuery]) -> dict[str, dict]:
+    """Fold each query's ``recentProgress`` into a per-query digest.
+
+    Read it once the queries have ended: ``recentProgress`` is complete when
+    ``awaitTermination`` returns, and it holds the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` triggers (default 100).
+    Each digest holds:
+
+    - ``triggers``, ``data_triggers`` (triggers with input rows) and
+      ``input_rows``;
+    - ``phases_ms``: median and max of each of :data:`PHASES` over the
+      triggers with data (0 when there were none);
+    - ``state``, for queries with state operators only: ``batches`` (one
+      per operator per trigger), ``max`` and ``last`` rows in state,
+      ``removed`` and ``dropped_by_watermark`` rows summed over triggers,
+      ``commit_ms_median`` over the triggers with data and
+      ``memory_bytes_max``;
+    - ``observed``: each observation's metrics summed over triggers.
+    """
+    return {name: _digest(q.recentProgress) for name, q in queries.items()}
 
 
-@dataclass
-class MetricsRecorder(StreamingQueryListener):
-    """Collects observed-metric rows from streaming progress events.
+def _digest(progresses: list) -> dict:
+    data = [p for p in progresses if p["numInputRows"]]
+    out: dict = {
+        "triggers": len(progresses),
+        "data_triggers": len(data),
+        "input_rows": sum(p["numInputRows"] for p in data),
+        "phases_ms": {k: _median_max([p["durationMs"].get(k, 0) for p in data]) for k in PHASES},
+    }
+    ops = [op for p in progresses for op in p["stateOperators"]]
+    if ops:
+        out["state"] = {
+            "batches": len(ops),
+            "max": max(op["numRowsTotal"] for op in ops),
+            "last": ops[-1]["numRowsTotal"],
+            "removed": sum(op["numRowsRemoved"] for op in ops),
+            "dropped_by_watermark": sum(op["numRowsDroppedByWatermark"] for op in ops),
+            "commit_ms_median": _median(
+                [op["commitTimeMs"] for p in data for op in p["stateOperators"]]
+            ),
+            "memory_bytes_max": max(op["memoryUsedBytes"] for op in ops),
+        }
+    observed: dict[str, dict] = {}
+    for p in progresses:
+        for obs_name, row in p["observedMetrics"].items():
+            totals = observed.setdefault(obs_name, {})
+            for k, v in row.asDict().items():
+                totals[k] = totals.get(k, 0) + (v or 0)
+    out["observed"] = observed
+    return out
 
-    Thread-safe (listener callbacks arrive on Spark's listener bus thread);
-    register with ``spark.streams.addListener(recorder)`` and read
-    ``recorder.batches`` after/while queries run."""
 
-    batches: list[BatchMetrics] = field(default_factory=list)
-    _lock: Lock = field(default_factory=Lock, repr=False)
+def _median(xs: list) -> float:
+    return median(xs) if xs else 0
 
-    def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API names)
-        pass
 
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        progress = event.progress
-        observed = progress.observedMetrics or {}
-        if not observed:
-            return
-        with self._lock:
-            for obs_name, row in observed.items():
-                self.batches.append(
-                    BatchMetrics(
-                        query_name=progress.name or obs_name,
-                        batch_id=progress.batchId,
-                        metrics=row.asDict(),
-                    )
-                )
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
-
-    def totals(self) -> dict[str, dict]:
-        """Roll up per-query totals across recorded batches."""
-        out: dict[str, dict] = {}
-        with self._lock:
-            for b in self.batches:
-                t = out.setdefault(
-                    b.query_name, {"n_rows": 0, "null_keys": 0, "value_cents": 0}
-                )
-                for k in t:
-                    v = b.metrics.get(k)
-                    if v is not None:
-                        t[k] += v
-        return out
+def _median_max(xs: list) -> dict:
+    return {"median": _median(xs), "max": max(xs, default=0)}

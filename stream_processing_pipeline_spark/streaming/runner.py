@@ -206,8 +206,11 @@ def run_available_now(
     checkpoint: str,
     output_mode: str = "append",
     timeout_sec: float = 300.0,
-) -> None:
-    """Process all currently-available input through ``sink`` and stop."""
+) -> StreamingQuery:
+    """Process all currently-available input through ``sink`` and stop.
+
+    Returns the ended query, whose progress ``observe.progress_digest``
+    reads."""
     query = (
         df.writeStream.outputMode(output_mode)
         .option("checkpointLocation", checkpoint)
@@ -219,3 +222,4 @@ def run_available_now(
     if query.isActive:  # pragma: no cover - defensive stop on timeout
         query.stop()
         raise TimeoutError(f"streaming query did not finish in {timeout_sec}s")
+    return query

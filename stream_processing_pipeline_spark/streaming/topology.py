@@ -102,7 +102,7 @@ class EventsTopologyBuilder:
     alerter: Alerter | None = None
     # Attach in-plan observed ingest metrics (rows, null keys, exact value
     # cents) to the shared source lineage; every query then reports them per
-    # batch via StreamingQueryProgress (collect with observe.MetricsRecorder).
+    # batch via StreamingQueryProgress (read with observe.progress_digest).
     # Zero extra scans — the aggregates ride the existing pass.
     observe_metrics: bool = False
     sinks: dict[str, ForeachBatchSink] = field(default_factory=dict)

@@ -8,6 +8,7 @@ chunked file-source replay with ``trigger(availableNow=True)``, and pin:
 - watermark late-data dropping
 - alert hooks firing from foreachBatch
 - the full six-query topology starting, processing, stopping
+- the per-query progress digest of a topology run
 """
 
 from __future__ import annotations
@@ -35,9 +36,11 @@ from stream_processing_pipeline_spark.streaming import (
     ParquetSink,
     StreamQuerySpec,
     Topology,
+    progress_digest,
     run_available_now,
     with_alert,
 )
+from stream_processing_pipeline_spark.streaming.observe import PHASES
 from stream_processing_pipeline_spark.streaming.topology import EventsTopologyBuilder
 
 from .conftest import SF_SMALL
@@ -280,43 +283,75 @@ def test_fanout_topology_equivalence(spark, tmp_path):
 
 def test_topology_observed_ingest_metrics(spark, tmp_path):
     """observe_metrics=True surfaces per-batch ingest counters from every
-    query of the topology through the listener — each query re-reads the
-    source (Structured Streaming's model), so per-query ingest totals each
-    equal the event count, giving per-consumer lag/health visibility with
-    zero extra scans."""
-    import time
-
-    from stream_processing_pipeline_spark.streaming.observe import MetricsRecorder
-
+    query of the topology through its progress records — each query
+    re-reads the source (Structured Streaming's model), so per-query ingest
+    totals each equal the event count, giving per-consumer lag/health
+    visibility with zero extra scans."""
     cat = TableCatalog(spark, SF_SMALL, register_views=False)
     ev = cat.events.orderBy("ts")
     stream = chunked_stream(spark, ev, str(tmp_path / "chunks"), n_chunks=2)
 
-    recorder = MetricsRecorder()
-    spark.streams.addListener(recorder)
-    try:
-        topo = Topology(spark, checkpoint_root=str(tmp_path / "ckpt"))
-        EventsTopologyBuilder(
-            events_stream=stream,
-            customer_dim=cat.customer,
-            sink_factory=lambda name: MemoryRowsSink(),
-            observe_metrics=True,
-        ).build(topo)
-        topo.start_all(available_now=True)
-        topo.await_all(timeout=240)
-        topo.stop_all()
-        n = ev.count()
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            totals = recorder.totals()
-            if len(totals) == 6 and all(t["n_rows"] == n for t in totals.values()):
-                break
-            time.sleep(0.5)
-    finally:
-        spark.streams.removeListener(recorder)
+    topo = Topology(spark, checkpoint_root=str(tmp_path / "ckpt"))
+    EventsTopologyBuilder(
+        events_stream=stream,
+        customer_dim=cat.customer,
+        sink_factory=lambda name: MemoryRowsSink(),
+        observe_metrics=True,
+    ).build(topo)
+    queries = topo.start_all(available_now=True)
+    topo.await_all(timeout=240)
+    topo.stop_all()
+    n = ev.count()
 
-    totals = recorder.totals()
+    totals = {
+        q: d["observed"]["ingest"]
+        for q, d in progress_digest(queries).items()
+        if "ingest" in d["observed"]
+    }
     assert len(totals) == 6, totals  # every query reported ingest metrics
     for qname, t in totals.items():
         assert t["n_rows"] == n, (qname, t)
         assert t["null_keys"] == 0, (qname, t)
+
+
+def test_topology_progress_digest(spark, tmp_path):
+    """A two-batch run of the six-query topology, digested: every query read
+    every event in two data triggers, every trigger phase is reported, the
+    stateful queries' state block agrees with a hand walk of their
+    ``recentProgress``, and the stateless queries carry none."""
+    stateful = {"avg_value_per_hour", "event_counts_per_hour", "counts_by_segment"}
+    cat = TableCatalog(spark, SF_SMALL, register_views=False)
+    ev = cat.events.orderBy("ts")
+    stream = chunked_stream(spark, ev, str(tmp_path / "chunks"), n_chunks=2)
+    topo = Topology(spark, checkpoint_root=str(tmp_path / "ckpt"))
+    EventsTopologyBuilder(
+        events_stream=stream,
+        customer_dim=cat.customer,
+        sink_factory=lambda name: MemoryRowsSink(),
+    ).build(topo)
+    queries = topo.start_all(available_now=True)
+    topo.await_all(timeout=240)
+    topo.stop_all()
+    n = ev.count()
+
+    digest = progress_digest(queries)
+    assert set(digest) == set(queries) and len(digest) == 6
+    for name, d in digest.items():
+        assert d["input_rows"] == n, (name, d)
+        assert d["data_triggers"] == 2 and d["triggers"] >= 2, (name, d)
+        assert set(d["phases_ms"]) == set(PHASES), name
+        for phase in d["phases_ms"].values():
+            assert 0 <= phase["median"] <= phase["max"], (name, d)
+        assert d["phases_ms"]["triggerExecution"]["max"] > 0, (name, d)
+        assert d["observed"] == {}, name  # observe_metrics is off
+        if name not in stateful:
+            assert "state" not in d, (name, d)
+            continue
+        ops = [op for p in queries[name].recentProgress for op in p["stateOperators"]]
+        assert ops, name
+        state = d["state"]
+        assert state["batches"] == len(ops)
+        assert state["max"] == max(op["numRowsTotal"] for op in ops) > 0
+        assert state["last"] == ops[-1]["numRowsTotal"]
+        assert state["removed"] == sum(op["numRowsRemoved"] for op in ops)
+        assert state["memory_bytes_max"] > 0

@@ -372,19 +372,18 @@ def test_complete_mode_running_totals(spark, tmp_path):
 
 def test_observed_metrics_match_batch_truth(spark, tmp_path):
     """df.observe() metrics piggyback on the streaming plan (no extra scan)
-    and surface per-batch through the listener; their roll-up must equal the
-    batch ground truth exactly — count, null-key canary, and the
-    order-independent integer-cents value sum."""
-    import time
-
+    and surface per-batch through the query's progress records; their
+    roll-up must equal the batch ground truth exactly — count, null-key
+    canary, and the order-independent integer-cents value sum."""
     from pyspark.sql import functions as F
 
     from stream_processing_pipeline_spark.functions.money import cents
     from stream_processing_pipeline_spark.sources.memory import chunked_stream
     from stream_processing_pipeline_spark.sources.registry import TableCatalog
-    from stream_processing_pipeline_spark.streaming import MemoryRowsSink, run_available_now
-    from stream_processing_pipeline_spark.streaming.observe import (
-        MetricsRecorder,
+    from stream_processing_pipeline_spark.streaming import (
+        MemoryRowsSink,
+        progress_digest,
+        run_available_now,
         with_observed_metrics,
     )
 
@@ -395,30 +394,20 @@ def test_observed_metrics_match_batch_truth(spark, tmp_path):
         F.count(F.lit(1)).alias("n"), F.sum(cents("value")).alias("c")
     ).first()
 
-    recorder = MetricsRecorder()
-    spark.streams.addListener(recorder)
-    try:
-        stream = chunked_stream(spark, events, str(tmp_path / "chunks"), n_chunks=3)
-        observed = with_observed_metrics(stream, name="ev_metrics")
-        sink = MemoryRowsSink()
-        run_available_now(observed, sink, str(tmp_path / "ckpt"))
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            totals = recorder.totals()
-            if totals and sum(t["n_rows"] for t in totals.values()) >= truth.n:
-                break
-            time.sleep(0.5)
-    finally:
-        spark.streams.removeListener(recorder)
+    stream = chunked_stream(spark, events, str(tmp_path / "chunks"), n_chunks=3)
+    observed = with_observed_metrics(stream, name="ev_metrics")
+    sink = MemoryRowsSink()
+    query = run_available_now(observed, sink, str(tmp_path / "ckpt"))
+    digest = progress_digest({"observed": query})["observed"]
 
-    totals = recorder.totals()
+    totals = digest["observed"]
     assert totals, "no observed metrics arrived"
     agg = {k: sum(t[k] for t in totals.values()) for k in ("n_rows", "null_keys", "value_cents")}
     assert agg["n_rows"] == truth.n
     assert agg["null_keys"] == 0
     assert agg["value_cents"] == truth.c
     # more than one batch contributed (the stream really was chunked)
-    assert len({(b.query_name, b.batch_id) for b in recorder.batches}) >= 2
+    assert digest["data_triggers"] >= 2
 
 
 def _offset_partitions(checkpoint) -> dict[int, str]:
