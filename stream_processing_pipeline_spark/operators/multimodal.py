@@ -28,8 +28,8 @@ containers) are honest
 in PIL/ffmpeg by passing ``decoder=`` without touching the pipeline
 shape, batch flow, or schema.
 
-Throughput boundary (measured, ``tools/codec_throughput_probe.py``,
-SCALING.md r8): the pure-Python decoders are verification-grade, not
+Throughput boundary (measured; SCALING.md "Pure-Python codec throughput
+boundary"): the pure-Python decoders are verification-grade, not
 throughput-grade — ~5 MB/s/core (~1.7 MP/s) for :func:`parse_png` and
 ~0.8 MP/s/core (~60–120 KB/s of compressed bytes) for :func:`parse_jpeg`.
 That sustains the fixture corpora and low-GB audit scans on a 32-core

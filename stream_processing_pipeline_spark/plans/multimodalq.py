@@ -885,9 +885,9 @@ _JPEG_AC_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
 def _jpeg_canonical_codes(bits: list[int], vals) -> dict:
     """Canonical Huffman assignment per T.81 Annex C (value -> (code,
     length)) — the single encoder-side copy shared by both fixture
-    builders and tools/codec_throughput_probe (review finding r8: three
-    divergent copies). The decoder under test builds its tables
-    independently in operators.multimodal."""
+    builders (the decode rates they were measured with are in SCALING.md
+    "Pure-Python codec throughput boundary"). The decoder under test
+    builds its tables independently in operators.multimodal."""
     codes, code, k = {}, 0, 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):

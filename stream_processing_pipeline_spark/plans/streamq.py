@@ -2,11 +2,28 @@
 
 The reference uses only 60-minute tumbling windows (SURVEY.md §2.7: no
 sliding/session windows, no arbitrary state). A complete streaming engine
-needs the rest; these register the batch-verifiable forms, and
-``stream_user_stats`` actually executes Structured Streaming with
-``applyInPandasWithState`` inside the query call — the custom-stateful-
-operator plumbing, oracle-checked because a one-file availableNow stream is
-deterministic.
+needs the rest. Five queries here register batch forms (sliding and
+session windows, as-of joins); the other fourteen execute a real
+Structured Streaming query inside the query call — custom stateful
+operators (``applyInPandasWithState``), stream-stream joins, watermarked
+dedup, session and tumbling windows, a stream-static temporal join and the
+``foreachBatch`` corpus ingests — and stay oracle-checked because an
+availableNow run over fixed input files is deterministic.
+
+Bounded-run contract. Every one of the fourteen drains its input through
+``_bounded_run``, i.e. ``streaming.runner.run_available_now``: the run
+processes everything available and stops, or is stopped and raises
+``TimeoutError`` after five minutes, so a partial result is never
+returned. Each call owns one temp work directory (the checkpoint plus any
+landing or state directories), removed on exit whether the run succeeds
+or fails. The shuffle partition count is 8 for the run (the session's
+batch-sized count would give each stateful operator that many tiny tasks
+per micro-batch), and the session's value is back afterwards. A
+memory-sink run (``_memory_run``) writes to a uniquely named table and
+drops its view once the frame is taken; the frame keeps the rows. A
+``foreachBatch`` run materializes its result (``localCheckpoint``) before
+its work directory goes. So a call leaves nothing in the temp directory,
+the session conf or the session catalog.
 """
 
 from __future__ import annotations
@@ -14,15 +31,76 @@ from __future__ import annotations
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from ..functions.money import cents, cents_sql
+from ..streaming.runner import run_available_now
 from ..streaming.stateful import IVM_LOW, IVM_MID
 from ..functions.windows import flatten_window
 from .common import catalog
 from .registry import register
+
+
+@contextmanager
+def _bounded_run(spark: SparkSession) -> Iterator[tuple[str, Callable]]:
+    """Yield ``(work, run)`` under the module's bounded-run contract:
+    ``run(df, sink, output_mode="append")`` drains ``df`` into ``sink`` on
+    the one checkpoint ``<work>/ckpt``; ``work`` is removed on exit."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    work = tempfile.mkdtemp(prefix="streamq_")
+
+    def run(df: DataFrame, sink, output_mode: str = "append") -> None:
+        run_available_now(df, sink, f"{work}/ckpt", output_mode, timeout_sec=300)
+
+    try:
+        spark.conf.set(key, "8")
+        yield work, run
+    finally:
+        spark.conf.set(key, prev)
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _memory_run(
+    spark: SparkSession, df: DataFrame, output_mode: str = "append"
+) -> DataFrame:
+    """Drain ``df`` into a fresh memory table; return its frame, view dropped."""
+    name = f"streamq_{uuid.uuid4().hex}"
+    try:
+        with _bounded_run(spark) as (_, run):
+            run(df, name, output_mode)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def _fixture_stream(
+    spark: SparkSession, sf_dir: str, table: str = "events"
+) -> DataFrame:
+    """Stream one fixture file with its raw schema. The file source wants a
+    directory, so glob-filter to the one file inside ``sf_dir``."""
+    raw_schema = spark.read.parquet(catalog(spark, sf_dir).path(table)).schema
+    return (
+        spark.readStream.schema(raw_schema)
+        .option("pathGlobFilter", f"{table}.parquet")
+        .parquet(sf_dir)
+    )
+
+
+def _ts_micros(stream: DataFrame) -> Column:
+    """Event time as integer microseconds, whichever way the source surfaces
+    the ns-parquet ``ts``: a LongType of nanoseconds under nanosAsLong (a
+    straight cast to TIMESTAMP would saturate), a TIMESTAMP_NTZ otherwise
+    (via TIMESTAMP, the identity under UTC). Microseconds are the oracle
+    engine's precision, and (ts_us, event_id) stays a total order."""
+    if isinstance(stream.schema["ts"].dataType, LongType):
+        return F.expr("ts div 1000")
+    return F.unix_micros(F.col("ts").cast("timestamp"))
 
 
 @register(
@@ -208,31 +286,13 @@ def stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is one row per key per batch).
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import StructField, StructType
 
-    cat = catalog(spark, sf_dir)
-    # Stream the fixture file with its raw schema (ts stays an ns-long; this
-    # operator only needs user_id/value, so no normalization required).
-    raw_schema = spark.read.parquet(cat.path("events")).schema
-    # The file streaming source wants a directory; glob-filter to the one
-    # fixture file inside it.
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    narrow = stream.select("user_id", cents("value").alias("c"))
+    from ..streaming.stateful import USER_STATS_SCHEMA
 
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_cents", LongType()),
-        ]
+    # ts stays raw: this operator only needs user_id/value.
+    narrow = _fixture_stream(spark, sf_dir).select(
+        "user_id", cents("value").alias("c")
     )
     state_schema = StructType(
         [StructField("n", LongType()), StructField("c", LongType())]
@@ -251,32 +311,10 @@ def stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stats = narrow.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        update, USER_STATS_SCHEMA, state_schema, "append",
+        GroupStateTimeout.NoTimeout,
     )
-
-    name = f"user_stats_{uuid.uuid4().hex[:8]}"
-    # Right-size the stateful task count for the one-file micro-batch (see
-    # Topology.state_partitions): the session's batch-sized shuffle
-    # partition count gives the per-key state operator that many tiny
-    # tasks per batch. Save/restore around the bounded availableNow run.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            stats.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_stateful_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(240):
-            query.stop()
-            raise TimeoutError("stream_user_stats still running after 240s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    result = spark.table(name)
-    return result.select(
+    return _memory_run(spark, stats).select(
         "user_id",
         "n_events",
         (F.col("total_cents") / 100.0).alias("total_value"),
@@ -361,6 +399,23 @@ def asof_cogrouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _join_side(spark: SparkSession, sf_dir: str, etype: str) -> DataFrame:
+    """One side of the stream-stream interval joins: the ``etype`` events
+    as ``<etype>_id``/``_user``/``_ts`` (LTZ event time), 60-minute
+    watermark. Each side gets its own reader of the fixture file: a real
+    stream-stream join needs two sources, each with its own offsets."""
+    s = _fixture_stream(spark, sf_dir)
+    return (
+        s.filter(F.col("event_type") == etype)
+        .select(
+            F.col("event_id").alias(f"{etype}_id"),
+            F.col("user_id").alias(f"{etype}_user"),
+            F.timestamp_micros(_ts_micros(s)).alias(f"{etype}_ts"),
+        )
+        .withWatermark(f"{etype}_ts", "60 minutes")
+    )
+
+
 @register(
     "stream_click_purchase_join",
     oracle="""
@@ -388,38 +443,8 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministic and drops nothing (late-row eviction applies from the
     second batch on), so the result equals the batch range join — the
     DuckDB oracle."""
-    from pyspark.sql.types import LongType
-
-    cat = catalog(spark, sf_dir)
-    raw_schema = spark.read.parquet(cat.path("events")).schema
-    # Same conditional conversion as the catalog: ts surfaces as an ns-long
-    # under nanosAsLong, as a timestamp type otherwise; either way the join
-    # needs LTZ event time (UTC session: identity on the wall-clock value).
-    if isinstance(raw_schema["ts"].dataType, LongType):
-        ts_expr = F.timestamp_micros(F.expr("ts div 1000"))
-    else:
-        ts_expr = F.col("ts").cast("timestamp")
-
-    def side(alias: str, etype: str):
-        # Two independent readers of the same fixture file — a real
-        # stream-stream join needs two sources, each with its own offsets.
-        s = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        return (
-            s.filter(F.col("event_type") == etype)
-            .select(
-                F.col("event_id").alias(f"{alias}_id"),
-                F.col("user_id").alias(f"{alias}_user"),
-                ts_expr.alias(f"{alias}_ts"),
-            )
-            .withWatermark(f"{alias}_ts", "60 minutes")
-        )
-
-    purchases = side("purchase", "purchase")
-    clicks = side("click", "click")
+    purchases = _join_side(spark, sf_dir, "purchase")
+    clicks = _join_side(spark, sf_dir, "click")
     joined = purchases.join(
         clicks,
         F.expr(
@@ -438,25 +463,7 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("click_ts").cast("timestamp_ntz"),
     )
 
-    name = f"ss_join_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ssjoin_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        if query.isActive:  # pragma: no cover — defensive timeout stop
-            query.stop()
-            raise TimeoutError("stream-stream join did not finish")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return _memory_run(spark, joined)
 
 
 @register(
@@ -515,33 +522,8 @@ def stream_click_purchase_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves, not just the join math. State stays bounded at ~2 h of
     events per side regardless of stream length, same as the inner
     variant."""
-    from pyspark.sql.types import LongType
-
-    cat = catalog(spark, sf_dir)
-    raw_schema = spark.read.parquet(cat.path("events")).schema
-    if isinstance(raw_schema["ts"].dataType, LongType):
-        ts_expr = F.timestamp_micros(F.expr("ts div 1000"))
-    else:
-        ts_expr = F.col("ts").cast("timestamp")
-
-    def side(alias: str, etype: str):
-        s = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        return (
-            s.filter(F.col("event_type") == etype)
-            .select(
-                F.col("event_id").alias(f"{alias}_id"),
-                F.col("user_id").alias(f"{alias}_user"),
-                ts_expr.alias(f"{alias}_ts"),
-            )
-            .withWatermark(f"{alias}_ts", "60 minutes")
-        )
-
-    clicks = side("click", "click")
-    purchases = side("purchase", "purchase")
+    clicks = _join_side(spark, sf_dir, "click")
+    purchases = _join_side(spark, sf_dir, "purchase")
     joined = clicks.join(
         purchases,
         F.expr(
@@ -560,25 +542,7 @@ def stream_click_purchase_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("purchase_ts").cast("timestamp_ntz"),
     )
 
-    name = f"ss_outer_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ssouter_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        if query.isActive:  # pragma: no cover — defensive timeout stop
-            query.stop()
-            raise TimeoutError("stream-stream outer join did not finish")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return _memory_run(spark, joined)
 
 
 @register(
@@ -604,20 +568,8 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     a micro-batch is execution-order-dependent, the key set is not — so the
     one-file availableNow run is deterministic and equals the batch
     ``SELECT DISTINCT`` (the oracle)."""
-    from pyspark.sql.types import LongType
-
-    cat = catalog(spark, sf_dir)
-    raw_schema = spark.read.parquet(cat.path("events")).schema
-    if isinstance(raw_schema["ts"].dataType, LongType):
-        ts_expr = F.timestamp_micros(F.expr("ts div 1000"))
-    else:
-        ts_expr = F.col("ts").cast("timestamp")
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _fixture_stream(spark, sf_dir)
+    ts_expr = F.timestamp_micros(_ts_micros(stream))
     deduped = (
         stream.select(
             "user_id",
@@ -631,25 +583,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_dedup_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        if query.isActive:  # pragma: no cover — defensive timeout stop
-            query.stop()
-            raise TimeoutError("streaming dedup did not finish")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return _memory_run(spark, deduped)
 
 
 @register(
@@ -692,20 +626,8 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     would hold them awaiting more data). State per user is one open-session
     row, merged on arrival, evicted on emission — bounded by active users
     per horizon at any scale."""
-    from pyspark.sql.types import LongType
-
-    cat = catalog(spark, sf_dir)
-    raw_schema = spark.read.parquet(cat.path("events")).schema
-    if isinstance(raw_schema["ts"].dataType, LongType):
-        ts_expr = F.timestamp_micros(F.expr("ts div 1000"))
-    else:
-        ts_expr = F.col("ts").cast("timestamp")
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _fixture_stream(spark, sf_dir)
+    ts_expr = F.timestamp_micros(_ts_micros(stream))
     agg = (
         stream.select("user_id", ts_expr.alias("ts"), cents("value").alias("c"))
         .withWatermark("ts", "30 minutes")
@@ -723,25 +645,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_sess_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        if query.isActive:  # pragma: no cover — defensive timeout stop
-            query.stop()
-            raise TimeoutError("streaming session windows did not finish")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name)
+    return _memory_run(spark, agg)
 
 
 @register(
@@ -777,20 +681,8 @@ def stream_hourly_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed windows only. The oracle is the batch hourly aggregation under
     the same finalization predicate (window_end <= max ts - 30 min delay)
     with the same (count desc, user_id) tie-broken rank."""
-    from pyspark.sql.types import LongType
-
-    cat = catalog(spark, sf_dir)
-    raw_schema = spark.read.parquet(cat.path("events")).schema
-    if isinstance(raw_schema["ts"].dataType, LongType):
-        ts_expr = F.timestamp_micros(F.expr("ts div 1000"))
-    else:
-        ts_expr = F.col("ts").cast("timestamp")
-
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _fixture_stream(spark, sf_dir)
+    ts_expr = F.timestamp_micros(_ts_micros(stream))
     agg = (
         stream.select("user_id", ts_expr.alias("ts"), cents("value").alias("c"))
         .withWatermark("ts", "30 minutes")
@@ -807,29 +699,11 @@ def stream_hourly_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    name = f"topk_hour_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_topk_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(300)
-        if query.isActive:  # pragma: no cover — defensive timeout stop
-            query.stop()
-            raise TimeoutError("hourly top-k stream did not finish")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     wr = Window.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), "user_id"
     )
     return (
-        spark.table(name)
+        _memory_run(spark, agg)
         .withColumn("rank", F.row_number().over(wr).cast("int"))
         .filter(F.col("rank") <= 3)
     )
@@ -872,26 +746,10 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     one file -> one micro-batch -> deterministic final snapshot."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from pyspark.sql.types import LongType as _Long
-
-    cat = catalog(spark, sf_dir)
-    raw_schema = spark.read.parquet(cat.path("events")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    # Normalize ts to integer MICROSECONDS whichever way the source
-    # surfaces the ns-parquet column (long nanos under nanosAsLong, or a
-    # timestamp) — micros is exactly the oracle engine's precision, and
-    # (ts_us, event_id) stays a total order.
-    if isinstance(raw_schema["ts"].dataType, _Long):
-        ts_us = F.expr("ts div 1000")
-    else:
-        ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    stream = _fixture_stream(spark, sf_dir)
     ops = stream.select(
         "user_id",
-        ts_us.alias("ts_us"),
+        _ts_micros(stream).alias("ts_us"),
         "event_id",
         F.when(F.col("event_type") == "signup", "I")
         .when(F.col("event_type") == "error", "D")
@@ -911,28 +769,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append", GroupStateTimeout.NoTimeout,
     )
 
-    name = f"cdc_apply_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_cdc_")
-    try:
-        query = (
-            snap.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # awaitTermination returns False on timeout — reading the memory
-        # sink while the query still runs would yield a silently partial
-        # snapshot, so that is a hard error, not a fallthrough.
-        if not query.awaitTermination(240):
-            query.stop()
-            raise TimeoutError("stream_cdc_apply: query still running after 240s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
     # Append mode emits one row per (key, micro-batch); with a single
     # fixture file that is one batch, but under maxFilesPerTrigger (or a
     # future multi-file fixture) a key may appear once per batch. The
@@ -940,7 +776,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max-n_ops emission IS the final state — reduce before the delete
     # filter instead of assuming one batch.
     final = (
-        spark.table(name)
+        _memory_run(spark, snap)
         .groupBy("user_id")
         .agg(
             F.max_by(
@@ -1006,7 +842,6 @@ def stream_rate_limited_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     (batches respect event-time window order) is stated on the update
     function. Executed as a real availableNow run over the fixture."""
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import LongType as _Long
 
     from ..streaming.stateful import (
         RATE_OUT_SCHEMA,
@@ -1014,52 +849,19 @@ def stream_rate_limited_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         rate_limit_update,
     )
 
-    cat = catalog(spark, sf_dir)
-    raw_schema = spark.read.parquet(cat.path("events")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if isinstance(raw_schema["ts"].dataType, _Long):
-        ts_us = F.expr("ts div 1000")
-    else:
-        ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    ev = stream.select(
-        "user_id", ts_us.alias("ts_us"), "event_id"
-    )
+    stream = _fixture_stream(spark, sf_dir)
+    ev = stream.select("user_id", _ts_micros(stream).alias("ts_us"), "event_id")
 
     limited = ev.groupBy("user_id").applyInPandasWithState(
         rate_limit_update, RATE_OUT_SCHEMA, RATE_STATE_SCHEMA,
         "append", GroupStateTimeout.NoTimeout,
     )
 
-    name = f"rate_limit_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    ckpt = tempfile.mkdtemp(prefix="ckpt_rate_")
-    try:
-        query = (
-            limited.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(240):
-            query.stop()
-            raise TimeoutError(
-                "stream_rate_limited_users: query still running after 240s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
     # Cumulative totals are strictly increasing per key; the max-n_events
     # emission is the final state (same multi-batch-safe reduce as
     # stream_cdc_apply).
     return (
-        spark.table(name)
+        _memory_run(spark, limited)
         .groupBy("user_id")
         .agg(
             F.max_by(
@@ -1149,27 +951,14 @@ def stream_scd2_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("ts").over(w).alias("valid_to"),
     )
 
-    raw_schema = spark.read.parquet(cat.path("events")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    # same ns-long -> microsecond TIMESTAMP_NTZ normalization the catalog
-    # applies to the batch side, so the range predicate compares like types
-    # (under nanosAsLong the raw column is a LongType of nanoseconds;
-    # otherwise Spark already surfaces a TIMESTAMP_NTZ)
-    from pyspark.sql.types import LongType as _Long
-
-    if isinstance(raw_schema["ts"].dataType, _Long):
-        ts_col = F.timestamp_micros(F.expr("ts div 1000"))
-    else:
-        ts_col = F.col("ts")
+    # the microsecond TIMESTAMP_NTZ the catalog gives the batch side, so
+    # the range predicate compares like types
+    stream = _fixture_stream(spark, sf_dir)
     facts = (
         stream.filter(F.col("event_type") == "purchase")
         .select(
             "user_id",
-            ts_col.cast("timestamp_ntz").alias("ts"),
+            F.timestamp_micros(_ts_micros(stream)).cast("timestamp_ntz").alias("ts"),
             cents("value").alias("v"),
         )
     )
@@ -1184,26 +973,7 @@ def stream_scd2_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("v").alias("revenue_cents"),
     )
 
-    name = f"scd2_temporal_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_scd2_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(240):
-            query.stop()
-            raise TimeoutError("availableNow temporal join did not finish")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name).orderBy("band")
+    return _memory_run(spark, agg, "complete").orderBy("band")
 
 
 @register(
@@ -1252,27 +1022,10 @@ def stream_ivm_retract_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivm_retract_update,
     )
 
-    cat = catalog(spark, sf_dir)
-    raw_schema = spark.read.parquet(cat.path("events")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    # ns-long vs TIMESTAMP_NTZ branch, same as the sibling streaming
-    # queries: a LongType ts is nanoseconds (ord by us), while an NTZ ts
-    # converts via TIMESTAMP (identity under UTC). Casting a ns-long
-    # straight to TIMESTAMP would saturate to Long.MAX and destroy the
-    # event ordering the retract contract depends on.
-    from pyspark.sql.types import LongType as _Long
-
-    if isinstance(raw_schema["ts"].dataType, _Long):
-        ord_col = F.expr("ts div 1000")
-    else:
-        ord_col = F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
+    stream = _fixture_stream(spark, sf_dir)
     narrow = stream.filter(F.col("value").isNotNull()).select(
         "user_id",
-        ord_col.alias("ord_ts"),
+        _ts_micros(stream).alias("ord_ts"),
         "event_id",
         F.expr("CASE WHEN event_id % 7 = 3 THEN 'D' ELSE 'U' END").alias("op"),
         cents("value").alias("c"),
@@ -1286,27 +1039,8 @@ def stream_ivm_retract_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
         GroupStateTimeout.NoTimeout,
     )
 
-    name = f"ivm_retract_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ivm_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            deltas.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(240):
-            query.stop()
-            raise TimeoutError("availableNow retract stream did not finish")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return (
-        spark.table(name)
+        _memory_run(spark, deltas)
         .groupBy("band")
         .agg(
             F.sum("dk").cast("long").alias("n_keys"),
@@ -1552,52 +1286,30 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     band index are bucket-partitioned parquet appends that grow with
     UNIQUE content, never rescanned corpus; each batch touches its own
     survivors only."""
-    cat = catalog(spark, sf_dir)
-    raw_schema = spark.read.parquet(cat.path("documents")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    work = tempfile.mkdtemp(prefix="corpus_ingest_")
-    index_dir = f"{work}/band_index"
-    seen_dir = f"{work}/seen_hashes"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: corpus_ingest_batch(
-                    bdf, eid, index_dir, seen_dir
-                )
-            )
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+    from ..operators.dedup import band_rows
+    from ..streaming.epochstate import EpochTable
+
+    stream = _fixture_stream(spark, sf_dir, "documents")
+    with _bounded_run(spark) as (work, run):
+        index_dir = f"{work}/band_index"
+        seen_dir = f"{work}/seen_hashes"
+        run(
+            stream,
+            lambda bdf, eid: corpus_ingest_batch(bdf, eid, index_dir, seen_dir),
         )
-        if not query.awaitTermination(240):
-            query.stop()
-            raise TimeoutError("stream_corpus_ingest still running after 240s")
         # the index stores wide signature+band rows per epoch (EpochTable
         # layout); read_all yields every committed row exactly once, and
         # the summary is epoch-agnostic by construction (each doc enters
         # exactly one epoch — pinned by the carryover test's invariant)
-        from ..operators.dedup import band_rows
-        from ..streaming.epochstate import EpochTable
-
         idx = band_rows(EpochTable(index_dir).read_all(spark))
-        out = (
+        return (
             idx.groupBy("band_idx", "band_hash")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.min("doc_id").alias("min_doc"),
             )
-            .localCheckpoint()  # detach from the tempdir before cleanup
+            .localCheckpoint()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 _AGREE_SQL = " + ".join(
@@ -1673,44 +1385,25 @@ def stream_corpus_ingest_two_phase(spark: SparkSession, sf_dir: str) -> DataFram
     cat = catalog(spark, sf_dir)
     docs = spark.read.parquet(cat.path("documents"))
     thr = int(docs.agg(F.floor(F.max("doc_id") * 0.8)).first()[0])
-    work = tempfile.mkdtemp(prefix="corpus_ingest2_")
-    incoming = f"{work}/incoming"
-    os.makedirs(incoming)
-    index_dir = f"{work}/band_index"
-    seen_dir = f"{work}/seen_hashes"
-
-    def land(df: DataFrame, name: str) -> None:
-        """Write one phase as ONE parquet file the file-stream source
-        picks up as one new file (= one micro-batch per run)."""
-        tmp = f"{work}/tmp_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(f"{tmp}/{part}", f"{incoming}/{name}.parquet")
-        shutil.rmtree(tmp)
-
-    def run_phase() -> None:
-        stream = spark.readStream.schema(docs.schema).parquet(incoming)
-        query = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: corpus_ingest_batch(
-                    bdf, eid, index_dir, seen_dir
-                )
+    with _bounded_run(spark) as (work, run):
+        incoming = f"{work}/incoming"
+        os.makedirs(incoming)
+        index_dir = f"{work}/band_index"
+        seen_dir = f"{work}/seen_hashes"
+        # Each phase lands as ONE parquet file the file-stream source picks
+        # up as one new file (= one micro-batch per run).
+        for phase, keep in enumerate(
+            (F.col("doc_id") < thr, F.col("doc_id") >= thr)
+        ):
+            tmp = f"{work}/tmp_phase{phase}"
+            docs.filter(keep).coalesce(1).write.mode("overwrite").parquet(tmp)
+            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+            os.replace(f"{tmp}/{part}", f"{incoming}/phase{phase}.parquet")
+            shutil.rmtree(tmp)
+            run(
+                spark.readStream.schema(docs.schema).parquet(incoming),
+                lambda bdf, eid: corpus_ingest_batch(bdf, eid, index_dir, seen_dir),
             )
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(240):
-            query.stop()
-            raise TimeoutError("two-phase ingest run still going after 240s")
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        land(docs.filter(F.col("doc_id") < thr), "phase0")
-        run_phase()
-        land(docs.filter(F.col("doc_id") >= thr), "phase1")
-        run_phase()
         seen = EpochTable(seen_dir)
         out = None
         for e in (0, 1):
@@ -1718,11 +1411,7 @@ def stream_corpus_ingest_two_phase(spark: SparkSession, sf_dir: str) -> DataFram
                 "doc_id", "text_hash", F.lit(e).alias("epoch")
             )
             out = part if out is None else out.unionByName(part)
-        out = out.localCheckpoint()  # detach from the tempdir before cleanup
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
-    return out
+        return out.localCheckpoint()
 
 
 @register(
@@ -1769,41 +1458,28 @@ def stream_corpus_ingest_inbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``admitted = false``, while the default-scope ingest admits both.
     The oracle recomputes gate -> exact keepers -> self-probe from the
     same md5-backed MinHash family in SQL."""
-    import os
-
     from ..operators import text as _T
     from ..functions.hashing import h60
     from ..streaming.epochstate import EpochTable
 
     cat = catalog(spark, sf_dir)
     docs = spark.read.parquet(cat.path("documents"))
-    work = tempfile.mkdtemp(prefix="corpus_ingest_ib_")
-    incoming = f"{work}/incoming"
-    os.makedirs(incoming)
-    index_dir = f"{work}/band_index"
-    seen_dir = f"{work}/seen_hashes"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _bounded_run(spark) as (work, run):
+        incoming = f"{work}/incoming"
+        index_dir = f"{work}/band_index"
+        seen_dir = f"{work}/seen_hashes"
         docs.coalesce(1).write.mode("overwrite").parquet(incoming)
         stream = (
             spark.readStream.schema(docs.schema)
             .option("pathGlobFilter", "*.parquet")
             .parquet(incoming)
         )
-        query = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: corpus_ingest_batch(
-                    bdf, eid, index_dir, seen_dir, inbatch_neardup=True
-                )
-            )
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        run(
+            stream,
+            lambda bdf, eid: corpus_ingest_batch(
+                bdf, eid, index_dir, seen_dir, inbatch_neardup=True
+            ),
         )
-        if not query.awaitTermination(240):
-            query.stop()
-            raise TimeoutError("in-batch ingest run still going after 240s")
         admitted = EpochTable(seen_dir).read_all(spark).select("doc_id")
         # the keeper recomputation is a second full quality+normalize pass
         # over the one-file fixture scan — spread it too (r13, guide §2.5)
@@ -1819,7 +1495,7 @@ def stream_corpus_ingest_inbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("text_hash")
             .agg(F.min("doc_id").alias("doc_id"))
         )
-        out = (
+        return (
             keepers.join(
                 admitted.withColumn("admitted", F.lit(True)), "doc_id", "left"
             )
@@ -1829,10 +1505,6 @@ def stream_corpus_ingest_inbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 # --------------------------------------------- streaming WET-shard ingest
@@ -1916,8 +1588,6 @@ def stream_wet_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles -> MinHash -> bands. Composes this round's WARC/gzip read
     path with the hardened ingest; shard bytes never shuffle, extracted
     text moves once at keeper grain."""
-    import os
-
     from ..streaming.epochstate import EpochTable
     from ..operators.dedup import band_rows
 
@@ -1980,34 +1650,22 @@ def stream_wet_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("payload"),
         )
     )
-    work = tempfile.mkdtemp(prefix="wet_ingest_")
-    incoming = f"{work}/incoming"
-    index_dir = f"{work}/band_index"
-    seen_dir = f"{work}/seen_hashes"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _bounded_run(spark) as (work, run):
+        incoming = f"{work}/incoming"
+        index_dir = f"{work}/band_index"
+        seen_dir = f"{work}/seen_hashes"
         shards.coalesce(1).write.parquet(incoming)
         stream = (
             spark.readStream.schema(shards.schema)
             .option("pathGlobFilter", "*.parquet")
             .parquet(incoming)
         )
-        query = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, eid: wet_ingest_batch(
-                    bdf, eid, index_dir, seen_dir
-                )
-            )
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        run(
+            stream,
+            lambda bdf, eid: wet_ingest_batch(bdf, eid, index_dir, seen_dir),
         )
-        if not query.awaitTermination(240):
-            query.stop()
-            raise TimeoutError("stream_wet_corpus_ingest still running")
         idx = band_rows(EpochTable(index_dir).read_all(spark))
-        out = (
+        return (
             idx.groupBy("band_idx", "band_hash")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
@@ -2015,7 +1673,3 @@ def stream_wet_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(work, ignore_errors=True)
-    return out

@@ -12,8 +12,9 @@ package generalizes that into:
   epoch as an opt-in)
 - :mod:`.alerts` — injectable alert hooks (log / callback / SMTP email parity
   with ``/root/reference/src/utils.py:11-30``) driven by count predicates
-- :mod:`.runner` — named-query topology: start all, await, stop; plus an
-  ``availableNow`` one-shot runner used by tests and backfills
+- :mod:`.runner` — named-query topology: start all, await, stop; plus the
+  ``availableNow`` one-shot runner behind the registered streaming queries,
+  tests and backfills
 - :mod:`.topology` — the six reference queries as one managed streaming
   topology over an events stream
 - :mod:`.stateful` — Spark 4 ``transformWithStateInPandas`` processors

@@ -9,8 +9,10 @@ instead of being masked behind an earlier await; ``Topology.await_all``
 waits for each query in turn under one shared deadline.
 
 ``run_available_now`` is the one-shot runner: process everything currently
-available and stop (Spark's ``trigger(availableNow=True)``) — the mechanism
-behind the stream/batch equivalence tests and operational backfills.
+available and stop (Spark's ``trigger(availableNow=True)``) — the one code
+path that starts, awaits and on timeout stops a bounded run, behind the
+registered streaming queries (``plans/streamq.py``), the stream/batch
+equivalence tests and operational backfills.
 """
 
 from __future__ import annotations
@@ -202,24 +204,29 @@ class Topology:
 
 def run_available_now(
     df: DataFrame,
-    sink: ForeachBatchSink | Callable[[DataFrame, int], None],
+    sink: str | ForeachBatchSink | Callable[[DataFrame, int], None],
     checkpoint: str,
     output_mode: str = "append",
     timeout_sec: float = 300.0,
 ) -> StreamingQuery:
     """Process all currently-available input through ``sink`` and stop.
 
-    Returns the ended query, whose progress ``observe.progress_digest``
-    reads."""
-    query = (
+    A ``str`` sink names an in-memory table (Spark's memory sink, readable
+    with ``spark.table(sink)``); anything else is a ``foreachBatch`` body.
+    A run still going after ``timeout_sec`` is stopped and raises
+    ``TimeoutError``. Returns the ended query, whose progress
+    ``observe.progress_digest`` reads."""
+    writer = (
         df.writeStream.outputMode(output_mode)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
-        .foreachBatch(sink)
-        .start()
     )
-    query.awaitTermination(timeout_sec)
-    if query.isActive:  # pragma: no cover - defensive stop on timeout
+    if isinstance(sink, str):
+        writer = writer.format("memory").queryName(sink)
+    else:
+        writer = writer.foreachBatch(sink)
+    query = writer.start()
+    if not query.awaitTermination(timeout_sec):
         query.stop()
         raise TimeoutError(f"streaming query did not finish in {timeout_sec}s")
     return query

@@ -14,8 +14,8 @@ with ``pip install Pillow``. What they prove when they run:
   projection) is byte-for-byte the same plan either way — the point of
   the injection seam;
 - a measured MB/s figure for the native path prints beside the known
-  ~5 MB/s pure-Python rate (tools/codec_throughput_probe.py carries the
-  same gated probe for the committed ledger).
+  ~5 MB/s pure-Python rate (SCALING.md "Pure-Python codec throughput
+  boundary" holds the measured rates).
 """
 
 from __future__ import annotations

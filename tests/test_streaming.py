@@ -7,6 +7,7 @@ chunked file-source replay with ``trigger(availableNow=True)``, and pin:
 - append-mode finalization: only windows the watermark has passed emit
 - watermark late-data dropping
 - alert hooks firing from foreachBatch
+- a bounded run that overruns its timeout being stopped
 - the full six-query topology starting, processing, stopping
 - the per-query progress digest of a topology run
 """
@@ -178,6 +179,24 @@ def test_parquet_sink_roundtrip(spark, tmp_path):
     assert set(written.columns) == {
         "event_id", "ts", "user_id", "event_type", "value", "prop_k",
     }
+
+
+def test_run_available_now_timeout_stops_query(spark, tmp_path):
+    """A run still going at ``timeout_sec`` is stopped and raises."""
+    import time
+
+    src = str(tmp_path / "in")
+    spark.range(3).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError):
+        run_available_now(
+            stream,
+            lambda bdf, eid: time.sleep(6),
+            checkpoint=str(tmp_path / "ckpt"),
+            timeout_sec=2,
+        )
+    assert {q.id for q in spark.streams.active} == active
 
 
 def test_six_query_topology(spark, tmp_path):
