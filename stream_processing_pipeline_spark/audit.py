@@ -5,9 +5,8 @@
 size check — may only be placed on a side bounded INDEPENDENTLY of scale
 factor. A hint on a side that grows with the data (customer, orders, part,
 even filtered slices of them) is an executor OOM at the 100 TB design point
-no matter how fast it runs at test SF. Used registry-wide by
-``tests/test_plans.py::test_no_broadcast_hint_on_fact_grain`` and by the
-standalone ``tools/broadcast_guard.py``.
+no matter how fast it runs at test SF. Applied to every registered query
+by ``tests/test_plans.py::test_no_broadcast_hint_on_fact_grain``.
 
 Boundedness rules over the ANALYZED logical plan (which keeps full relation
 schemas, so table signatures always show):

@@ -7,10 +7,10 @@ bucketed write eliminates every future shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["salted_join", "write_bucketed", "read_bucketed_join_plan", "write_partitioned"]
+__all__ = ["salted_join", "write_bucketed", "write_partitioned"]
 
 
 def salted_join(
@@ -44,44 +44,43 @@ def salted_join(
 def write_bucketed(
     df: DataFrame,
     table: str,
+    path: str,
     bucket_col: str,
     n_buckets: int = 32,
-    sort_col: str | None = None,
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table.
+    """Persist ``df`` at ``path`` as table ``table``, bucketed and sorted
+    by ``bucket_col``.
 
     Two tables bucketed identically on their join key join WITHOUT a
     shuffle (Exchange) on either side — the physical layout carries the
     partitioning. This is the 100 TB answer for dimension-fact joins too big
-    to broadcast and repeated often enough to amortize the write.
+    to broadcast and repeated often enough to amortize the write. The rows
+    are first hash-repartitioned into ``n_buckets`` on the key (repartition
+    and bucketing share the Murmur3 hash), so partition i holds exactly
+    bucket i: one file per bucket, and the bucketed scan reports sort order
+    as well as distribution.
     """
-    writer = df.write.bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.mode("overwrite").format("parquet").saveAsTable(table)
+    (
+        df.repartition(n_buckets, bucket_col)
+        .write.bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .option("path", path)
+        .mode("overwrite")
+        .saveAsTable(table)
+    )
 
 
-def read_bucketed_join_plan(
-    spark: SparkSession, left_table: str, right_table: str, on: str
-) -> DataFrame:
-    """Join two co-bucketed tables (shuffle-free when buckets align)."""
-    return spark.table(left_table).join(spark.table(right_table), on)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_col: str,
-    sort_col: str | None = None,
-) -> None:
-    """Persist with directory partitioning (+ optional within-file ordering).
+def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
+    """Persist with directory partitioning, one file per partition value.
 
     At 100 TB this is the other half of the layout story next to bucketing:
     partition directories let the planner prune whole subtrees from the scan
-    (``PartitionFilters`` in the plan — zero IO for untouched partitions),
-    and within-file ordering tightens parquet min/max row-group statistics
-    so even intra-partition predicates skip pages. Date is the canonical
-    partition key for event data; cardinality must stay in the thousands
-    (one directory + >=1 file per value)."""
-    out = df.sortWithinPartitions(sort_col) if sort_col else df
-    out.write.partitionBy(partition_col).mode("overwrite").parquet(path)
+    (``PartitionFilters`` in the plan — zero IO for untouched partitions).
+    Date is the canonical partition key for event data; cardinality must
+    stay in the thousands (one directory + >=1 file per value)."""
+    (
+        df.repartition(partition_col)
+        .write.partitionBy(partition_col)
+        .mode("overwrite")
+        .parquet(path)
+    )

@@ -30,7 +30,8 @@ def prepare_session(spark: SparkSession) -> SparkSession:
 
 
 def catalog(spark: SparkSession, sf_dir: str) -> TableCatalog:
-    """Per-(session, dir) catalog cache so repeated queries share scans."""
+    """The one catalog per (session, dir): repeated queries share its scans
+    and everything plans derive from the fixture (``TableCatalog.memo``)."""
     prepare_session(spark)
     key = (id(spark), sf_dir)
     if key not in _CATALOGS:

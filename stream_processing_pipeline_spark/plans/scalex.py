@@ -18,6 +18,8 @@ physical shape only):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,6 +28,7 @@ from ..functions.money import cents, cents_sql
 from ..operators import text as T
 from ..operators.bloom import bloom_bitmap, bloom_prefilter
 from ..operators.joins import salted_join
+from ..operators.scale import write_bucketed, write_partitioned
 from .common import catalog
 from .registry import register
 
@@ -348,49 +351,36 @@ def weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------- bucketing
 
 _BUCKETS = 8
-_BUCKETED: dict = {}
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write ``orders`` and ``lineitem`` ONCE per (session, fixture) as
-    bucket-sorted tables on the join key: ``bucketBy(8, key)`` +
-    ``sortBy(key)``, pre-repartitioned so hash-partition i holds exactly
-    bucket i (repartition and bucketing share the Murmur3 hash) — one file
-    per bucket, so the bucketed scan reports both distribution AND sort
-    order and the join needs neither Exchange nor Sort. The in-memory
-    session catalog holds the table metadata; data lands in a temp dir.
-    This is the offline half of the bucketed-join contract: pay the
-    shuffle once at write time, then every subsequent join on the bucket
-    key is shuffle-free forever — at 100 TB the difference between a
-    nightly pipeline that re-shuffles 6 TB per join and one that never
-    does."""
+    bucket-sorted tables on the join key, one file per bucket
+    (``operators.scale.write_bucketed``), so the bucketed scan reports both
+    distribution AND sort order and the join needs neither Exchange nor
+    Sort. The in-memory session catalog holds the table metadata; the data
+    lands in the fixture catalog's work directory. This is the offline half
+    of the bucketed-join contract: pay the shuffle once at write time, then
+    every subsequent join on the bucket key is shuffle-free forever — at
+    100 TB the difference between a nightly pipeline that re-shuffles 6 TB
+    per join and one that never does."""
     import re
-    import tempfile
 
-    key = (id(spark), sf_dir)
-    if key not in _BUCKETED:
+    cat = catalog(spark, sf_dir)
+
+    def build() -> tuple[str, str]:
         tag = re.sub(r"\W", "_", sf_dir).strip("_")
         o_name, l_name = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
-        base = tempfile.mkdtemp(prefix="bucketed_")
-        cat = catalog(spark, sf_dir)
-        (
-            cat.orders.repartition(_BUCKETS, "o_orderkey")
-            .write.bucketBy(_BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", f"{base}/orders")
-            .mode("overwrite")
-            .saveAsTable(o_name)
+        base = cat.work_dir()
+        write_bucketed(
+            cat.orders, o_name, os.path.join(base, o_name), "o_orderkey", _BUCKETS
         )
-        (
-            cat.lineitem.repartition(_BUCKETS, "l_orderkey")
-            .write.bucketBy(_BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", f"{base}/lineitem")
-            .mode("overwrite")
-            .saveAsTable(l_name)
+        write_bucketed(
+            cat.lineitem, l_name, os.path.join(base, l_name), "l_orderkey", _BUCKETS
         )
-        _BUCKETED[key] = (o_name, l_name)
-    return _BUCKETED[key]
+        return o_name, l_name
+
+    return cat.memo("scalex.bucketed_tables", build)
 
 
 @register(
@@ -427,31 +417,26 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------ partition pruning
 
-_PARTITIONED: dict = {}
-
-
 def _date_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    """Write ``events`` ONCE per (session, fixture) as a parquet table
-    partitioned by event date — the standard time-series layout whose
-    whole point is that a date-filtered read never LISTS, let alone
-    scans, out-of-range partitions. Completes the physical-layout trio:
-    bucketing (shuffle-free joins), z-order (2-D row-group skipping),
-    date partitioning (file-listing-level pruning)."""
-    import tempfile
+    """Write ``events`` ONCE per (session, fixture), into the fixture
+    catalog's work directory, as a parquet table partitioned by event date
+    — the standard time-series layout whose whole point is that a
+    date-filtered read never LISTS, let alone scans, out-of-range
+    partitions. Completes the physical-layout trio: bucketing
+    (shuffle-free joins), z-order (2-D row-group skipping), date
+    partitioning (file-listing-level pruning)."""
+    cat = catalog(spark, sf_dir)
 
-    key = (id(spark), sf_dir)
-    if key not in _PARTITIONED:
-        path = tempfile.mkdtemp(prefix="events_by_date_")
-        ev = catalog(spark, sf_dir).events
-        (
-            ev.withColumn("event_date", F.col("ts").cast("date"))
-            .repartition("event_date")
-            .write.partitionBy("event_date")
-            .mode("overwrite")
-            .parquet(path)
+    def build() -> str:
+        path = os.path.join(cat.work_dir(), "events_by_date")
+        write_partitioned(
+            cat.events.withColumn("event_date", F.col("ts").cast("date")),
+            path,
+            "event_date",
         )
-        _PARTITIONED[key] = path
-    return _PARTITIONED[key]
+        return path
+
+    return cat.memo("scalex.date_partitioned_events", build)
 
 
 @register(

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from stream_processing_pipeline_spark.contracts import FEE_COMPONENTS, TRIP_CONTRACT
 from stream_processing_pipeline_spark.operators.filters import discrepancy_filter
 from stream_processing_pipeline_spark.operators.scale import (
-    read_bucketed_join_plan,
     salted_join,
     write_bucketed,
 )
@@ -74,8 +73,6 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     import contextlib
     import io
 
-    import shutil
-
     # Force the sort-merge path: tiny test tables would otherwise broadcast,
     # which hides the property under test (bucketing removing the Exchange).
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -83,16 +80,15 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     for t in ("t_orders_b", "t_items_b"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
     orders = spark.createDataFrame(
         [Row(k=i % 50, o=i) for i in range(1000)]
     )
     items = spark.createDataFrame(
         [Row(k=i % 50, amt=float(i)) for i in range(2000)]
     )
-    write_bucketed(orders, "t_orders_b", "k", n_buckets=8)
-    write_bucketed(items, "t_items_b", "k", n_buckets=8)
-    joined = read_bucketed_join_plan(spark, "t_orders_b", "t_items_b", "k")
+    write_bucketed(orders, "t_orders_b", str(tmp_path / "t_orders_b"), "k", n_buckets=8)
+    write_bucketed(items, "t_items_b", str(tmp_path / "t_items_b"), "k", n_buckets=8)
+    joined = spark.table("t_orders_b").join(spark.table("t_items_b"), "k")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         joined.explain("formatted")
@@ -121,9 +117,7 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
 
     events = TableCatalog(spark, SF_SMALL, register_views=False).events
     path = str(tmp_path / "events_by_day")
-    write_partitioned(
-        events.withColumn("day", F.to_date("ts")), path, "day", sort_col="user_id"
-    )
+    write_partitioned(events.withColumn("day", F.to_date("ts")), path, "day")
 
     back = spark.read.parquet(path)
     one_day = back.filter(F.col("day") == "2024-01-02")
