@@ -54,11 +54,11 @@ def run_queries(spark, items, sf_dir: str) -> tuple[dict[str, float], dict[str, 
             failures[name] = f"{type(e).__name__}: {e}"[:200]
             timings[name] = -1.0
         finally:
-            # A few operators persist intermediates (posting lists, edge
-            # caches) that the lazy return value still depends on when the
-            # function exits, so they cannot unpersist themselves; clearing
-            # per query keeps one query's cache from occupying memory and
-            # skewing every later timing.
+            # Registered builds release the previous build's persisted
+            # frames themselves (session.release). Clearing here still does
+            # two things: an item that is not a registered build leaves
+            # nothing cached, and the release of this query's frames falls
+            # outside the next query's timed region.
             spark.catalog.clearCache()
     return timings, failures
 

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h60, h60_sql
+from ..session import persist
 from .text import normalize_text, tokens
 
 __all__ = [
@@ -45,7 +46,6 @@ __all__ = [
     "shingle_key_of_token_hashes",
     "shingle_key",
     "shingle_key_of_tokens_sql",
-    "shingle_key_sql",
     "poly_window_key_sql",
     "poly_fold_key_sql",
     "cdc_chunks",
@@ -289,14 +289,6 @@ def shingle_key_of_tokens_sql(toks_expr: str, n: int = 3) -> str:
         f"(SELECT CASE WHEN len(__h) >= {n} THEN {windows} ELSE {fallback} END "
         f"FROM (SELECT {ths} AS __h))"
     )
-
-
-def shingle_key_sql(expr: str, n: int = 3) -> str:
-    """DuckDB twin of :func:`shingle_key`: h60 per token, dual polynomial
-    fold per n-token window, whole-array fold fallback for short docs."""
-    from .text import normalize_text_sql, tokens_sql
-
-    return shingle_key_of_tokens_sql(tokens_sql(normalize_text_sql(expr)), n)
 
 
 # ----------------------------------------------- content-defined chunks
@@ -672,11 +664,11 @@ def jaccard_pairs(
     )
     # One materialized posting list feeds the self-join twice; without the
     # persist Spark recomputes the (regex-heavy) shingle pass per use.
-    posting = base.select(
+    posting = persist(base.select(
         F.col(id_col),
         F.size("sh").cast("long").alias("n"),
         F.explode(F.col("sh")).alias("sh_hash"),
-    ).persist()
+    ))
     a, b = posting.alias("a"), posting.alias("b")
     common = (
         a.join(

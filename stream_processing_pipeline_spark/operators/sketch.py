@@ -48,6 +48,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import persist
+
 __all__ = [
     "mg_candidates",
     "heavy_hitters_exact",
@@ -119,8 +121,8 @@ def heavy_hitters_exact(
     # Both phase-2 consumers (candidate keys, partition totals) read the
     # summaries; persisting the <= (k+1) x n_partitions rows keeps the
     # sketch pass to ONE scan instead of one per consumer. Bounded by
-    # construction; the harnesses clearCache() per query.
-    summaries = mg_candidates(df, key_col, k).persist()
+    # construction.
+    summaries = persist(mg_candidates(df, key_col, k))
     candidates = (
         summaries.filter(F.col("key").isNotNull()).select("key").distinct()
     )

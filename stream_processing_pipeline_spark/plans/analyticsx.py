@@ -34,6 +34,7 @@ from ..operators.text import (
     tokens,
     tokens_sql,
 )
+from ..session import persist
 from .common import catalog
 from .registry import register
 
@@ -599,7 +600,7 @@ def source_token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.explode(tokens(normalize_text("text"))).alias("term")
     )
     st = tok.groupBy("source", "term").agg(F.count(F.lit(1)).alias("c_st"))
-    st = st.persist()
+    st = persist(st)
     ns = st.groupBy("source").agg(F.sum("c_st").alias("n_s"))
     tot = ns.agg(F.sum("n_s").alias("n"))
     stc = st.withColumn(
@@ -672,7 +673,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(tokens(normalize_text("text"))).alias("term")
     )
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.persist()
+    tf = persist(tf)
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -762,7 +763,7 @@ def text_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(tokens(normalize_text("text"))).alias("term")
     )
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.persist()
+    tf = persist(tf)
     uni = tf.groupBy("term").agg(F.sum("tf").alias("c"))
     n = uni.agg(F.sum("c").alias("n_corpus"))
     scored = (
@@ -777,7 +778,7 @@ def text_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("surp_bits"),
         )
     )
-    per_doc = (
+    per_doc = persist(
         scored.groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
@@ -793,7 +794,6 @@ def text_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "mean_surprisal_millibits"
             ),
         )
-        .persist()
     )
     corpus = per_doc.agg(
         F.expr(
@@ -1022,7 +1022,7 @@ def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id", F.explode(tokens(normalize_text("text"))).alias("term")
     )
-    tok = tok.persist()
+    tok = persist(tok)
     t = tok.groupBy("term").agg(F.count(F.lit(1)).alias("c_t"))
     n = tok.agg(F.count(F.lit(1)).alias("n"))
     return (
@@ -1335,13 +1335,13 @@ def brand_share_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum(dp).alias("rev"))
     )
-    sh = mb.select(
+    sh = persist(mb.select(
         "m",
         "brand",
         F.expr("(1000 * rev) div (sum(rev) OVER (PARTITION BY m))").alias(
             "share_pm"
         ),
-    ).persist()
+    ))
     bounds = sh.agg(
         F.min("m").alias("m_first"), F.max("m").alias("m_last")
     )
@@ -1519,9 +1519,9 @@ def source_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: the one-file fixture scan starved the regex tokenizer to 1-2 of
     # 32 cores; guarded no-op at real split counts (spread_small_scan).
     docs = spread_small_scan(catalog(spark, sf_dir).documents, "doc_id")
-    pre = docs.select(
+    pre = persist(docs.select(
         "doc_id", "source", tokens(normalize_text("text")).alias("toks")
-    ).persist()
+    ))
     base = pre.select(
         "doc_id",
         "source",
@@ -1559,14 +1559,13 @@ def source_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingles has containment 0 < 90 and can never survive the filter, so
     # the inner `inter` already holds every surviving pair. Removes the
     # sizes aggregation and three pair-grain joins (Exchange 29 -> 18).
-    shd = (
+    shd = persist(
         shx.select("doc_id", F.array_distinct("sh").alias("shs"))
         .select(
             "doc_id",
             F.size("shs").cast("long").alias("n"),
             F.explode("shs").alias("g"),
         )
-        .persist()
     )
     inter = (
         cands.join(
@@ -1609,7 +1608,7 @@ def source_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the source-grain agg, dropping the trailing ns re-join.
     tok = pre.select("source", F.explode("toks").alias("term"))
     st = tok.groupBy("source", "term").agg(F.count(F.lit(1)).alias("c_st"))
-    st = st.persist()
+    st = persist(st)
     ns = st.groupBy("source").agg(F.sum("c_st").alias("n_s"))
     tot = ns.agg(F.sum("n_s").alias("n"))
     stc = st.withColumn(
@@ -1913,7 +1912,7 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.col("ts").cast("date").alias("day"), cents("value").alias("c")
     )
     ref = p.agg(F.max("day").alias("ref_day"))
-    u = (
+    u = persist(
         p.crossJoin(F.broadcast(ref))
         .groupBy("user_id")
         .agg(
@@ -1923,7 +1922,6 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("freq"),
             F.sum("c").alias("mon"),
         )
-        .persist()
     )
 
     def thresholds(col: str, width: int, prefix: str):

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.money import avg_money, avg_money_sql, cents, cents_sql, sum_money, sum_money_sql
 from ..operators.joins import dim_join
+from ..session import persist
 from .common import catalog
 from .registry import register
 
@@ -1991,14 +1992,14 @@ def sql_recursive_click_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted slice, broadcast by AQE only while it actually fits."""
     cat = catalog(spark, sf_dir)
     cat.register_all()
-    ev = spark.sql(
+    ev = persist(spark.sql(
         """
         SELECT user_id, event_id, event_type,
                row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
                  AS rn
         FROM events
         """
-    ).persist()
+    ))
     ev.filter(F.col("event_type") == "click").createOrReplaceTempView(
         "_streak_clicks"
     )
@@ -3098,8 +3099,8 @@ def pagerank_trade_network(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    ed = e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    deg = ed.groupBy("u").agg(F.count(F.lit(1)).alias("d")).persist()
+    ed = persist(e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v"))))
+    deg = persist(ed.groupBy("u").agg(F.count(F.lit(1)).alias("d")))
     pr = deg.select(F.col("u").alias("node"), F.lit(_PR_SCALE).cast("long").alias("pr"))
     for _ in range(_PR_ITERS):
         contrib = pr.join(deg, pr["node"] == deg["u"]).select(
@@ -3873,11 +3874,10 @@ def kmv_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rn1") <= _KMV_K
     )
     w2 = Window.partitionBy("half").orderBy("h")
-    samp = (
+    samp = persist(
         lvl1.withColumn("rn", F.row_number().over(w2))
         .filter(F.col("rn") <= _KMV_K)
         .select("half", "h")
-        .persist()
     )
     th = samp.groupBy("half").agg(
         F.count(F.lit(1)).alias("n_sample"),
@@ -4437,13 +4437,13 @@ def part_affinity_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting-array form (:func:`_basket_edges`, round 12): two exchanges
     instead of the legacy distinct/window/self-join four."""
     cat = catalog(spark, sf_dir)
-    edges = _basket_edges(
+    edges = persist(_basket_edges(
         cat.lineitem.select(
             F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
         ),
         _TRI_BASKET_CAP,
         _TRI_MIN_SUPPORT,
-    ).persist()
+    ))
     deg = (
         edges.select(F.col("x").alias("n"))
         .unionAll(edges.select(F.col("y").alias("n")))
@@ -4457,11 +4457,11 @@ def part_affinity_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     fwd = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("x") < F.col("y"))
     )
-    oriented = ed.select(
+    oriented = persist(ed.select(
         F.when(fwd, F.col("x")).otherwise(F.col("y")).alias("u"),
         F.when(fwd, F.col("y")).otherwise(F.col("x")).alias("v"),
         F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dv"),
-    ).persist()
+    ))
     e1 = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("d1"))
     e2 = oriented.select(
         F.col("u").alias("u2"), F.col("v").alias("v2"), F.col("dv").alias("d2")
@@ -4608,11 +4608,10 @@ def kcore_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rounds = [stats(0, edges, degrees(edges).select("n"))]
     for r in range(1, _KCORE_ROUNDS + 1):
-        keep = (
+        keep = persist(
             degrees(edges)
             .filter(F.col("d") >= _KCORE_K)
             .select("n")
-            .persist()
         )
         edges = (
             edges.join(keep.withColumnRenamed("n", "x"), "x", "left_semi")

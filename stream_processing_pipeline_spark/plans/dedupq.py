@@ -7,15 +7,6 @@ trigram Jaccard 0.989). Every query has a DuckDB oracle running the *same
 deterministic algorithm* in SQL — including MinHash and SimHash, which is
 only possible because hashing is md5-backed (functions.hashing) rather than
 engine-private.
-
-CACHING CONTRACT (ADVICE r12): several query builders here (and in
-similarq/analyticsx) ``persist()`` intermediates the returned lazy frame
-still depends on, so they cannot unpersist before returning. The harness
-owns cleanup: ``bench.py`` and the oracle harness call
-``spark.catalog.clearCache()`` after each query's terminal action. A
-library caller composing these builders long-term should do the same (or
-unpersist the returned frame's lineage) to avoid accumulating cached
-corpus-derived tables.
 """
 
 from __future__ import annotations
@@ -47,6 +38,7 @@ from ..operators.similarity import (
     with_lsh_bucket,
 )
 from ..functions.vectors import cosine_similarity_sql
+from ..session import persist
 from .common import catalog
 from .registry import register
 
@@ -267,10 +259,10 @@ def lsh_cap_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import cap_posting_lists, lsh_bands
 
     docs = catalog(spark, sf_dir).documents
-    true_pairs = jaccard_pairs(docs, threshold=_RECALL_TRUE_J).select(
+    true_pairs = persist(jaccard_pairs(docs, threshold=_RECALL_TRUE_J).select(
         "doc_a", "doc_b"
-    ).persist()
-    banded = lsh_bands(minhash_table(docs), n_bands=4, rows_per_band=4).persist()
+    ))
+    banded = persist(lsh_bands(minhash_table(docs), n_bands=4, rows_per_band=4))
 
     def band_pairs(b):
         a2, b2 = b.alias("a"), b.alias("b")
@@ -747,8 +739,8 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = catalog(spark, sf_dir).documents
     # One signature computation serves both the LSH candidate join and the
     # estimate columns (lsh_candidate_pairs would recompute it): persist
-    # the one-row-per-doc table — bounded, and the harnesses clearCache().
-    sig = minhash_table(docs).persist()
+    # the one-row-per-doc table.
+    sig = persist(minhash_table(docs))
     banded = lsh_bands(sig, n_bands=4, rows_per_band=4)
     a_band, b_band = banded.alias("a"), banded.alias("b")
     cands = (
@@ -790,13 +782,12 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass provably runs once (the un-persisted shd fed inter TWICE). The
     # left join + sizes joins stay: zero-common candidate pairs are part
     # of this query's output (a calibration table row per candidate).
-    sha = (
+    sha = persist(
         spread_small_scan(docs, "doc_id")
         .select(
             "doc_id",
             F.array_distinct(shingle_key(F.col("text"))).alias("shs"),
         )
-        .persist()
     )
     shd = sha.select("doc_id", F.explode("shs").alias("g"))
     sizes = sha.select("doc_id", F.size("shs").cast("long").alias("n"))
@@ -868,7 +859,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evaluates normalize_text over the whole corpus twice, once per
     # alias. The cached rows are ~280 B (key + 256-char prefix), far
     # cheaper to hold than to recompute.
-    b = (
+    b = persist(
         spread_small_scan(docs, "doc_id")
         .select(
             "doc_id",
@@ -880,7 +871,6 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lp rides the cached row (r13): the length-band prune below then
         # costs one cached-int compare per candidate instead of a length()
         .withColumn("lp", F.length("p"))
-        .persist()
     )
     a, c = b.alias("a"), b.alias("c")
     dist = F.levenshtein(F.col("a.p"), F.col("c.p"))
@@ -970,13 +960,12 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sizes aggregation exchange both disappear, and the cached arrays are
     # strictly smaller than the postings they replace. Zero-common pairs
     # stay in the output, so the left join + sizes joins remain.
-    sha = (
+    sha = persist(
         spread_small_scan(docs, "doc_id")
         .select(
             "doc_id",
             F.array_distinct(shingle_key(F.col("text"))).alias("shs"),
         )
-        .persist()
     )
     shd = sha.select("doc_id", F.explode("shs").alias("g"))
     sizes = sha.select("doc_id", F.size("shs").cast("long").alias("n"))
@@ -1115,7 +1104,7 @@ def dedup_cdc_chunk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # holds every survivor. Removes the DISTINCT exchange, the sizes
     # aggregation, and two pair-grain joins. spread_small_scan unstarves
     # the chunk-build regex at fixture split counts.
-    ch = (
+    ch = persist(
         spread_small_scan(docs, "doc_id")
         .select(
             "doc_id",
@@ -1128,7 +1117,7 @@ def dedup_cdc_chunk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size("hs").cast("long").alias("n"),
             F.explode("hs").alias("h"),
         )
-    ).persist()
+    )
     kept = ch.withColumn(
         "df_", F.count(F.lit(1)).over(Window.partitionBy("h"))
     ).filter(F.col("df_") <= _CDC_DF_CAP).drop("df_")
@@ -1568,21 +1557,21 @@ def winnow_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`_posting_pairs`, one exchange each instead of three)."""
     from ..operators.dedup import shingle_key_of_token_hashes
 
-    toked = _tokhash_frame(spark, sf_dir).filter(
+    toked = persist(_tokhash_frame(spark, sf_dir).filter(
         F.size("ths") >= _WN_K
-    ).persist()
+    ))
 
     es_grams = toked.filter(F.size("ths") >= _ES_N).select(
         "doc_id", shingle_key_of_token_hashes(F.col("ths"), _ES_N).alias("gs")
     )
-    truth = _posting_pairs(
+    truth = persist(_posting_pairs(
         es_grams.select("doc_id", F.explode("gs").alias("h")), _ES_DF_CAP
-    ).select("doc_a", "doc_b").persist()
+    ).select("doc_a", "doc_b"))
 
     w = _winnow_frame_from(toked)
-    wpairs = _posting_pairs(
+    wpairs = persist(_posting_pairs(
         w.select("doc_id", F.explode("fps").alias("h")), _WN_DF_CAP
-    ).persist()
+    ))
     n = truth.agg(F.count(F.lit(1)).alias("n_true"))
     s1 = wpairs.agg(F.count(F.lit(1)).alias("n_screen1"))
     s2 = wpairs.filter(F.col("c") >= 2).agg(F.count(F.lit(1)).alias("n_screen2"))

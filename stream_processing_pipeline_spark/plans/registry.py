@@ -17,6 +17,7 @@ the ``CORRECTNESS_r{N}.json`` rows the gate has recorded
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -25,6 +26,8 @@ from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import release
 
 __all__ = [
     "Query",
@@ -55,13 +58,26 @@ REGISTRY: dict[str, Query] = {}
 def register(
     name: str,
     oracle: str | None,
-    description: str = "",
     tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
+    """Register *fn* as query *name*; its docstring is the description.
+
+    The registry holds *fn* wrapped: each build through it first releases
+    the frames the previous build persisted (:func:`..session.release`).
+    The decorator returns *fn* itself, so a builder that calls another
+    builder keeps its own frames for the length of its build.
+    """
+
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name, fn, oracle, description or (fn.__doc__ or ""), tags)
+
+        @functools.wraps(fn)
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            release()
+            return fn(spark, sf_dir)
+
+        REGISTRY[name] = Query(name, build, oracle, fn.__doc__ or "", tags)
         return fn
 
     return deco

@@ -5,11 +5,6 @@ path. Both oracle-verified: scores are bit-identical across engines (vector
 kernels fold in DuckDB's order) and the LSH construction is deterministic
 (hyperplanes seeded from the portable hash, inlined as literals on both
 sides), so even the *approximate* result is reproducible and checkable.
-
-The IVFPQ rerank builders (``sim_topk_ivfpq_rerank``,
-``sim_recall_ivfpq_rerank_at_k``) persist frames their lazy results still
-read; callers must release them with ``spark.catalog.clearCache()`` after
-the terminal action (the caching contract in :mod:`.dedupq`).
 """
 
 from __future__ import annotations
@@ -25,6 +20,7 @@ from ..operators.similarity import (
     topk_lsh_multiprobe,
     with_lsh_bucket,
 )
+from ..session import persist
 from .common import catalog
 from .registry import register
 
@@ -1127,10 +1123,9 @@ def emb_top_pc_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu = m.groupBy("j").agg(
         F.expr("sum(v) div count(1)").cast("long").alias("mu")
     )
-    c = (
+    c = persist(
         m.join(F.broadcast(mu), "j")
         .select("vec_id", "j", (F.col("v") - F.col("mu")).alias("v"))
-        .persist()
     )
 
     w = [1] * 64
@@ -1707,10 +1702,9 @@ def sim_topk_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical, quantize_int is exact)."""
     from ..operators.similarity import quantize_int
 
-    vi = (
+    vi = persist(
         catalog(spark, sf_dir).embeddings
         .select("vec_id", quantize_int("embedding").alias("vi"))
-        .persist()
     )
     return _ivfpq_rerank_frame(spark, sf_dir, vi=vi)
 
@@ -1833,7 +1827,7 @@ def sim_recall_ivfpq_rerank_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the embedding parquet is scanned (and quantize_int evaluated)
     # once, not once per arm. Bit-identical: quantize_int is exact and
     # runs exactly once per vector.
-    vi = emb.select("vec_id", quantize_int("embedding").alias("vi")).persist()
+    vi = persist(emb.select("vec_id", quantize_int("embedding").alias("vi")))
     gtq = vi.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("vi").alias("qv")
     )
@@ -1861,7 +1855,7 @@ def sim_recall_ivfpq_rerank_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"shared-ADC-probe invariant violated: _RERANK_R={_RERANK_R} "
             f"< _K={_K}; the adc arm would be a wrong prefix"
         )
-    short_full = topk_ivfpq_adc(
+    short_full = persist(topk_ivfpq_adc(
         vi,
         vi.filter(F.col("vec_id") < _N_QUERIES),
         _static_cent(spark, sf_dir),
@@ -1870,7 +1864,7 @@ def sim_recall_ivfpq_rerank_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_probe=2,
         vec_col="vi",
         pre_quantized=True,
-    ).persist()
+    ))
     adc = short_full.filter(F.col("rank") <= _K).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit_adc")
     )

@@ -16,6 +16,7 @@ from ..functions import hashing as H
 from ..functions.money import avg_money, avg_money_sql
 from ..operators import dedup as D
 from ..operators import text as T
+from ..session import persist
 from .common import catalog
 from .registry import register
 
@@ -1297,12 +1298,11 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation here."""
     docs = catalog(spark, sf_dir).documents
     pre = docs.select(F.explode(T.bpe_pretokens("text")).alias("tok"))
-    words = (
+    words = persist(
         pre.groupBy(
             F.regexp_replace("tok", "(.)", " $1 ").alias("seq")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
     parts: list[DataFrame] = []
     for k in range(_BPE_N_MERGES):
@@ -1429,12 +1429,11 @@ def bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = docs.select(
         "source", F.explode(T.bpe_pretokens("text")).alias("tok")
     )
-    swords = (
+    swords = persist(
         pre.groupBy(
             "source", F.regexp_replace("tok", "(.)", " $1 ").alias("seq")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
     words = (
         swords.groupBy("seq").agg(F.sum("cnt").alias("cnt")).localCheckpoint()
@@ -1662,13 +1661,13 @@ def llm_corpus_stage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedupq import _LSH_CAP
 
     docs = catalog(spark, sf_dir).documents
-    meta = docs.select(
+    meta = persist(docs.select(
         "doc_id",
         H.h60(T.normalize_text("text")).alias("th"),
         T.token_count("text").alias("nt"),
         T.quality_metrics(F.col("text"))["quality"].alias("quality"),
         H.stable_bucket(F.col("doc_id"), 10, salt="traintest:").alias("bkt"),
-    ).persist()
+    ))
 
     w = Window.partitionBy("th").orderBy("doc_id")
     k1 = (
@@ -1678,7 +1677,7 @@ def llm_corpus_stage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
 
-    sig = minhash_table(docs).join(k1, "doc_id").persist()
+    sig = persist(minhash_table(docs).join(k1, "doc_id"))
     # PRODUCTION near-dup shape (VERDICT r5 #1): hot-band posting lists are
     # truncated to their 64 id-smallest members before the self-join — the
     # deterministic cap the oracle replays with an identical QUALIFY cut.
@@ -1810,7 +1809,7 @@ def vocab_growth_by_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(T.tokens(T.normalize_text("text"))).alias("term"),
     )
     st = tok.groupBy("shard", "term").agg(F.count(F.lit(1)).alias("c"))
-    st = st.persist()
+    st = persist(st)
     per_shard = st.groupBy("shard").agg(
         F.sum("c").alias("n_tokens"),
         F.count(F.lit(1)).alias("n_distinct_terms"),
@@ -2021,14 +2020,13 @@ def lm_bigram_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select(
         "doc_id", T.tokens(T.normalize_text("text")).alias("t")
     ).filter(F.size("t") >= 2)
-    tf = (
+    tf = persist(
         base.select(
             "doc_id",
             F.explode(D.shingles_of_tokens(F.col("t"), 2)).alias("big"),
         )
         .groupBy("doc_id", "big")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     refdoc = (
         d.select(
@@ -2037,11 +2035,10 @@ def lm_bigram_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("q") >= _LM_REF_QUALITY_MIN)
         .select("doc_id")
     )
-    ref_big = (
+    ref_big = persist(
         tf.join(refdoc, "doc_id")
         .groupBy("big")
         .agg(F.sum("tf").alias("c_big"))
-        .persist()
     )
     ref_ctx = ref_big.groupBy(
         F.substring_index("big", " ", 1).alias("w1")
@@ -2067,7 +2064,7 @@ def lm_bigram_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("surp_bits"),
         )
     )
-    per_doc = (
+    per_doc = persist(
         scored.groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_bigrams"),
@@ -2081,7 +2078,6 @@ def lm_bigram_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "mean_millibits"
             ),
         )
-        .persist()
     )
     ref_mean = per_doc.join(refdoc, "doc_id").agg(
         F.expr(

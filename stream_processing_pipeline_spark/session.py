@@ -30,15 +30,20 @@ though tests run on ``local[32]``):
   rename-with-overwrite is atomic, where the FileSystem manager keeps the
   old file when it cannot overwrite (SCALING.md "Checkpoint I/O on a local
   master").
+- Frames a query builder persists for its lazy result have one owner:
+  :func:`persist` records each one and :func:`release` unpersists them
+  all. Every build through the query registry releases first, so a process
+  holds the persisted frames of the last registered build at most.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["build_session", "default_parallelism"]
+__all__ = ["build_session", "default_parallelism", "persist", "release"]
 
 _CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -113,3 +118,31 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+#: Frames :func:`persist` cached since the last :func:`release`.
+_PERSISTED: list[DataFrame] = []
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist *df* and record it for the next :func:`release`.
+
+    For a frame the builder's lazy result still reads after the builder
+    returns. A frame whose plan is already cached (by the caller, say) is
+    returned unrecorded: releasing it would drop the caller's cache.
+    """
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    df = df.persist()
+    _PERSISTED.append(df)
+    return df
+
+
+def release() -> None:
+    """Unpersist every frame :func:`persist` recorded.
+
+    A result built before the release still runs: its frames are
+    recomputed from lineage, and no persisted frame is nondeterministic.
+    """
+    while _PERSISTED:
+        _PERSISTED.pop().unpersist()

@@ -1,9 +1,10 @@
-"""The fixture catalog owns what plans derive from a fixture.
+"""Every intermediate a query build makes has an owner that releases it.
 
 ``TableCatalog.memo`` builds each artifact once per catalog, and the files
 layout copies write live in the catalog's work directory, which goes away
 with the catalog (for ``plans.common.catalog``'s catalogs: at interpreter
-exit).
+exit). Frames a builder persists for its lazy result are recorded by
+``session.persist`` and released by the next registered build.
 """
 
 from __future__ import annotations
@@ -14,6 +15,10 @@ import subprocess
 import sys
 import tempfile
 
+from pyspark import StorageLevel
+
+from stream_processing_pipeline_spark.plans import REGISTRY
+from stream_processing_pipeline_spark.session import persist, release
 from stream_processing_pipeline_spark.sources.registry import TableCatalog
 
 from .conftest import SF_SMALL
@@ -56,6 +61,39 @@ def test_work_dir_removed_with_catalog(tmp_path, monkeypatch):
     del cat
     gc.collect()
     assert list(tmp_path.iterdir()) == []
+
+
+def test_registered_build_releases_only_the_previous_builds_frames(spark):
+    """The next registered build unpersists the frames the last one
+    persisted through an operator, leaves a frame the caller persisted
+    cached, and the earlier result still returns the same rows."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    release()
+    mine = spark.range(5).persist()
+    try:
+        before = cache.numCachedEntries()
+        first = REGISTRY["heavy_hitters_tokens"].fn(spark, SF_SMALL)
+        rows = sorted(first.collect())
+        assert rows
+        assert cache.numCachedEntries() > before  # sketch.heavy_hitters_exact
+        REGISTRY["tpch_q1_pricing_summary"].fn(spark, SF_SMALL)
+        assert cache.numCachedEntries() == before
+        assert mine.storageLevel != StorageLevel.NONE
+        assert sorted(first.collect()) == rows
+    finally:
+        mine.unpersist()
+
+
+def test_release_leaves_a_plan_the_caller_cached(spark):
+    """``persist`` of a plan the caller already cached records nothing, so
+    ``release`` cannot drop the caller's cache entry."""
+    mine = spark.range(7).persist()
+    try:
+        persist(spark.range(7))
+        release()
+        assert mine.storageLevel != StorageLevel.NONE
+    finally:
+        mine.unpersist()
 
 
 _SCRIPT = """

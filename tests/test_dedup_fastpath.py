@@ -22,7 +22,11 @@ from stream_processing_pipeline_spark.functions.hashing import (
 )
 from stream_processing_pipeline_spark.operators.dedup import (
     shingle_key,
-    shingle_key_sql,
+    shingle_key_of_tokens_sql,
+)
+from stream_processing_pipeline_spark.operators.text import (
+    normalize_text_sql,
+    tokens_sql,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -65,9 +69,9 @@ def test_spark_xxhash64_equals_duckdb_twin(spark):
 
 
 def test_shingle_key_spark_equals_duckdb(spark):
-    """End-to-end shingle identity: live Spark shingle_key == DuckDB
-    shingle_key_sql on adversarial texts (normal, short-doc fallback,
-    single token, empty, unicode)."""
+    """End-to-end shingle identity: live Spark shingle_key == its DuckDB
+    twin (normalize, split, shingle_key_of_tokens_sql) on adversarial texts
+    (normal, short-doc fallback, single token, empty, unicode)."""
     texts = [
         "The quick brown fox jumps over the lazy dog",
         "one two",
@@ -86,11 +90,10 @@ def test_shingle_key_spark_equals_duckdb(spark):
     con = duckdb.connect()
     con.execute("CREATE TABLE d(doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO d VALUES (?,?)", list(enumerate(texts)))
+    key_sql = shingle_key_of_tokens_sql(tokens_sql(normalize_text_sql("text")), 3)
     got_duck = {
         r[0]: r[1]
-        for r in con.execute(
-            f"SELECT doc_id, {shingle_key_sql('text', 3)} FROM d"
-        ).fetchall()
+        for r in con.execute(f"SELECT doc_id, {key_sql} FROM d").fetchall()
     }
     assert got_spark == got_duck
 

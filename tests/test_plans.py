@@ -13,6 +13,7 @@ import re
 import pytest
 
 from stream_processing_pipeline_spark.plans import REGISTRY
+from stream_processing_pipeline_spark.session import release
 
 from .conftest import SF_MED
 
@@ -34,9 +35,11 @@ def all_plans(spark):
     registry-wide plan audit in this module (r13, VERDICT r12 #3: the three
     audits each rebuilt all ~291 queries — 75-90 s apiece — which alone
     pushed the suite past the driver's verify window). Returns
-    ``{name: (formatted_plan, broadcast_hint_violations)}``; audits index
-    what they need. clearCache() between builds keeps one query's persisted
-    intermediates from skewing the next build, same as the bench harness."""
+    ``{name: (formatted_plan, broadcast_hint_violations, unowned)}``;
+    audits index what they need. ``unowned`` is the number of cache entries
+    the build left once ``release()`` ran: entries the owner does not know
+    of. Releasing after each build also keeps one query's persisted
+    intermediates out of the next query's plan."""
     import contextlib
     import io
 
@@ -44,15 +47,28 @@ def all_plans(spark):
         broadcast_hint_violations,
     )
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    release()
     out = {}
     for name, q in REGISTRY.items():
+        before = cache.numCachedEntries()
         df = q.fn(spark, SF_MED)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        out[name] = (buf.getvalue(), broadcast_hint_violations(df))
-        spark.catalog.clearCache()
+        violations = broadcast_hint_violations(df)
+        release()
+        out[name] = (buf.getvalue(), violations, cache.numCachedEntries() - before)
     return out
+
+
+def test_every_cache_entry_a_build_makes_is_owned(all_plans):
+    """``release()`` after each registered build brings the session's cache
+    back to its size before the build: every frame a builder caches goes
+    through the owner, so a caller that never clears the cache holds the
+    last build's frames at most."""
+    unowned = {name: n for name, (_, _, n) in all_plans.items() if n}
+    assert unowned == {}
 
 
 def read_schemas(plan: str) -> list[str]:

@@ -75,30 +75,37 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
 
     # Force the sort-merge path: tiny test tables would otherwise broadcast,
     # which hides the property under test (bucketing removing the Exchange).
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    for t in ("t_orders_b", "t_items_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    orders = spark.createDataFrame(
-        [Row(k=i % 50, o=i) for i in range(1000)]
-    )
-    items = spark.createDataFrame(
-        [Row(k=i % 50, amt=float(i)) for i in range(2000)]
-    )
-    write_bucketed(orders, "t_orders_b", str(tmp_path / "t_orders_b"), "k", n_buckets=8)
-    write_bucketed(items, "t_items_b", str(tmp_path / "t_items_b"), "k", n_buckets=8)
-    joined = spark.table("t_orders_b").join(spark.table("t_items_b"), "k")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        joined.explain("formatted")
-    plan = buf.getvalue()
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan, plan  # bucketing replaced both shuffles
-    assert joined.count() == 1000 * 2000 / 50
-    spark.sql("DROP TABLE IF EXISTS t_orders_b")
-    spark.sql("DROP TABLE IF EXISTS t_items_b")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    confs = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    old = {k: spark.conf.get(k) for k in confs}  # None: unset
+    try:
+        for k in confs:
+            spark.conf.set(k, "-1")
+        for t in ("t_orders_b", "t_items_b"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        orders = spark.createDataFrame(
+            [Row(k=i % 50, o=i) for i in range(1000)]
+        )
+        items = spark.createDataFrame(
+            [Row(k=i % 50, amt=float(i)) for i in range(2000)]
+        )
+        write_bucketed(orders, "t_orders_b", str(tmp_path / "t_orders_b"), "k", n_buckets=8)
+        write_bucketed(items, "t_items_b", str(tmp_path / "t_items_b"), "k", n_buckets=8)
+        joined = spark.table("t_orders_b").join(spark.table("t_items_b"), "k")
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            joined.explain("formatted")
+        plan = buf.getvalue()
+        assert "SortMergeJoin" in plan
+        assert "Exchange" not in plan, plan  # bucketing replaced both shuffles
+        assert joined.count() == 1000 * 2000 / 50
+        spark.sql("DROP TABLE IF EXISTS t_orders_b")
+        spark.sql("DROP TABLE IF EXISTS t_items_b")
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_partitioned_write_prunes_partitions(spark, tmp_path):

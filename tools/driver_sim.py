@@ -72,8 +72,6 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 — gate records per-query errors
             status = f"ERROR {type(e).__name__}: {e}"
             failures[name] = status
-        finally:
-            spark.catalog.clearCache()  # same per-query isolation as bench.py
         print(f"{i:3d} {name:36s} {time.time() - t0:5.1f}s  {status[:120]}")
 
     print(json.dumps({"n": len(names), "failures": failures}))
