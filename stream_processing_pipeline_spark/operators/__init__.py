@@ -17,5 +17,7 @@ star; each designed for 100 TB scale):
 - :mod:`.text`       — language ID, quality scoring, token counting,
   fingerprinting
 - :mod:`.multimodal` — binary media columns: typed metadata, chunking,
-  Pandas-UDF decode plumbing (decoders stubbed; plumbing real)
+  and Arrow-batched decoders over eight real dependency-free codecs
+  (PNM, WAV, tar, PNG, JPEG, GIF, ZIP, gzip; plus zlib, bzip2/xz tar
+  shards and WARC/WET), each a row function over one ``mapInArrow`` hop
 """

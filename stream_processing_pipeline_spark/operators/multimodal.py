@@ -5,25 +5,25 @@ Design: media is an opaque ``binary`` column plus a typed metadata struct
 for image/audio/video at 100 TB (payloads stay columnar-compressed in
 parquet; metadata predicates prune scans without touching bytes).
 
-The Spark-side plumbing here is real and tested: binary encoding, metadata
-derivation, fixed-size chunk/frame indexing, and zero-copy Arrow-batched
-decode pipelines (``mapInArrow`` on the hot paths; the generic
-:func:`decode_media_batched` demo uses ``mapInPandas``) with stable output
-schemas. Eight *real*, dependency-free codecs ship: PPM/PGM
-(:func:`parse_pnm`), RIFF/WAV 16-bit PCM (:func:`parse_wav`), POSIX
-ustar / WebDataset shards (:func:`parse_tar`), non-interlaced 8-bit PNG
-(:func:`parse_png`, stdlib ``zlib``), GIF87a with a real variable-width
-LZW machine (:func:`parse_gif`), the ZIP container (:func:`parse_zip`,
-stdlib ``zlib`` inflate; pinned byte-for-byte against stdlib zipfile on
-real wheel archives), multi-member RFC 1952 gzip (:func:`parse_gzip`,
-pinned against stdlib gzip on real man pages) — those seven value-hash
-verified end-to-end against
-in-plan generators (GIF on its byte-aligned LZW subset; full dictionary
-growth covered by encoder-twin round-trips) —
-and baseline sequential-DCT JPEG (:func:`parse_jpeg`, value-hash
-verified on its exactly-decodable DC and single-AC subsets, encoder-twin
-round-trips for the lossy general case). Remaining formats (webp, video
-containers) are honest
+The Spark-side plumbing here is real and tested: binary encoding,
+metadata derivation, fixed-size chunk/frame indexing, and zero-copy
+Arrow-batched decode pipelines with stable output schemas: every
+``*_arrow`` decoder is a row function over one ``mapInArrow`` kernel,
+:func:`_map_payloads` (the generic :func:`decode_media_batched` demo
+uses ``mapInPandas``). Eight *real*, dependency-free codecs ship:
+PPM/PGM (:func:`parse_pnm`), RIFF/WAV 16-bit PCM (:func:`parse_wav`),
+POSIX ustar / WebDataset shards (:func:`parse_tar`), non-interlaced
+8-bit PNG (:func:`parse_png`, stdlib ``zlib``), GIF87a with a real
+variable-width LZW machine (:func:`parse_gif`), the ZIP container
+(:func:`parse_zip`, stdlib ``zlib`` inflate; pinned byte-for-byte
+against stdlib zipfile on real wheel archives), multi-member RFC 1952
+gzip (:func:`parse_gzip`, pinned against stdlib gzip on real man pages)
+— those seven value-hash verified end-to-end against in-plan generators
+(GIF on its byte-aligned LZW subset; full dictionary growth covered by
+encoder-twin round-trips) — and baseline sequential-DCT JPEG
+(:func:`parse_jpeg`, value-hash verified on its exactly-decodable DC and
+single-AC subsets, encoder-twin round-trips for the lossy general case).
+Remaining formats (webp, video containers) are honest
 ``NotImplementedError`` gates inside :func:`decode_media_batched` — swap
 in PIL/ffmpeg by passing ``decoder=`` without touching the pipeline
 shape, batch flow, or schema.
@@ -120,6 +120,86 @@ from pyspark.sql.types import (  # noqa: E402
     StructType,
 )
 
+
+def _map_payloads(
+    df: DataFrame,
+    schema: StructType,
+    rows: Callable[[int, bytes | None], Iterator[tuple]],
+    id_col: str = "doc_id",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """The one Arrow hop every binary decoder here runs through: select
+    ``(id, payload)``, call ``rows(doc_id, payload)`` for each input row,
+    and emit the tuples it yields (in ``schema`` order: one per row for the
+    1:1 decoders, N for a fan-out such as :func:`extract_wet_records_arrow`)
+    as Arrow batches of ``schema``. ``mapInArrow`` hands the UDF raw
+    ``pyarrow.RecordBatch`` objects — no Arrow->pandas->Arrow conversion,
+    no pandas boxing of the binary payloads — the lowest-overhead Python
+    hop PySpark offers for large binary columns.
+
+    ``schema`` is the only statement of the output types (each column is
+    ``pa.array(values, type)`` with the type from ``to_arrow_schema``), and
+    columns are built by index, so an empty batch yields an empty batch of
+    ``schema``. A NULL payload reaches ``rows`` as ``None``: strict row
+    functions fail the job on it (``bytes(None)`` raises), the quarantine
+    decoders classify it (:func:`_map_quarantined`)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+
+    def batches(it: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        for batch in it:
+            ids = batch.column(0).to_pylist()
+            payloads = batch.column(1).to_pylist()
+            out = [t for i, p in zip(ids, payloads) for t in rows(i, p)]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([t[k] for t in out], field.type)
+                    for k, field in enumerate(arrow_schema)
+                ],
+                schema=arrow_schema,
+            )
+
+    return narrow.mapInArrow(batches, schema)
+
+
+def _map_quarantined(
+    df: DataFrame,
+    schema: StructType,
+    decode: Callable[[bytes], tuple],
+    classify: Callable[[ValueError], str],
+    id_col: str,
+    payload_col: str,
+) -> DataFrame:
+    """Poison-tolerant decode over :func:`_map_payloads`: ``schema`` is
+    ``(doc_id, ok, err_class, *stats)``. ``decode(bytes) -> stats`` fills
+    a good row ``(True, None, *stats)``; a ``ValueError`` — a NULL payload
+    counts as one — becomes ``(False, classify(e), None, ...)``. Rows are
+    never dropped and bad input never fails the job: one truncated file
+    must not kill a 1000-executor ingest stage."""
+    n_stats = len(schema.fields) - 3
+
+    def rows(doc_id: int, p: bytes | None) -> Iterator[tuple]:
+        try:
+            if p is None:
+                raise ValueError("NULL payload")
+            stats = decode(bytes(p))
+        except ValueError as e:
+            yield (doc_id, False, classify(e)) + (None,) * n_stats
+        else:
+            yield (doc_id, True, None, *stats)
+
+    return _map_payloads(df, schema, rows, id_col, payload_col)
+
+
+def _byte_stats(blob: bytes) -> tuple:
+    """``(sum, min, max)`` of decoded bytes; min/max NULL when empty."""
+    return (sum(blob), min(blob) if blob else None, max(blob) if blob else None)
+
+
 DECODE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -147,8 +227,8 @@ def fake_decoder(payload: bytes) -> tuple[int, int, str]:
 # width, height, maxval; '#' comments to end-of-line allowed between
 # tokens) followed by raw big-endian sample bytes. This is a REAL parser
 # over real bytes, registered as a built-in codec so the decode pipeline
-# has one end-to-end value-verified path (VERDICT r5 #4); every other
-# codec name still raises NotImplementedError (no image libs here).
+# has an end-to-end value-verified path; a codec name outside
+# ``_BUILTIN_CODECS`` raises NotImplementedError (no image libs here).
 
 
 def _pnm_header(payload: bytes) -> tuple[int, int, int, int, int]:
@@ -339,33 +419,16 @@ def decode_media_arrow(
     decoder: Callable[[bytes], tuple[int, int, str]] | None = None,
 ) -> DataFrame:
     """The ``mapInArrow`` twin of :func:`decode_media_batched`: identical
-    semantics and output schema, but the UDF consumes raw
-    ``pyarrow.RecordBatch`` objects — no Arrow->pandas->Arrow conversion, no
-    pandas object boxing of the binary payloads. For large binary columns
-    this is the lowest-overhead Python hop PySpark offers (the batch's
-    payload buffers are handed over zero-copy), which is exactly the hot
-    path for 100 TB media decode. Same stub decoder, same oracle."""
+    semantics and output schema, but through the Arrow hop of
+    :func:`_map_payloads` (no pandas boxing of the binary payloads) — the
+    hot path for 100 TB media decode. Same stub decoder, same oracle."""
     decode = decoder or fake_decoder
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        b = bytes(p)
+        yield (doc_id, len(b), *decode(b))
 
-        for batch in it:
-            payloads = batch.column(1).to_pylist()
-            decoded = [decode(bytes(p)) for p in payloads]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).cast(pa.int64()),
-                    pa.array([len(p) for p in payloads], pa.int64()),
-                    pa.array([d[0] for d in decoded], pa.int32()),
-                    pa.array([d[1] for d in decoded], pa.int32()),
-                    pa.array([d[2] for d in decoded], pa.string()),
-                ],
-                names=["doc_id", "byte_len", "width", "height", "format"],
-            )
-
-    return narrow.mapInArrow(batches, DECODE_SCHEMA)
+    return _map_payloads(df, DECODE_SCHEMA, rows, id_col, payload_col)
 
 
 PPM_STATS_SCHEMA = StructType(
@@ -389,49 +452,19 @@ def decode_ppm_stats_arrow(
     dependency-free :func:`parse_pnm` and emit per-channel pixel sums —
     the feature-extraction stage of a media pipeline, verifiable
     value-for-value because the sums are exact integers derived from the
-    actual raster bytes. ``mapInArrow`` so payload buffers transfer
-    zero-copy; per-channel sums via ``bytes`` slicing (no numpy needed,
-    though the slice-stride form is numpy-vectorizable unchanged).
+    actual raster bytes. Per-channel sums via ``bytes`` slicing (no numpy
+    needed, though the slice-stride form is numpy-vectorizable unchanged).
     Grayscale (P5) payloads report the single channel in all three sums."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        width, height, maxval, channels, data = parse_pnm(bytes(p))
+        if channels == 3:
+            sums = (sum(data[0::3]), sum(data[1::3]), sum(data[2::3]))
+        else:
+            sums = (sum(data),) * 3
+        yield (doc_id, width, height, maxval, width * height, *sums)
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            w, h, mv, npx, sr, sg, sb = [], [], [], [], [], [], []
-            for p in payloads:
-                width, height, maxval, channels, data = parse_pnm(bytes(p))
-                w.append(width)
-                h.append(height)
-                mv.append(maxval)
-                npx.append(width * height)
-                if channels == 3:
-                    sr.append(sum(data[0::3]))
-                    sg.append(sum(data[1::3]))
-                    sb.append(sum(data[2::3]))
-                else:
-                    s = sum(data)
-                    sr.append(s)
-                    sg.append(s)
-                    sb.append(s)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(w, pa.int32()),
-                    pa.array(h, pa.int32()),
-                    pa.array(mv, pa.int32()),
-                    pa.array(npx, pa.int64()),
-                    pa.array(sr, pa.int64()),
-                    pa.array(sg, pa.int64()),
-                    pa.array(sb, pa.int64()),
-                ],
-                names=[f.name for f in PPM_STATS_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, PPM_STATS_SCHEMA)
+    return _map_payloads(df, PPM_STATS_SCHEMA, rows, id_col, payload_col)
 
 
 # --------------------------------------------------------- RIFF/WAV (audio)
@@ -526,43 +559,24 @@ def decode_wav_stats_arrow(
     (sum, sum of squares, min, max) — the normalization/clipping audit a
     speech pipeline runs before feature extraction. Sum-of-squares is the
     integer core of RMS energy; keeping it unscaled keeps the result
-    value-hash-verifiable. ``mapInArrow`` for zero-copy payload transfer,
-    same hot path as :func:`decode_ppm_stats_arrow`."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    value-hash-verifiable."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        sample_rate, n_channels, pcm = parse_wav(bytes(p))
+        yield (
+            doc_id,
+            sample_rate,
+            n_channels,
+            len(pcm),
+            sum(pcm),
+            sum(x * x for x in pcm),
+            # empty data chunk: NULL min/max (matches SQL list_min/
+            # list_max over an empty list; schema is nullable)
+            min(pcm) if pcm else None,
+            max(pcm) if pcm else None,
+        )
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            rate, nch, n, s1, s2, lo, hi = [], [], [], [], [], [], []
-            for p in payloads:
-                sample_rate, n_channels, pcm = parse_wav(bytes(p))
-                rate.append(sample_rate)
-                nch.append(n_channels)
-                n.append(len(pcm))
-                s1.append(sum(pcm))
-                s2.append(sum(x * x for x in pcm))
-                # empty data chunk: NULL min/max (matches SQL list_min/
-                # list_max over an empty list; schema is nullable)
-                lo.append(min(pcm) if pcm else None)
-                hi.append(max(pcm) if pcm else None)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(rate, pa.int32()),
-                    pa.array(nch, pa.int32()),
-                    pa.array(n, pa.int64()),
-                    pa.array(s1, pa.int64()),
-                    pa.array(s2, pa.int64()),
-                    pa.array(lo, pa.int32()),
-                    pa.array(hi, pa.int32()),
-                ],
-                names=[f.name for f in WAV_STATS_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, WAV_STATS_SCHEMA)
+    return _map_payloads(df, WAV_STATS_SCHEMA, rows, id_col, payload_col)
 
 
 # ----------------------------------------------------- ustar (tar) container
@@ -645,36 +659,20 @@ def index_tar_members_arrow(
     """Index WebDataset-style tar shards: parse each archive with the
     dependency-free :func:`parse_tar` and emit the per-document member
     statistics a streaming loader needs before it touches any payload —
-    member count, per-extension byte sizes, total archive bytes. Zero-copy
-    ``mapInArrow``, the same hot path as the PPM/WAV decoders."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    member count, per-extension byte sizes, total archive bytes."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        b = bytes(p)
+        members = parse_tar(b)
+        yield (
+            doc_id,
+            len(members),
+            sum(s for name, s, _ in members if name.endswith(".txt")),
+            sum(s for name, s, _ in members if name.endswith(".cls")),
+            len(b),
+        )
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            nm, tb, cb, ab = [], [], [], []
-            for p in payloads:
-                b = bytes(p)
-                members = parse_tar(b)
-                nm.append(len(members))
-                tb.append(sum(s for name, s, _ in members if name.endswith(".txt")))
-                cb.append(sum(s for name, s, _ in members if name.endswith(".cls")))
-                ab.append(len(b))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(nm, pa.int32()),
-                    pa.array(tb, pa.int64()),
-                    pa.array(cb, pa.int64()),
-                    pa.array(ab, pa.int64()),
-                ],
-                names=[f.name for f in TAR_INDEX_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, TAR_INDEX_SCHEMA)
+    return _map_payloads(df, TAR_INDEX_SCHEMA, rows, id_col, payload_col)
 
 
 # ------------------------------------------------------------ PNG (RGB8)
@@ -879,42 +877,22 @@ def decode_png_stats_arrow(
     PNG with the dependency-free :func:`parse_png` and emit exact
     per-channel pixel sums plus the bitmask of scanline filter types seen
     (``sum(1 << f)`` over distinct f) — the mask proves the decoder
-    actually read and applied each row's filter, not just the header.
-    Zero-copy ``mapInArrow``, the same hot path as the PPM/WAV/tar
-    decoders."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    actually read and applied each row's filter, not just the header."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        w, h, filters, raw = parse_png(bytes(p))
+        yield (
+            doc_id,
+            w,
+            h,
+            w * h,
+            sum(1 << f for f in set(filters)),
+            sum(raw[0::3]),
+            sum(raw[1::3]),
+            sum(raw[2::3]),
+        )
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            ws, hs, np_, fm, sr, sg, sb = [], [], [], [], [], [], []
-            for p in payloads:
-                w, h, filters, raw = parse_png(bytes(p))
-                ws.append(w)
-                hs.append(h)
-                np_.append(w * h)
-                fm.append(sum(1 << f for f in set(filters)))
-                sr.append(sum(raw[0::3]))
-                sg.append(sum(raw[1::3]))
-                sb.append(sum(raw[2::3]))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(ws, pa.int32()),
-                    pa.array(hs, pa.int32()),
-                    pa.array(np_, pa.int64()),
-                    pa.array(fm, pa.int32()),
-                    pa.array(sr, pa.int64()),
-                    pa.array(sg, pa.int64()),
-                    pa.array(sb, pa.int64()),
-                ],
-                names=[f.name for f in PNG_STATS_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, PNG_STATS_SCHEMA)
+    return _map_payloads(df, PNG_STATS_SCHEMA, rows, id_col, payload_col)
 
 
 PNG_QUARANTINE_SCHEMA = StructType(
@@ -937,47 +915,21 @@ def decode_png_quarantine_arrow(
     truncated/bit-rotten files, and one bad shard must not kill a
     1000-executor stage). Emits per-document ``ok``, a coarse
     ``err_class`` (``crc_mismatch`` / ``malformed``; NULL when ok), and
-    the decode stats for good rows (NULL when quarantined). Same
-    zero-copy ``mapInArrow`` hot path as the strict decoder — the strict
+    the decode stats for good rows (NULL when quarantined). The strict
     variant stays the right tool when corruption must halt the build."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def decode(b: bytes) -> tuple:
+        w, h, _filters, raw = parse_png(b)
+        return (w * h, sum(raw))
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            ok, ec, np_, sm = [], [], [], []
-            for p in payloads:
-                try:
-                    if p is None:
-                        raise ValueError("malformed: NULL payload")
-                    w, h, _filters, raw = parse_png(bytes(p))
-                except ValueError as e:
-                    ok.append(False)
-                    ec.append(
-                        "crc_mismatch" if "CRC" in str(e) else "malformed"
-                    )
-                    np_.append(None)
-                    sm.append(None)
-                else:
-                    ok.append(True)
-                    ec.append(None)
-                    np_.append(w * h)
-                    sm.append(sum(raw))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(ok, pa.bool_()),
-                    pa.array(ec, pa.string()),
-                    pa.array(np_, pa.int64()),
-                    pa.array(sm, pa.int64()),
-                ],
-                names=[f.name for f in PNG_QUARANTINE_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, PNG_QUARANTINE_SCHEMA)
+    return _map_quarantined(
+        df,
+        PNG_QUARANTINE_SCHEMA,
+        decode,
+        lambda e: "crc_mismatch" if "CRC" in str(e) else "malformed",
+        id_col,
+        payload_col,
+    )
 
 
 # --------------------------------------------------------- JPEG (baseline)
@@ -1362,7 +1314,7 @@ def png_decoder(payload: bytes) -> tuple[int, int, str]:
 
 
 def pil_decoder() -> Callable[[bytes], tuple[int, int, str]]:
-    """The ``decoder=`` injection seam made concrete (VERDICT r10 #3):
+    """The ``decoder=`` injection seam made concrete:
     a (bytes) -> (width, height, format) decoder backed by PIL/Pillow —
     the native-library swap-in the module docstring declares MANDATORY at
     real image-corpus scale (pure-Python decoders measured ~5 MB/s/core).
@@ -1403,39 +1355,13 @@ def decode_jpeg_stats_arrow(
 ) -> DataFrame:
     """REAL end-to-end JPEG decode stats: parse each baseline JPEG with
     the dependency-free :func:`parse_jpeg` (full marker walk, Huffman
-    entropy decode, dequantize, IDCT) and emit exact raster statistics.
-    Zero-copy ``mapInArrow``, same hot path as the other codecs."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    entropy decode, dequantize, IDCT) and emit exact raster statistics."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        w, h, nc, raster = parse_jpeg(bytes(p))
+        yield (doc_id, w, h, nc, min(raster), max(raster), sum(raster))
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            ws, hs, ncs, mn, mx, sm = [], [], [], [], [], []
-            for p in payloads:
-                w, h, nc, raster = parse_jpeg(bytes(p))
-                ws.append(w)
-                hs.append(h)
-                ncs.append(nc)
-                mn.append(min(raster))
-                mx.append(max(raster))
-                sm.append(sum(raster))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(ws, pa.int32()),
-                    pa.array(hs, pa.int32()),
-                    pa.array(ncs, pa.int32()),
-                    pa.array(mn, pa.int32()),
-                    pa.array(mx, pa.int32()),
-                    pa.array(sm, pa.int64()),
-                ],
-                names=[f.name for f in JPEG_STATS_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, JPEG_STATS_SCHEMA)
+    return _map_payloads(df, JPEG_STATS_SCHEMA, rows, id_col, payload_col)
 
 
 class GifLzwError(ValueError):
@@ -1655,41 +1581,13 @@ def decode_gif_stats_arrow(
     """REAL end-to-end GIF decode stats: parse each GIF87a with the
     dependency-free :func:`parse_gif` (header walk, LZW entropy decode,
     palette mapping) and emit exact raster statistics plus the LZW
-    Clear-code count — the witness that the entropy path actually ran.
-    Zero-copy ``mapInArrow``, same hot path as the other codecs."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    Clear-code count — the witness that the entropy path actually ran."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        w, h, nc, resets, raster = parse_gif(bytes(p))
+        yield (doc_id, w, h, nc, resets, min(raster), max(raster), sum(raster))
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            ws, hs, ncs, rs, mn, mx, sm = [], [], [], [], [], [], []
-            for p in payloads:
-                w, h, nc, resets, raster = parse_gif(bytes(p))
-                ws.append(w)
-                hs.append(h)
-                ncs.append(nc)
-                rs.append(resets)
-                mn.append(min(raster))
-                mx.append(max(raster))
-                sm.append(sum(raster))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(ws, pa.int32()),
-                    pa.array(hs, pa.int32()),
-                    pa.array(ncs, pa.int32()),
-                    pa.array(rs, pa.int32()),
-                    pa.array(mn, pa.int32()),
-                    pa.array(mx, pa.int32()),
-                    pa.array(sm, pa.int64()),
-                ],
-                names=[f.name for f in GIF_STATS_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, GIF_STATS_SCHEMA)
+    return _map_payloads(df, GIF_STATS_SCHEMA, rows, id_col, payload_col)
 
 
 GIF_QUARANTINE_SCHEMA = StructType(
@@ -1713,47 +1611,20 @@ def decode_gif_quarantine_arrow(
     entropy machine rejected (root/code/EOI/pixel-count violations,
     i.e. :class:`GifLzwError`), ``malformed`` for structural/framing
     lies (any other ``ValueError``) — and the decode stats for
-    good rows (NULL when quarantined). Zero-copy ``mapInArrow``."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    good rows (NULL when quarantined)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def decode(b: bytes) -> tuple:
+        w, h, _nc, _resets, raster = parse_gif(b)
+        return (w * h, sum(raster))
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            ok, ec, np_, sm = [], [], [], []
-            for p in payloads:
-                try:
-                    if p is None:
-                        raise ValueError("malformed: NULL payload")
-                    w, h, _nc, _resets, raster = parse_gif(bytes(p))
-                except ValueError as e:
-                    ok.append(False)
-                    ec.append(
-                        "lzw_error"
-                        if isinstance(e, GifLzwError)
-                        else "malformed"
-                    )
-                    np_.append(None)
-                    sm.append(None)
-                else:
-                    ok.append(True)
-                    ec.append(None)
-                    np_.append(w * h)
-                    sm.append(sum(raster))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(ok, pa.bool_()),
-                    pa.array(ec, pa.string()),
-                    pa.array(np_, pa.int64()),
-                    pa.array(sm, pa.int64()),
-                ],
-                names=[f.name for f in GIF_QUARANTINE_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, GIF_QUARANTINE_SCHEMA)
+    return _map_quarantined(
+        df,
+        GIF_QUARANTINE_SCHEMA,
+        decode,
+        lambda e: "lzw_error" if isinstance(e, GifLzwError) else "malformed",
+        id_col,
+        payload_col,
+    )
 
 
 # ---------------------------------------------------------------- ZIP/ustar²
@@ -1959,40 +1830,20 @@ def decode_zip_stats_arrow(
 ) -> DataFrame:
     """REAL end-to-end ZIP decode stats: walk + inflate + CRC-verify each
     archive with :func:`parse_zip` and emit exact statistics over every
-    decoded byte of every entry. Zero-copy ``mapInArrow``, same hot path
-    as the other codecs."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    decoded byte of every entry."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        entries = parse_zip(bytes(p))
+        blob = b"".join(raw for _, _, _, raw in entries)
+        yield (
+            doc_id,
+            len(entries),
+            sum(1 for _, m, _, _ in entries if m == 8),
+            sum(u for _, _, u, _ in entries),
+            *_byte_stats(blob),
+        )
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            ne, nd, tu, ps, mn, mx = [], [], [], [], [], []
-            for p in payloads:
-                entries = parse_zip(bytes(p))
-                blob = b"".join(raw for _, _, _, raw in entries)
-                ne.append(len(entries))
-                nd.append(sum(1 for _, m, _, _ in entries if m == 8))
-                tu.append(sum(u for _, _, u, _ in entries))
-                ps.append(sum(blob))
-                mn.append(min(blob) if blob else None)
-                mx.append(max(blob) if blob else None)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(ne, pa.int32()),
-                    pa.array(nd, pa.int32()),
-                    pa.array(tu, pa.int64()),
-                    pa.array(ps, pa.int64()),
-                    pa.array(mn, pa.int32()),
-                    pa.array(mx, pa.int32()),
-                ],
-                names=[f.name for f in ZIP_STATS_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, ZIP_STATS_SCHEMA)
+    return _map_payloads(df, ZIP_STATS_SCHEMA, rows, id_col, payload_col)
 
 
 ZIP_QUARANTINE_SCHEMA = StructType(
@@ -2013,48 +1864,21 @@ def decode_zip_quarantine_arrow(
     failures to their TYPED class — ``structure`` for container framing
     (:class:`ZipStructureError`), ``data`` for entry-integrity failures
     (:class:`ZipDataError`) — never dropping rows (the corpus-triage
-    contract shared by the PNG/GIF quarantine decoders)."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    contract shared by the PNG/GIF quarantine decoders). Any other
+    ``ValueError`` (undecodable names, a NULL payload) is ``structure``."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def decode(b: bytes) -> tuple:
+        entries = parse_zip(b)
+        return (len(entries), sum(sum(raw) for _, _, _, raw in entries))
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            ok, ec, ne, ps = [], [], [], []
-            for p in payloads:
-                try:
-                    if p is None:
-                        raise ZipStructureError("zip: NULL payload")
-                    entries = parse_zip(bytes(p))
-                except ZipDataError:
-                    ok.append(False)
-                    ec.append("data")
-                    ne.append(None)
-                    ps.append(None)
-                except ValueError:  # ZipStructureError + decode errors
-                    ok.append(False)
-                    ec.append("structure")
-                    ne.append(None)
-                    ps.append(None)
-                else:
-                    ok.append(True)
-                    ec.append(None)
-                    ne.append(len(entries))
-                    ps.append(sum(sum(raw) for _, _, _, raw in entries))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(ok, pa.bool_()),
-                    pa.array(ec, pa.string()),
-                    pa.array(ne, pa.int32()),
-                    pa.array(ps, pa.int64()),
-                ],
-                names=[f.name for f in ZIP_QUARANTINE_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, ZIP_QUARANTINE_SCHEMA)
+    return _map_quarantined(
+        df,
+        ZIP_QUARANTINE_SCHEMA,
+        decode,
+        lambda e: "data" if isinstance(e, ZipDataError) else "structure",
+        id_col,
+        payload_col,
+    )
 
 
 # ----------------------------------------------------------------- gzip
@@ -2183,38 +2007,14 @@ def decode_gzip_stats_arrow(
 ) -> DataFrame:
     """REAL end-to-end gzip decode stats: every member inflated and
     CRC/ISIZE-verified by :func:`parse_gzip`, exact statistics over the
-    decoded bytes. Zero-copy ``mapInArrow``, same hot path as the other
-    codecs."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    decoded bytes."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        members = parse_gzip(bytes(p))
+        blob = b"".join(members)
+        yield (doc_id, len(members), len(blob), *_byte_stats(blob))
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            nm, tu, ps, mn, mx = [], [], [], [], []
-            for p in payloads:
-                members = parse_gzip(bytes(p))
-                blob = b"".join(members)
-                nm.append(len(members))
-                tu.append(len(blob))
-                ps.append(sum(blob))
-                mn.append(min(blob) if blob else None)
-                mx.append(max(blob) if blob else None)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(nm, pa.int32()),
-                    pa.array(tu, pa.int64()),
-                    pa.array(ps, pa.int64()),
-                    pa.array(mn, pa.int32()),
-                    pa.array(mx, pa.int32()),
-                ],
-                names=[f.name for f in GZIP_STATS_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, GZIP_STATS_SCHEMA)
+    return _map_payloads(df, GZIP_STATS_SCHEMA, rows, id_col, payload_col)
 
 
 GZIP_QUARANTINE_SCHEMA = StructType(
@@ -2235,47 +2035,19 @@ def decode_gzip_quarantine_arrow(
     framing (:class:`GzipStructureError`), ``data`` for member-integrity
     failures (:class:`GzipDataError`) — never dropping rows (the shared
     corpus-triage contract)."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def decode(b: bytes) -> tuple:
+        members = parse_gzip(b)
+        return (len(members), sum(sum(m) for m in members))
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            ok, ec, nm, ps = [], [], [], []
-            for p in payloads:
-                try:
-                    if p is None:
-                        raise GzipStructureError("gzip: NULL payload")
-                    members = parse_gzip(bytes(p))
-                except GzipDataError:
-                    ok.append(False)
-                    ec.append("data")
-                    nm.append(None)
-                    ps.append(None)
-                except ValueError:
-                    ok.append(False)
-                    ec.append("structure")
-                    nm.append(None)
-                    ps.append(None)
-                else:
-                    ok.append(True)
-                    ec.append(None)
-                    nm.append(len(members))
-                    ps.append(sum(sum(m) for m in members))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(ok, pa.bool_()),
-                    pa.array(ec, pa.string()),
-                    pa.array(nm, pa.int32()),
-                    pa.array(ps, pa.int64()),
-                ],
-                names=[f.name for f in GZIP_QUARANTINE_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, GZIP_QUARANTINE_SCHEMA)
+    return _map_quarantined(
+        df,
+        GZIP_QUARANTINE_SCHEMA,
+        decode,
+        lambda e: "data" if isinstance(e, GzipDataError) else "structure",
+        id_col,
+        payload_col,
+    )
 
 
 # ----------------------------------------------------------------- zlib
@@ -2366,35 +2138,13 @@ def decode_zlib_stats_arrow(
 ) -> DataFrame:
     """REAL end-to-end zlib decode stats: the stream inflated and
     Adler-verified by :func:`parse_zlib`, exact statistics over the
-    decoded bytes. Zero-copy ``mapInArrow``, same hot path as the other
-    codecs."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    decoded bytes."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        blob = parse_zlib(bytes(p))
+        yield (doc_id, len(blob), *_byte_stats(blob))
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            tu, ps, mn, mx = [], [], [], []
-            for p in payloads:
-                blob = parse_zlib(bytes(p))
-                tu.append(len(blob))
-                ps.append(sum(blob))
-                mn.append(min(blob) if blob else None)
-                mx.append(max(blob) if blob else None)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(tu, pa.int64()),
-                    pa.array(ps, pa.int64()),
-                    pa.array(mn, pa.int32()),
-                    pa.array(mx, pa.int32()),
-                ],
-                names=[f.name for f in ZLIB_STATS_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, ZLIB_STATS_SCHEMA)
+    return _map_payloads(df, ZLIB_STATS_SCHEMA, rows, id_col, payload_col)
 
 
 ZLIB_QUARANTINE_SCHEMA = StructType(
@@ -2415,47 +2165,19 @@ def decode_zlib_quarantine_arrow(
     framing (:class:`ZlibStructureError`), ``data`` for payload-integrity
     failures (:class:`ZlibDataError`) — never dropping rows (the shared
     corpus-triage contract)."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def decode(b: bytes) -> tuple:
+        blob = parse_zlib(b)
+        return (len(blob), sum(blob))
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            ok, ec, tu, ps = [], [], [], []
-            for p in payloads:
-                try:
-                    if p is None:
-                        raise ZlibStructureError("zlib: NULL payload")
-                    blob = parse_zlib(bytes(p))
-                except ZlibDataError:
-                    ok.append(False)
-                    ec.append("data")
-                    tu.append(None)
-                    ps.append(None)
-                except ValueError:
-                    ok.append(False)
-                    ec.append("structure")
-                    tu.append(None)
-                    ps.append(None)
-                else:
-                    ok.append(True)
-                    ec.append(None)
-                    tu.append(len(blob))
-                    ps.append(sum(blob))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(ok, pa.bool_()),
-                    pa.array(ec, pa.string()),
-                    pa.array(tu, pa.int64()),
-                    pa.array(ps, pa.int64()),
-                ],
-                names=[f.name for f in ZLIB_QUARANTINE_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, ZLIB_QUARANTINE_SCHEMA)
+    return _map_quarantined(
+        df,
+        ZLIB_QUARANTINE_SCHEMA,
+        decode,
+        lambda e: "data" if isinstance(e, ZlibDataError) else "structure",
+        id_col,
+        payload_col,
+    )
 
 
 # ----------------------------------------------------------------- WARC
@@ -2573,45 +2295,28 @@ def index_tgz_members_arrow(
     (:func:`parse_tar`, per-header checksums verified) — the composed
     two-layer read a compressed-shard loader performs. One scan stage,
     zero shuffle of shard bytes."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        raw = bytes(p)
+        # A .tar.gz shard is a gzip STREAM: parallel compressors (pigz,
+        # bgzip) emit MANY members whose concatenated inflate is the one
+        # tar — RFC 1952 §2.2 ("a gzip file is a series of members");
+        # joining matches stdlib gzip.decompress, and a one-member unpack
+        # would reject pigz-style shards (pinned against foreign
+        # /usr/bin/gzip member bytes in test_operators.py).
+        archive = b"".join(parse_gzip(raw))
+        members = parse_tar(archive)
+        sizes = _webdataset_member_sizes(members)
+        yield (
+            doc_id,
+            len(members),
+            sizes.get("txt"),
+            sizes.get("cls"),
+            len(archive),
+            len(raw),
+        )
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            nm, tb, cb, ab, gb = [], [], [], [], []
-            for p in payloads:
-                raw = bytes(p)
-                # A .tar.gz shard is a gzip STREAM: parallel compressors
-                # (pigz, bgzip) emit MANY members whose concatenated
-                # inflate is the one tar — RFC 1952 §2.2 ("a gzip file
-                # is a series of members"); joining matches stdlib
-                # gzip.decompress. (r12: was a one-member unpack, which
-                # rejected pigz-style shards; pinned against foreign
-                # /usr/bin/gzip member bytes in test_operators.py.)
-                archive = b"".join(parse_gzip(raw))
-                members = parse_tar(archive)
-                sizes = _webdataset_member_sizes(members)
-                nm.append(len(members))
-                tb.append(sizes.get("txt"))
-                cb.append(sizes.get("cls"))
-                ab.append(len(archive))
-                gb.append(len(raw))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(nm, pa.int32()),
-                    pa.array(tb, pa.int64()),
-                    pa.array(cb, pa.int64()),
-                    pa.array(ab, pa.int64()),
-                    pa.array(gb, pa.int64()),
-                ],
-                names=[f.name for f in TGZ_INDEX_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, TGZ_INDEX_SCHEMA)
+    return _map_payloads(df, TGZ_INDEX_SCHEMA, rows, id_col, payload_col)
 
 
 _BZ2_MAX_TOTAL_UNCOMPRESSED = 1 << 26  # same bomb posture as gzip/PNG/ZIP
@@ -2777,7 +2482,7 @@ def _webdataset_member_sizes(members: list) -> dict:
     """WebDataset contract: one member PER EXTENSION per sample (".txt",
     ".cls", ...; the extension is the modality key). A duplicate key
     would silently shadow an earlier member's size, so reject the shard
-    instead (ADVICE r10). A name with no dot keys by its full name —
+    instead. A name with no dot keys by its full name —
     also unique-checked. Shared by the .tar.gz and .tar.bz2 indexers."""
     sizes: dict[str, int] = {}
     for name, size, _ in members:
@@ -2820,39 +2525,22 @@ def _index_multistream_tar_arrow(
     — the indexer reports stream count and exact UNCOMPRESSED geometry,
     which is what a shard loader provisions by. One scan stage, zero
     shuffle of shard bytes."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        streams = parse_fn(bytes(p))
+        archive = b"".join(streams)
+        members = parse_tar(archive)
+        sizes = _webdataset_member_sizes(members)
+        yield (
+            doc_id,
+            len(members),
+            len(streams),
+            sizes.get("txt"),
+            sizes.get("cls"),
+            len(archive),
+        )
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            nm, ns, tb, cb, ab = [], [], [], [], []
-            for p in payloads:
-                raw = bytes(p)
-                streams = parse_fn(raw)
-                archive = b"".join(streams)
-                members = parse_tar(archive)
-                sizes = _webdataset_member_sizes(members)
-                nm.append(len(members))
-                ns.append(len(streams))
-                tb.append(sizes.get("txt"))
-                cb.append(sizes.get("cls"))
-                ab.append(len(archive))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(nm, pa.int32()),
-                    pa.array(ns, pa.int32()),
-                    pa.array(tb, pa.int64()),
-                    pa.array(cb, pa.int64()),
-                    pa.array(ab, pa.int64()),
-                ],
-                names=[f.name for f in TBZ2_INDEX_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, TBZ2_INDEX_SCHEMA)
+    return _map_payloads(df, TBZ2_INDEX_SCHEMA, rows, id_col, payload_col)
 
 
 def index_tbz2_members_arrow(
@@ -2934,46 +2622,26 @@ def decode_warc_http_stats_arrow(
 ) -> DataFrame:
     """Raw-crawl read path: gunzip -> WARC split -> HTTP response parse,
     exact stats over the HTTP body bytes. One ``response`` record per
-    shard expected (the per-doc generator's contract). Zero-copy
-    ``mapInArrow``, same hot path as the other codecs."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    shard expected (the per-doc generator's contract)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            st, nh, bl, bs = [], [], [], []
-            for p in payloads:
-                recs = parse_warc(b"".join(parse_gzip(bytes(p))))
-                responses = [c for t, _, c in recs if t == "response"]
-                # Typed, count-bearing rejection instead of a bare tuple-
-                # unpack ValueError (ADVICE r10): the per-doc generator's
-                # contract is exactly one response record per shard.
-                if len(responses) != 1:
-                    raise HttpResponseError(
-                        f"warc/http: expected exactly 1 response record "
-                        f"per shard, found {len(responses)} among "
-                        f"{len(recs)} records"
-                    )
-                status, headers, body = parse_http_response(responses[0])
-                st.append(status)
-                nh.append(len(headers))
-                bl.append(len(body))
-                bs.append(sum(body))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(st, pa.int32()),
-                    pa.array(nh, pa.int32()),
-                    pa.array(bl, pa.int64()),
-                    pa.array(bs, pa.int64()),
-                ],
-                names=[f.name for f in WARC_HTTP_STATS_SCHEMA.fields],
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        recs = parse_warc(b"".join(parse_gzip(bytes(p))))
+        responses = [c for t, _, c in recs if t == "response"]
+        # Typed, count-bearing rejection instead of a bare tuple-unpack
+        # ValueError: the per-doc generator's contract is exactly one
+        # response record per shard.
+        if len(responses) != 1:
+            raise HttpResponseError(
+                f"warc/http: expected exactly 1 response record "
+                f"per shard, found {len(responses)} among "
+                f"{len(recs)} records"
             )
+        status, headers, body = parse_http_response(responses[0])
+        yield (doc_id, status, len(headers), len(body), sum(body))
 
-    return narrow.mapInArrow(batches, WARC_HTTP_STATS_SCHEMA)
+    return _map_payloads(
+        df, WARC_HTTP_STATS_SCHEMA, rows, id_col, payload_col
+    )
 
 
 WET_RECORDS_SCHEMA = StructType(
@@ -2997,40 +2665,24 @@ def extract_wet_records_arrow(
     urn:doc:N`` header, exactly the columns the corpus-ingest batch body
     consumes. Records without a well-formed urn are a hard error
     (reject-don't-misread; a WET extractor that silently drops records
-    under-counts the corpus). Zero-copy ``mapInArrow``; the 1->N
-    row fan-out stays inside the scan task."""
-    narrow = df.select(F.col(id_col).alias("shard_id"), F.col(payload_col))
+    under-counts the corpus). The 1->N row fan-out stays inside the scan
+    task."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(_shard_id: int, p: bytes) -> Iterator[tuple]:
+        for member in parse_gzip(bytes(p)):
+            for wtype, _clen, content, headers in parse_warc(
+                member, with_headers=True
+            ):
+                if wtype != "conversion":
+                    continue
+                rid = headers.get(b"warc-record-id", b"")
+                if not rid.startswith(b"urn:doc:"):
+                    raise WarcError(
+                        "warc: conversion record without a urn:doc record id"
+                    )
+                yield (int(rid[8:]), lang, content.decode("utf-8", "strict"))
 
-        for batch in it:
-            payloads = batch.column(1).to_pylist()
-            ids, texts = [], []
-            for p in payloads:
-                for member in parse_gzip(bytes(p)):
-                    for rec in parse_warc(member, with_headers=True):
-                        wtype, _clen, content, headers = rec
-                        if wtype != "conversion":
-                            continue
-                        rid = headers.get(b"warc-record-id", b"")
-                        if not rid.startswith(b"urn:doc:"):
-                            raise WarcError(
-                                "warc: conversion record without a "
-                                "urn:doc record id"
-                            )
-                        ids.append(int(rid[8:]))
-                        texts.append(content.decode("utf-8", "strict"))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array([lang] * len(ids), pa.string()),
-                    pa.array(texts, pa.string()),
-                ],
-                names=[f.name for f in WET_RECORDS_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, WET_RECORDS_SCHEMA)
+    return _map_payloads(df, WET_RECORDS_SCHEMA, rows, id_col, payload_col)
 
 
 WARC_STATS_SCHEMA = StructType(
@@ -3052,36 +2704,18 @@ def decode_warc_gz_stats_arrow(
     (:func:`parse_gzip`), parse the WARC records inside
     (:func:`parse_warc`), and emit exact per-shard statistics —
     member/record/type counts, content volume, and the byte sum of the
-    ``conversion`` (WET text) records. Zero-copy ``mapInArrow``."""
-    narrow = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    ``conversion`` (WET text) records."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pyarrow as pa
+    def rows(doc_id: int, p: bytes) -> Iterator[tuple]:
+        members = parse_gzip(bytes(p))
+        recs = [r for m in members for r in parse_warc(m)]
+        yield (
+            doc_id,
+            len(members),
+            len(recs),
+            sum(1 for t, _, _ in recs if t == "conversion"),
+            sum(c for _, c, _ in recs),
+            sum(sum(body) for t, _, body in recs if t == "conversion"),
+        )
 
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            nm, nr, nc, cb, ts = [], [], [], [], []
-            for p in payloads:
-                members = parse_gzip(bytes(p))
-                recs = [r for m in members for r in parse_warc(m)]
-                nm.append(len(members))
-                nr.append(len(recs))
-                nc.append(sum(1 for t, _, _ in recs if t == "conversion"))
-                cb.append(sum(c for _, c, _ in recs))
-                ts.append(
-                    sum(sum(body) for t, _, body in recs if t == "conversion")
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(nm, pa.int32()),
-                    pa.array(nr, pa.int32()),
-                    pa.array(nc, pa.int32()),
-                    pa.array(cb, pa.int64()),
-                    pa.array(ts, pa.int64()),
-                ],
-                names=[f.name for f in WARC_STATS_SCHEMA.fields],
-            )
-
-    return narrow.mapInArrow(batches, WARC_STATS_SCHEMA)
+    return _map_payloads(df, WARC_STATS_SCHEMA, rows, id_col, payload_col)

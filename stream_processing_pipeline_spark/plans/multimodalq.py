@@ -18,15 +18,40 @@ generative formulas without seeing a byte.
 
 from __future__ import annotations
 
+import bz2
+import lzma
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..operators.multimodal import (
+    _map_payloads,
     attach_binary_payload,
     chunk_offsets,
+    decode_gif_quarantine_arrow,
+    decode_gif_stats_arrow,
+    decode_gzip_quarantine_arrow,
+    decode_gzip_stats_arrow,
+    decode_jpeg_stats_arrow,
+    decode_media_arrow,
     decode_media_batched,
+    decode_png_quarantine_arrow,
+    decode_png_stats_arrow,
+    decode_ppm_stats_arrow,
+    decode_warc_gz_stats_arrow,
+    decode_warc_http_stats_arrow,
+    decode_wav_stats_arrow,
+    decode_zip_quarantine_arrow,
+    decode_zip_stats_arrow,
+    decode_zlib_quarantine_arrow,
+    decode_zlib_stats_arrow,
+    index_tar_members_arrow,
+    index_tbz2_members_arrow,
+    index_tgz_members_arrow,
+    index_txz_members_arrow,
     media_metadata,
+    resize_media_batched,
 )
 from .common import catalog
 from .registry import register
@@ -164,8 +189,6 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel resampling itself is the honestly-stubbed codec step; the stage
     chaining, batch shapes, and dimension arithmetic are real and verified
     value-for-value — swap ``resizer=`` for a real library at deploy."""
-    from ..operators.multimodal import resize_media_batched
-
     docs = attach_binary_payload(catalog(spark, sf_dir).documents, "text")
     return resize_media_batched(decode_media_batched(docs), max_dim=128)
 
@@ -192,13 +215,11 @@ def mm_decode_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     flavors against ONE oracle pins that the engine's two batch-Python hops
     are value-identical; mapInArrow is the preferred hot path for binary
     media at scale."""
-    from ..operators.multimodal import decode_media_arrow
-
     docs = attach_binary_payload(catalog(spark, sf_dir).documents, "text")
     return decode_media_arrow(docs, id_col="doc_id", payload_col="payload")
 
 
-# ------------------------------------------------ real PPM decode (VERDICT r5 #4)
+# ---------------------------------------------------------- real PPM decode
 #
 # The fixtures ship no media bytes, so the query SYNTHESIZES a real binary
 # PPM (P6) payload per document with JVM-side expressions — ASCII header
@@ -272,8 +293,6 @@ def mm_ppm_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumed within one task (never shuffled); the Python hop receives
     Arrow buffers zero-copy, the same hot path a real 100 TB image corpus
     would use with a library codec plugged into the identical signature."""
-    from ..operators.multimodal import decode_ppm_stats_arrow
-
     # id-only repartition before payload synthesis: see mm_wav_pcm_stats
     docs = (
         catalog(spark, sf_dir).documents.select("doc_id")
@@ -344,8 +363,6 @@ def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB each writer's window is an independent partition and shard
     files parallelize across writers; the manifest IS the dataset index
     that makes random access into sequential media storage possible."""
-    from ..operators.multimodal import attach_binary_payload
-
     docs = attach_binary_payload(catalog(spark, sf_dir).documents, "text")
     t = docs.select(
         "doc_id",
@@ -476,8 +493,6 @@ def mm_wav_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated and consumed within one task (never shuffled); the Arrow hop
     is the identical signature a real audio corpus would drive with a
     library codec."""
-    from ..operators.multimodal import decode_wav_stats_arrow
-
     # Repartition the 8-byte id column BEFORE synthesizing payloads: the
     # decode stage's parallelism then matches the cluster, not the input
     # file count, and payload bytes still never shuffle (measured: the 10x
@@ -584,8 +599,6 @@ def mm_tar_member_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     three content columns sets index parallelism at cluster width (the
     id-only trick of mm_wav_pcm_stats does not apply — the archive wraps
     real content, which must move once)."""
-    from ..operators.multimodal import index_tar_members_arrow
-
     # unlike the WAV/PPM payloads (pure functions of doc_id), the archive
     # wraps real content columns, so those columns shuffle ONCE in the
     # parallelism repartition — the minimum data motion any content-
@@ -600,8 +613,8 @@ def mm_tar_member_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------------- real PNG (RGB8) decode
 #
-# Fourth real codec, closing the "real web-corpus image format" gap
-# (VERDICT r6 #4): each document synthesizes a REAL non-interlaced 8-bit
+# Fourth real codec, closing the "real web-corpus image format" gap:
+# each document synthesizes a REAL non-interlaced 8-bit
 # RGB PNG from JVM built-ins alone — IHDR/IDAT/IEND chunk framing with
 # Spark's built-in crc32() for the chunk CRCs, a zlib stream using a
 # STORED deflate block (RFC 1951 §3.2.4 — the one deflate form
@@ -763,8 +776,6 @@ def mm_png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard decode error or a value-hash mismatch. Scale shape: identical to
     mm_ppm_decode_stats — id-only repartition before in-plan synthesis,
     payloads never shuffle, Arrow buffers move zero-copy."""
-    from ..operators.multimodal import decode_png_stats_arrow
-
     docs = _png_attach_payload(
         catalog(spark, sf_dir).documents.select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
@@ -812,8 +823,6 @@ def mm_png_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``parse_png`` are under the value hash. Scale shape: identical to
     mm_png_decode_stats (id-only repartition, zero-copy Arrow, payloads
     never shuffle)."""
-    from ..operators.multimodal import decode_png_quarantine_arrow
-
     docs = _png_attach_payload(
         catalog(spark, sf_dir).documents.select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
@@ -983,8 +992,6 @@ def mm_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a value-hash mismatch. The lossy general case is covered by
     encoder-twin round-trip tests. Scale shape: identical to the other
     codec queries (id-only repartition, payloads never shuffle)."""
-    from ..operators.multimodal import decode_jpeg_stats_arrow
-
     docs = (
         catalog(spark, sf_dir).documents.select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
@@ -1002,7 +1009,7 @@ def mm_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------- JPEG AC-path decode
 #
-# VERDICT r7 #2a: the DC-only constant-block family above never walks the
+# The DC-only constant-block family above never walks the
 # AC run-length decoder (ZRL/run/EOB), leaving that path covered only by
 # local encoder-twin tests. This family closes the gap with a SECOND
 # exactly-decodable pattern: one AC coefficient at zigzag index 39 —
@@ -1083,8 +1090,8 @@ _JPEG_AC_LUT = _jpeg_ac_entropy_lut()
           "real-codec", "ac-path"),
 )
 def mm_jpeg_ac_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END verified JPEG decode through the AC run-length path
-    (VERDICT r7 #2a). Same plan shape as :func:`mm_jpeg_decode_stats`
+    """END-TO-END verified JPEG decode through the AC run-length path.
+    Same plan shape as :func:`mm_jpeg_decode_stats`
     (shared header constants, 224-entry LUT array literal selected by
     the doc formula, zero-copy ``mapInArrow``), but every entropy
     stream drives ZRL + ZRL + a 6-zero run to a single (4,4) AC
@@ -1096,8 +1103,6 @@ def mm_jpeg_ac_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form oracle. See the family comment above for the exactness
     argument; the general lossy case stays with the encoder-twin
     round-trip tests."""
-    from ..operators.multimodal import decode_jpeg_stats_arrow
-
     docs = (
         catalog(spark, sf_dir).documents.select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
@@ -1202,8 +1207,6 @@ def mm_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     4096 cap) is covered by the encoder-twin round-trip tests. Scale
     shape: identical to the other codec queries (id-only repartition
     before payload synthesis; payload bytes never shuffle)."""
-    from ..operators.multimodal import decode_gif_stats_arrow
-
     docs = (
         catalog(spark, sf_dir).documents.select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
@@ -1220,7 +1223,7 @@ def mm_gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_gif_stats_arrow(docs)
 
 
-# --- dictionary-path GIF fixture (r9): exercises the width bump + real
+# --- dictionary-path GIF fixture: exercises the width bump + real
 # dictionary references under the value hash, not just the encoder-twin
 # fuzz. Stream layout (mcs=7, one 133-byte sub-block):
 #   Clear, then EXACTLY 127 per-doc literal root codes (width stays 8
@@ -1273,8 +1276,6 @@ def mm_gif_dict_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``q0 = b`` contributes via ``133*b``). Scale shape: identical to the
     other codec queries (id-only repartition before payload synthesis;
     payload bytes never shuffle)."""
-    from ..operators.multimodal import decode_gif_stats_arrow
-
     docs = (
         catalog(spark, sf_dir).documents.select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
@@ -1331,8 +1332,6 @@ def mm_gif_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     perturb another. Same fixed-offset ``overlay`` idiom as the PNG
     quarantine (the constant 408-byte header makes offsets 409/410 the
     length/Clear bytes for every doc)."""
-    from ..operators.multimodal import decode_gif_quarantine_arrow
-
     docs = (
         catalog(spark, sf_dir).documents.select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
@@ -1482,8 +1481,6 @@ def mm_zip_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and min/max/sum from the generative formulas in closed form. Scale
     shape: identical to the other codec queries (id-only repartition
     before payload synthesis; archive bytes never shuffle)."""
-    from ..operators.multimodal import decode_zip_stats_arrow
-
     p = _ZIP_PARTS
     stored_hex = (
         f"array_join(transform(sequence(0, {_ZIP_A_LEN - 1}), "
@@ -1549,8 +1546,6 @@ def mm_zip_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     must still decode to the exact closed-form stats. Typed-exception
     classification (ZipDataError vs ZipStructureError), not message
     matching — the GIF quarantine review lesson applied from birth."""
-    from ..operators.multimodal import decode_zip_quarantine_arrow
-
     p = _ZIP_PARTS
     stored_hex = (
         f"array_join(transform(sequence(0, {_ZIP_A_LEN - 1}), "
@@ -1670,8 +1665,6 @@ def mm_gzip_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches. Scale shape: identical to the other codec queries
     (id-only repartition before payload synthesis; bytes never
     shuffle)."""
-    from ..operators.multimodal import decode_gzip_stats_arrow
-
     p = _GZ_PARTS
     stored_hex = (
         f"array_join(transform(sequence(0, {_GZ_A_LEN - 1}), "
@@ -1730,8 +1723,6 @@ def mm_gzip_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncates the final member's trailer (the typed ``structure`` class),
     ``% 3 == 0`` stays intact and must decode to the exact closed-form
     stats. Typed-exception classification from birth."""
-    from ..operators.multimodal import decode_gzip_quarantine_arrow
-
     p = _GZ_PARTS
     stored_hex = (
         f"array_join(transform(sequence(0, {_GZ_A_LEN - 1}), "
@@ -1873,8 +1864,6 @@ def mm_zlib_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generative formulas in closed form. Scale shape: identical to
     the other codec queries (id-only repartition before synthesis; bytes
     never shuffle)."""
-    from ..operators.multimodal import decode_zlib_stats_arrow
-
     p = _ZL_PARTS
     docs = (
         catalog(spark, sf_dir).documents.select("doc_id")
@@ -1922,8 +1911,6 @@ def mm_zlib_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes (the typed ``structure`` class), ``% 3 == 0`` stays intact and
     must decode to the exact closed-form stats. Typed-exception
     classification from birth."""
-    from ..operators.multimodal import decode_zlib_quarantine_arrow
-
     docs = (
         catalog(spark, sf_dir).documents.select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
@@ -2022,8 +2009,6 @@ def mm_warc_wet_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the shape that reads WET shards: gunzip + record
     split are one zero-shuffle scan stage; only extracted text (or its
     derived stats) ever leaves the task."""
-    from ..operators.multimodal import decode_warc_gz_stats_arrow
-
     p = _WARC_PARTS
     text_bin = (
         f"encode(array_join(transform(sequence(0, {_WET_TEXT_LEN - 1}), "
@@ -2134,8 +2119,6 @@ def mm_warc_http_response_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query gates the composed three-layer framing end to end.
     Scale shape: identical to the WET query (id-only repartition before
     synthesis; shard bytes never shuffle)."""
-    from ..operators.multimodal import decode_warc_http_stats_arrow
-
     text_bin = (
         f"encode(array_join(transform(sequence(0, {_HTTP_BODY_LEN - 1}), "
         f"p -> char(97 + ((doc_id % 64) + p) % 26)), ''), 'utf-8')"
@@ -2201,7 +2184,7 @@ def _gzip_member_sql(m: str) -> str:
     header + 01/LEN/NLEN stored-block framing + CRC32 and ISIZE trailers,
     all JVM expressions. ONE builder feeds the single-member wrap and the
     multi-member (pigz-style) wrap — a hand-copied variant could drift the
-    two framings apart silently (the ADVICE r11 winnow-oracle lesson).
+    two framings apart silently.
     Callers must bound ``m`` at 65535 bytes (stored mode frames one block
     whose LEN field is 16 bits) — see the raise_error guard in
     :func:`_stored_gzip_guard`."""
@@ -2223,7 +2206,7 @@ def _stored_gzip_guard(df: DataFrame) -> DataFrame:
     explanatory in-plan ``raise_error`` — without the guard the
     ``_le_hex`` lpad would silently truncate the hex (and ``65535 - mlen``
     would go negative), surfacing as an opaque NLEN/inflate error deep in
-    ``parse_gzip`` (ADVICE r10)."""
+    ``parse_gzip``."""
     return df.select(
         "doc_id",
         F.expr(
@@ -2306,8 +2289,6 @@ def mm_webdataset_tgz_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     error, never a silent misread. Scale shape: the content columns move
     once in the parallelism repartition (they are the payload); decode
     never shuffles."""
-    from ..operators.multimodal import index_tgz_members_arrow
-
     docs = _stored_gzip_wrap(
         catalog(spark, sf_dir).documents.select("doc_id", "text", "lang")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
@@ -2336,13 +2317,13 @@ def mm_webdataset_tgz_index(spark: SparkSession, sf_dir: str) -> DataFrame:
           "pigz", "shard-packing", "arrow-udf", "real-codec"),
 )
 def mm_tgz_multimember_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIGZ-STYLE multi-member shard indexing (NEW round 12): the same
+    """PIGZ-STYLE multi-member shard indexing: the same
     per-doc ustar archive split across TWO stored-mode gzip members at a
     non-block-aligned byte offset — the framing parallel compressors
     (pigz, bgzip) emit, where a gzip file is RFC 1952's "series of
     members" and the concatenated inflate is the one tar.
     ``index_tgz_members_arrow`` joins the member list before the tar walk
-    (r12 fix — the one-member unpack it replaced rejected such shards);
+    (a one-member unpack would reject such shards);
     this registration keeps that convention under the external gate.
     The oracle rederives every size in closed form: two gzip wrappers add
     exactly 46 bytes (2 x (10-byte header + 5-byte stored framing +
@@ -2351,14 +2332,20 @@ def mm_tgz_multimember_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_operators.py. Scale shape: identical to
     mm_webdataset_tgz_index — content moves once in the parallelism
     repartition, decode never shuffles."""
-    from ..operators.multimodal import index_tgz_members_arrow
-
     docs = _stored_gzip_wrap_multimember(
         catalog(spark, sf_dir).documents.select("doc_id", "text", "lang")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", _tar_payload_col().alias("member"))
     )
     return index_tgz_members_arrow(docs)
+
+
+_SHARD_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("payload", BinaryType()),
+    ]
+)
 
 
 def _bz2_two_stream_wrap(df: DataFrame, cut: int = _TGZ_SPLIT_AT) -> DataFrame:
@@ -2370,32 +2357,12 @@ def _bz2_two_stream_wrap(df: DataFrame, cut: int = _TGZ_SPLIT_AT) -> DataFrame:
     stage is REAL compression through the stdlib codec (BWT + Huffman),
     running in the same Arrow-batched scan stage as the tar build —
     payload bytes never shuffle."""
-    import pyarrow as pa
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
+    def rows(doc_id: int, m: bytes):
+        m = bytes(m)
+        yield (doc_id, bz2.compress(m[:cut], 1) + bz2.compress(m[cut:], 1))
 
-    def batches(it):
-        import bz2
-
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            members = batch.column(1).to_pylist()
-            payloads = [
-                bz2.compress(bytes(m)[:cut], 1)
-                + bz2.compress(bytes(m)[cut:], 1)
-                for m in members
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()), pa.array(payloads, pa.binary())],
-                names=["doc_id", "payload"],
-            )
-
-    return df.select("doc_id", "member").mapInArrow(batches, out_schema)
+    return _map_payloads(df, _SHARD_SCHEMA, rows, payload_col="member")
 
 
 def _xz_two_stream_wrap(df: DataFrame, cut: int = _TGZ_SPLIT_AT) -> DataFrame:
@@ -2406,33 +2373,17 @@ def _xz_two_stream_wrap(df: DataFrame, cut: int = _TGZ_SPLIT_AT) -> DataFrame:
     the registered query keeps the padding walk under the external gate
     (stdlib one-shot ``lzma.decompress`` silently TRUNCATES at exactly
     this padding — the trap ``parse_xz`` exists to close)."""
-    import pyarrow as pa
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
+    def rows(doc_id: int, m: bytes):
+        m = bytes(m)
+        yield (
+            doc_id,
+            lzma.compress(m[:cut], preset=0)
+            + b"\x00" * 8
+            + lzma.compress(m[cut:], preset=0),
+        )
 
-    def batches(it):
-        import lzma
-
-        for batch in it:
-            ids = batch.column(0).to_pylist()
-            members = batch.column(1).to_pylist()
-            payloads = [
-                lzma.compress(bytes(m)[:cut], preset=0)
-                + b"\x00" * 8
-                + lzma.compress(bytes(m)[cut:], preset=0)
-                for m in members
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()), pa.array(payloads, pa.binary())],
-                names=["doc_id", "payload"],
-            )
-
-    return df.select("doc_id", "member").mapInArrow(batches, out_schema)
+    return _map_payloads(df, _SHARD_SCHEMA, rows, payload_col="member")
 
 
 @register(
@@ -2452,7 +2403,7 @@ def _xz_two_stream_wrap(df: DataFrame, cut: int = _TGZ_SPLIT_AT) -> DataFrame:
           "pbzip2", "shard-packing", "arrow-udf", "real-codec"),
 )
 def mm_tbz2_multistream_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PBZIP2-STYLE ``.tar.bz2`` shard indexing (NEW round 12): the
+    """PBZIP2-STYLE ``.tar.bz2`` shard indexing: the
     per-doc ustar archive (header checksums folded in-plan) split across
     TWO genuine bzip2 streams at a non-block-aligned offset — the
     series-of-streams framing parallel bzip2 compressors emit and the
@@ -2473,8 +2424,6 @@ def mm_tbz2_multistream_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the gzip shards — content moves once in the parallelism
     repartition; compress, decode and stats all stay in one scan
     stage."""
-    from ..operators.multimodal import index_tbz2_members_arrow
-
     docs = _bz2_two_stream_wrap(
         catalog(spark, sf_dir).documents.select("doc_id", "text", "lang")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
@@ -2500,8 +2449,8 @@ def mm_tbz2_multistream_index(spark: SparkSession, sf_dir: str) -> DataFrame:
           "stream-padding", "shard-packing", "arrow-udf", "real-codec"),
 )
 def mm_txz_multistream_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-stream ``.tar.xz`` shard indexing WITH inter-stream padding
-    (NEW round 12): the per-doc ustar archive split across TWO genuine
+    """Multi-stream ``.tar.xz`` shard indexing WITH inter-stream padding:
+    the per-doc ustar archive split across TWO genuine
     xz streams separated by an 8-byte null stream-padding word — the
     4-byte-aligned padding the xz spec (§2.2) allows between streams and
     the reference binary decodes through. The padding is the point:
@@ -2519,8 +2468,6 @@ def mm_txz_multistream_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_operators.py. Scale shape: identical to the other
     shard indexers — content moves once in the parallelism repartition;
     compress, decode and stats stay in one scan stage."""
-    from ..operators.multimodal import index_txz_members_arrow
-
     docs = _xz_two_stream_wrap(
         catalog(spark, sf_dir).documents.select("doc_id", "text", "lang")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")

@@ -848,6 +848,64 @@ def test_png_quarantine_survives_null_payload(spark):
     assert (row.ok, row.err_class, row.n_pixels) == (False, "malformed", None)
 
 
+def test_quarantine_decoders_classify_null_payload(spark):
+    """Every quarantine decoder keeps a NULL payload row and gives it its
+    codec's catch-all class: ``malformed`` for GIF (PNG is pinned above),
+    ``structure`` for the typed ZIP/gzip/zlib containers. Stats stay NULL."""
+    from stream_processing_pipeline_spark.operators import multimodal as mm
+
+    df = spark.createDataFrame([(1, None)], "doc_id long, payload binary")
+    for decode, err_class in (
+        (mm.decode_gif_quarantine_arrow, "malformed"),
+        (mm.decode_zip_quarantine_arrow, "structure"),
+        (mm.decode_gzip_quarantine_arrow, "structure"),
+        (mm.decode_zlib_quarantine_arrow, "structure"),
+    ):
+        (row,) = decode(df).collect()
+        assert tuple(row) == (1, False, err_class, None, None), decode.__name__
+
+
+def test_payload_decoders_accept_empty_input(spark):
+    """Every public ``*_arrow`` payload decoder maps a 0-row
+    ``(doc_id, payload)`` frame to 0 rows of exactly its declared schema.
+    The table must name each decoder the module exports, so a new one
+    cannot skip the check."""
+    from stream_processing_pipeline_spark.operators import multimodal as mm
+
+    declared = {
+        "decode_media_arrow": mm.DECODE_SCHEMA,
+        "decode_ppm_stats_arrow": mm.PPM_STATS_SCHEMA,
+        "decode_wav_stats_arrow": mm.WAV_STATS_SCHEMA,
+        "index_tar_members_arrow": mm.TAR_INDEX_SCHEMA,
+        "decode_png_stats_arrow": mm.PNG_STATS_SCHEMA,
+        "decode_png_quarantine_arrow": mm.PNG_QUARANTINE_SCHEMA,
+        "decode_jpeg_stats_arrow": mm.JPEG_STATS_SCHEMA,
+        "decode_gif_stats_arrow": mm.GIF_STATS_SCHEMA,
+        "decode_gif_quarantine_arrow": mm.GIF_QUARANTINE_SCHEMA,
+        "decode_zip_stats_arrow": mm.ZIP_STATS_SCHEMA,
+        "decode_zip_quarantine_arrow": mm.ZIP_QUARANTINE_SCHEMA,
+        "decode_gzip_stats_arrow": mm.GZIP_STATS_SCHEMA,
+        "decode_gzip_quarantine_arrow": mm.GZIP_QUARANTINE_SCHEMA,
+        "decode_zlib_stats_arrow": mm.ZLIB_STATS_SCHEMA,
+        "decode_zlib_quarantine_arrow": mm.ZLIB_QUARANTINE_SCHEMA,
+        "index_tgz_members_arrow": mm.TGZ_INDEX_SCHEMA,
+        "index_tbz2_members_arrow": mm.TBZ2_INDEX_SCHEMA,
+        "index_txz_members_arrow": mm.TXZ_INDEX_SCHEMA,
+        "decode_warc_http_stats_arrow": mm.WARC_HTTP_STATS_SCHEMA,
+        "extract_wet_records_arrow": mm.WET_RECORDS_SCHEMA,
+        "decode_warc_gz_stats_arrow": mm.WARC_STATS_SCHEMA,
+    }
+    public = {
+        n for n in vars(mm) if n.endswith("_arrow") and not n.startswith("_")
+    }
+    assert public == set(declared)
+    empty = spark.createDataFrame([], "doc_id long, payload binary")
+    for name, schema in declared.items():
+        out = getattr(mm, name)(empty)
+        assert out.schema == schema, name
+        assert out.collect() == [], name
+
+
 # ---------------------------------------------------------- baseline JPEG
 
 _JPEG_STD_DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
