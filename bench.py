@@ -6,7 +6,10 @@ Each query is written to the noop sink and timed wall-clock. Before the
 timed pass the same queries run once, untimed, over the sibling ``sf0.001``
 directory, so the one-time JVM costs of each kernel family (codegen, class
 loading) are not billed to whichever query uses it first; ``warmup_sec`` is
-that untimed region's wall time.
+that untimed region's wall time. ``codegen_compiles_warmup`` and
+``codegen_compiles_timed`` count the classes Spark generated and compiled
+in each region: a timed pass that recompiles what the pre-pass compiled has
+lost it from the generated-code cache.
 """
 
 from __future__ import annotations
@@ -63,6 +66,14 @@ def run_queries(spark, items, sf_dir: str) -> tuple[dict[str, float], dict[str, 
     return timings, failures
 
 
+def codegen_compiles(spark) -> int:
+    """Generated classes this JVM has compiled so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram counts one per compile;
+    a lookup the generated-code cache answers adds none)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -94,13 +105,16 @@ def main() -> None:
     # per fixture (footer/codec init), then a 32-task mapInPandas that
     # starts a Python worker per core, which the tiny pre-pass does not.
     t0 = time.perf_counter()
+    compiles0 = codegen_compiles(spark)
     _, warm_failures = run_queries(spark, items, warm_dir)
     for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         spark.read.parquet(p).limit(1).collect()
     spark.range(0, 64, 1, 32).mapInPandas(lambda it: it, "id long").count()
     warmup_sec = round(time.perf_counter() - t0, 3)
+    compiles1 = codegen_compiles(spark)
 
     timings, failures = run_queries(spark, items, sf_dir)
+    compiles2 = codegen_compiles(spark)
     failures = {**{f"warmup:{n}": e for n, e in warm_failures.items()}, **failures}
     total = round(sum(t for t in timings.values() if t >= 0), 3)
 
@@ -114,6 +128,8 @@ def main() -> None:
         "n_queries": len(timings),
         "failures": failures,
         "warmup_sec": warmup_sec,
+        "codegen_compiles_warmup": compiles1 - compiles0,
+        "codegen_compiles_timed": compiles2 - compiles1,
     }
     if not only:
         out.update(_bench_streaming(spark, sf_dir))

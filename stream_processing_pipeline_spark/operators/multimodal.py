@@ -51,16 +51,17 @@ __all__ = [
     "attach_binary_payload",
     "media_metadata",
     "chunk_offsets",
-    "decode_media_batched",
-    "resize_media_batched",
     "DECODE_SCHEMA",
-    "RESIZE_SCHEMA",
-    "PPM_STATS_SCHEMA",
     "fake_decoder",
     "parse_pnm",
     "ppm_decoder",
-    "decode_ppm_stats_arrow",
+    "decode_media_batched",
+    "RESIZE_SCHEMA",
     "thumbnail_dims",
+    "resize_media_batched",
+    "decode_media_arrow",
+    "PPM_STATS_SCHEMA",
+    "decode_ppm_stats_arrow",
     "WAV_STATS_SCHEMA",
     "parse_wav",
     "decode_wav_stats_arrow",
@@ -74,10 +75,60 @@ __all__ = [
     "decode_png_quarantine_arrow",
     "parse_jpeg",
     "jpeg_decoder",
-    "pil_decoder",
     "png_decoder",
+    "pil_decoder",
     "JPEG_STATS_SCHEMA",
     "decode_jpeg_stats_arrow",
+    "GifLzwError",
+    "parse_gif",
+    "gif_decoder",
+    "GIF_STATS_SCHEMA",
+    "decode_gif_stats_arrow",
+    "GIF_QUARANTINE_SCHEMA",
+    "decode_gif_quarantine_arrow",
+    "ZipStructureError",
+    "ZipDataError",
+    "parse_zip",
+    "ZIP_STATS_SCHEMA",
+    "decode_zip_stats_arrow",
+    "ZIP_QUARANTINE_SCHEMA",
+    "decode_zip_quarantine_arrow",
+    "GzipStructureError",
+    "GzipDataError",
+    "parse_gzip",
+    "GZIP_STATS_SCHEMA",
+    "decode_gzip_stats_arrow",
+    "GZIP_QUARANTINE_SCHEMA",
+    "decode_gzip_quarantine_arrow",
+    "ZlibStructureError",
+    "ZlibDataError",
+    "parse_zlib",
+    "ZLIB_STATS_SCHEMA",
+    "decode_zlib_stats_arrow",
+    "ZLIB_QUARANTINE_SCHEMA",
+    "decode_zlib_quarantine_arrow",
+    "WarcError",
+    "parse_warc",
+    "TGZ_INDEX_SCHEMA",
+    "index_tgz_members_arrow",
+    "Bz2StructureError",
+    "Bz2DataError",
+    "parse_bz2",
+    "XzStructureError",
+    "XzDataError",
+    "parse_xz",
+    "TBZ2_INDEX_SCHEMA",
+    "TXZ_INDEX_SCHEMA",
+    "index_tbz2_members_arrow",
+    "index_txz_members_arrow",
+    "HttpResponseError",
+    "parse_http_response",
+    "WARC_HTTP_STATS_SCHEMA",
+    "decode_warc_http_stats_arrow",
+    "WET_RECORDS_SCHEMA",
+    "extract_wet_records_arrow",
+    "WARC_STATS_SCHEMA",
+    "decode_warc_gz_stats_arrow",
 ]
 
 

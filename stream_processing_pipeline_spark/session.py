@@ -30,6 +30,20 @@ though tests run on ``local[32]``):
   rename-with-overwrite is atomic, where the FileSystem manager keeps the
   old file when it cannot overwrite (SCALING.md "Checkpoint I/O on a local
   master").
+- Spark's generated-code cache holds 2,000 classes
+  (``spark.sql.codegen.cache.maxEntries``; Spark's default is 100). It is
+  least-recently-used, and a streaming trigger plans and generates its
+  incremental query again, so a working set above the cache evicts each
+  class shortly before its next use and compiles it again. The six-query
+  topology needs about 100 classes per drain and the ``batch_queries``
+  benchmark's 8-query draw about 177 (4 cores, pyspark 4.1). At 100
+  entries a repeated draw compiled 173 classes per pass and a repeated
+  drain 49; at 2,000, 11 in three passes and 0. The whole registry needs
+  more than 2,000 (3,612 at sf0.001), and a full bench ended with 34 MB
+  more Metaspace and code cache than at 100 entries. It is a static conf:
+  like ``spark.driver.memory`` it takes effect only when the session
+  starts, and ``getOrCreate`` on a running session keeps the value it
+  started with (SCALING.md "Generated-code cache").
 - Frames a query builder persists for its lazy result have one owner:
   :func:`persist` records each one and :func:`release` unpersists them
   all. Every build through the query registry releases first, so a process
@@ -49,6 +63,7 @@ _CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+_CODEGEN_CACHE_ENTRIES = "2000"
 
 
 def default_parallelism() -> int:
@@ -103,6 +118,7 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.sql.codegen.cache.maxEntries", _CODEGEN_CACHE_ENTRIES)
     )
     if master:
         builder = builder.master(master)

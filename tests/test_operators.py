@@ -906,6 +906,30 @@ def test_payload_decoders_accept_empty_input(spark):
         assert out.collect() == [], name
 
 
+def test_multimodal_all_lists_every_public_name():
+    """``__all__`` names every public decoder, schema, parser and error
+    the module defines (``*_arrow``, ``*_SCHEMA`` and ``parse_*`` among
+    them), and nothing it does not define."""
+    import inspect
+
+    from stream_processing_pipeline_spark.operators import multimodal as mm
+
+    named = {
+        n
+        for n in vars(mm)
+        if not n.startswith("_")
+        and (n.endswith(("_arrow", "_SCHEMA")) or n.startswith("parse_"))
+    }
+    defined = {
+        n
+        for n, v in vars(mm).items()
+        if not n.startswith("_")
+        and (inspect.isfunction(v) or inspect.isclass(v))
+        and v.__module__ == mm.__name__
+    }
+    assert sorted(mm.__all__) == sorted(named | defined)
+
+
 # ---------------------------------------------------------- baseline JPEG
 
 _JPEG_STD_DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]

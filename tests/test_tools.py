@@ -3,7 +3,8 @@
 Each tool guards its ``main()``, so importing one runs nothing; a tool that
 still imports a removed helper or script fails here instead of at its next
 manual run. The merged plan dumper's per-query mode also runs end to end,
-and the A/B bench runs each side in that side's own checkout.
+and the A/B bench runs each side in that side's own checkout and prints
+each side's median compile count.
 """
 
 from __future__ import annotations
@@ -43,9 +44,11 @@ def test_tools_import_and_dump_plans_per_query(spark, tmp_path, monkeypatch):
     assert "Physical Plan" in text and "Scan parquet" in text
 
 
-def test_ab_subset_runs_each_side_in_its_own_checkout(tmp_path, monkeypatch):
+def test_ab_subset_runs_each_side_in_its_own_checkout(tmp_path, monkeypatch, capsys):
     # Spark's Python workers import the package from the working directory,
     # so a side run from the caller's directory would run the caller's code.
+    # Each side's median compile count prints next to its wall medians, and
+    # a side whose bench does not report compiles reads n/a.
     monkeypatch.syspath_prepend(TOOLS_DIR)
     ab_subset = importlib.import_module("ab_subset")
     b_dir = str(tmp_path / "baseline")
@@ -53,7 +56,10 @@ def test_ab_subset_runs_each_side_in_its_own_checkout(tmp_path, monkeypatch):
 
     def fake_run(cmd, **kwargs):
         runs.append((os.path.dirname(cmd[-1]), kwargs.get("cwd")))
-        line = json.dumps({"queries": {"q": 1.0}, "failures": {}})
+        doc = {"queries": {"q": 1.0}, "failures": {}}
+        if kwargs.get("cwd") == ab_subset.REPO:
+            doc.update(codegen_compiles_timed=len(runs), codegen_compiles_warmup=90)
+        line = json.dumps(doc)
         return subprocess.CompletedProcess(cmd, 0, stdout=line + "\n", stderr="")
 
     monkeypatch.setattr(ab_subset.subprocess, "run", fake_run)
@@ -61,3 +67,6 @@ def test_ab_subset_runs_each_side_in_its_own_checkout(tmp_path, monkeypatch):
     ab_subset.main()
     assert [bench_dir for bench_dir, _ in runs] == [ab_subset.REPO, b_dir] * 2
     assert all(cwd == bench_dir for bench_dir, cwd in runs)
+    rows = {line.split()[0]: line.split()[1:] for line in capsys.readouterr().out.splitlines()}
+    assert rows["codegen_compiles_timed"] == ["2", "n/a"]  # median of 1 and 3
+    assert rows["codegen_compiles_warmup"] == ["90", "n/a"]
