@@ -32,6 +32,7 @@ from stream_processing_pipeline_spark.plans import transforms
 from stream_processing_pipeline_spark.sources.memory import chunked_stream
 from stream_processing_pipeline_spark.sources.registry import TableCatalog
 from stream_processing_pipeline_spark.streaming import (
+    CallbackAlerter,
     LogAlerter,
     MemoryRowsSink,
     ParquetSink,
@@ -163,6 +164,95 @@ def test_alert_hook_fires(spark, tmp_path):
     assert alerter.sent and alerter.sent[0][0] == "abnormal_minutes"
     batch_count = transforms.abnormal_minutes(ev).count()
     assert len(sink.rows) == batch_count
+
+
+def _alert_counts(alerter) -> dict[int, int]:
+    """``{epoch: n}`` parsed from ``"{n} matching rows in epoch {epoch}"``."""
+    counts = {}
+    for _, body in alerter.sent:
+        n, *_, epoch = body.split()
+        counts[int(epoch)] = int(n)
+    return counts
+
+
+def test_alerted_batch_runs_only_the_sinks_jobs(spark, tmp_path):
+    """The alert's count rides the sink's write: an alerted batch runs as
+    many Spark jobs as the bare sink (a cached count pass made it 4 vs 1)."""
+    sc = spark.sparkContext
+    df = spark.range(0, 40_000, numPartitions=4).where(F.col("id") % 7 == 0)
+
+    def jobs(group, sink):
+        sc.setJobGroup(group, group)
+        try:
+            sink(df, 0)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    alerter = LogAlerter()
+    bare = jobs("bare_sink", ParquetSink(str(tmp_path / "bare")))
+    alerted = jobs(
+        "alerted_sink", with_alert(ParquetSink(str(tmp_path / "alerted")), alerter, "s")
+    )
+    assert bare >= 1
+    assert alerted == bare
+    assert _alert_counts(alerter) == {0: df.count()}
+
+
+def test_alert_counts_each_epoch_after_its_sink(spark, tmp_path):
+    """Each alert's n is its epoch's row count, sent after the sink has the
+    epoch; an empty epoch reaches the sink and sends no alert."""
+    ev = _events(spark)
+    stream = chunked_stream(spark, ev, str(tmp_path / "chunks"), n_chunks=3)
+    sink = MemoryRowsSink()
+    landed_before_alert = []
+    alerter = LogAlerter()
+
+    def send(subject, body):
+        landed_before_alert.append(int(body.split()[-1]) in dict(sink.batches))
+        alerter.send(subject, body)
+
+    wrapped = with_alert(sink, CallbackAlerter(send), "abnormal_minutes")
+    run_available_now(
+        transforms.abnormal_minutes(stream), wrapped, checkpoint=str(tmp_path / "ckpt")
+    )
+    wrapped(spark.range(5).where("id < 0"), 99)
+
+    rows = {epoch: len(batch) for epoch, batch in sink.batches}
+    assert rows[99] == 0
+    assert sum(rows.values()) > 0
+    assert _alert_counts(alerter) == {e: n for e, n in rows.items() if n}
+    assert landed_before_alert and all(landed_before_alert)
+
+
+def test_alert_on_sink_without_action_does_not_hang(spark):
+    """A sink that runs no Spark action leaves the observation empty; the
+    alert still fires with the right count, after a bounded wait."""
+    import threading
+    import time
+
+    df = spark.range(0, 1_000, numPartitions=2).where("id % 2 = 0")
+    alerter = LogAlerter()
+    seen = []
+    wrapped = with_alert(lambda bdf, eid: seen.append(eid), alerter, "s")
+    errors = []
+
+    def call():
+        try:
+            wrapped(df, 3)
+        except Exception as e:  # surfaced below, not lost in the thread
+            errors.append(e)
+
+    t0 = time.monotonic()
+    worker = threading.Thread(target=call, daemon=True)
+    worker.start()
+    worker.join(timeout=30)
+    assert not worker.is_alive(), "with_alert hung on a sink that ran no action"
+    assert not errors
+    assert time.monotonic() - t0 < 10
+    assert seen == [3]
+    assert _alert_counts(alerter) == {3: 500}
 
 
 def test_parquet_sink_roundtrip(spark, tmp_path):

@@ -3,8 +3,9 @@
 Each tool guards its ``main()``, so importing one runs nothing; a tool that
 still imports a removed helper or script fails here instead of at its next
 manual run. The merged plan dumper's per-query mode also runs end to end,
-and the A/B bench runs each side in that side's own checkout and prints
-each side's median compile count.
+and the A/B bench runs each side in that side's own checkout, prints
+each side's median compile count, and answers a call without arguments
+with its usage line.
 """
 
 from __future__ import annotations
@@ -70,3 +71,15 @@ def test_ab_subset_runs_each_side_in_its_own_checkout(tmp_path, monkeypatch, cap
     rows = {line.split()[0]: line.split()[1:] for line in capsys.readouterr().out.splitlines()}
     assert rows["codegen_compiles_timed"] == ["2", "n/a"]  # median of 1 and 3
     assert rows["codegen_compiles_warmup"] == ["90", "n/a"]
+
+
+def test_ab_subset_without_arguments_prints_usage():
+    out = subprocess.run(
+        [sys.executable, os.path.join(TOOLS_DIR, "ab_subset.py")],
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert out.returncode == 2
+    assert out.stderr.strip() == "usage: python tools/ab_subset.py q1[,q2...] [N_RUNS] [B_DIR]"
+    assert "Traceback" not in out.stderr

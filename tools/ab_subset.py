@@ -9,7 +9,7 @@ from the working directory, not from the bench's ``sys.path``.
 
 Usage::
 
-    python tools/ab_subset.py q1[,q2...] N_RUNS [B_DIR]
+    python tools/ab_subset.py q1[,q2...] [N_RUNS] [B_DIR]
 
 With no ``B_DIR`` it just runs side A N_RUNS times (median-of-N probe).
 Each run is a fresh JVM under the bench's own warm-up: the named queries
@@ -38,6 +38,7 @@ import time
 
 COMPILE_FIELDS = ("codegen_compiles_timed", "codegen_compiles_warmup")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+USAGE = "usage: python tools/ab_subset.py q1[,q2...] [N_RUNS] [B_DIR]"
 
 
 def run_once(bench_dir: str, queries: str) -> dict:
@@ -67,6 +68,9 @@ def run_once(bench_dir: str, queries: str) -> dict:
 
 
 def main() -> None:
+    if len(sys.argv) < 2:
+        print(USAGE, file=sys.stderr)
+        raise SystemExit(2)
     queries = sys.argv[1]
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     b_dir = sys.argv[3] if len(sys.argv) > 3 else None
